@@ -87,6 +87,16 @@ def get_spark(
     return spark
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's `spark.sql.shuffle.partitions`, or Spark's default of
+    200 when the value is not an integer (e.g. "auto" under some AQE
+    configs)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except (TypeError, ValueError):
+        return 200
+
+
 def liveness(spark: SparkSession) -> bool:
     """Liveness probe (reference /health, main.py:33-38): the session object
     exists and its context hasn't been stopped."""

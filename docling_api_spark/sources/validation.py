@@ -10,8 +10,14 @@ Reference semantics (`upload_validation.py:20-98`) re-expressed as dataflow:
 - rejected rows are ROUTED, not dropped — errors surface to the caller
   (error-as-column, F9).
 
-At scale the size predicates run on metadata/stat columns only, so
-validation never forces a content read.
+The size predicates read metadata columns only. An unbounded budget adds
+one per-row expression. A per-batch budget adds a window partitioned by
+batch. The global budget first sums the debits in one eager aggregate over
+the size column, a scan that never reads `content`. When the total fits
+the budget, no running sum can exceed it and validation stops there, with
+no window and no exchange (fits-budget path). Only an over-budget input
+pays for the running-sum window, whose exchange carries every column of
+the input, content included (window path).
 """
 
 from __future__ import annotations
@@ -19,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from docling_api_spark.session import shuffle_partitions
 
 MAX_SIZE_PER_FILE_MB = 100
 MAX_BATCH_SIZE_MB = 500
@@ -48,37 +56,47 @@ def with_size_validation(
     reference's read-loop debit (upload_validation.py:54-63). Oversized
     files are rejected outright and do not consume budget.
 
-    Scale posture (round-1 fix): the naive `partitionBy(lit(1))` running sum
-    is a single-partition global window — Catalyst folds the constant into
-    an empty partition spec and funnels the whole dataset through one task.
-    Instead:
+    Scale posture: the naive `partitionBy(lit(1))` running sum is a
+    single-partition global window. Catalyst folds the constant into an
+    empty partition spec and funnels the whole dataset, content included,
+    through one task. Instead:
     - `max_batch_bytes=None` (unbounded budget): no running sum at all;
     - `batch_col` given: per-batch window (batches are bounded);
-    - global budget over the whole dataset: a two-pass distributed prefix
-      sum — a column-pruned stats pass computes per-range partial sums,
-      the driver folds them into per-range offsets (one tiny collect), and
-      the main pass adds a *range-partitioned* window to the broadcast
-      offset. No single-partition stage anywhere.
+    - global budget, fits-budget path: one eager aggregate sums the
+      debits (only the size column is read). If the total is at most the
+      budget, every running sum is too, so only `file_too_large` can
+      fire and the plan gains no window, broadcast or exchange;
+    - global budget, window path (total over budget): a two-pass
+      distributed prefix sum. A column-pruned stats pass computes
+      per-range partial sums, the driver folds them into per-range
+      offsets (one tiny collect), and the main pass adds a
+      *range-partitioned* window to the broadcast offset. No
+      single-partition stage anywhere.
     """
     size = F.col(size_col)
     too_large = F.when(size > max_file_bytes, F.lit(FILE_TOO_LARGE))
+    size_only = too_large.otherwise(F.lit(None).cast("string"))
 
     if max_batch_bytes is None:
         # Unbounded budget: the running sum can never trip, skip it.
-        reason = too_large.otherwise(F.lit(None).cast("string"))
-        return df.withColumn("reject_reason", reason)
+        return df.withColumn("reject_reason", size_only)
 
     debit = F.when(size <= max_file_bytes, size).otherwise(F.lit(0))
 
-    if batch_col is not None:
+    if batch_col is None:
+        # Fits-budget path. Negative debits are clipped so that the total
+        # bounds every prefix sum.
+        total = df.select(F.sum(F.greatest(debit, F.lit(0)))).first()[0] or 0
+        if total <= max_batch_bytes:
+            return df.withColumn("reject_reason", size_only)
+        df, running = _with_global_running_sum(df, debit, order_col)
+    else:
         w = (
             W.partitionBy(batch_col)
             .orderBy(order_col)
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         )
         running = F.sum(debit).over(w)
-    else:
-        df, running = _with_global_running_sum(df, debit, order_col)
 
     reason = (
         too_large.when(running > max_batch_bytes, F.lit(BATCH_BUDGET_EXCEEDED))
@@ -112,10 +130,7 @@ def _with_global_running_sum(
     literal per range in the per-row predicate (round-3 advice).
     """
     spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except (TypeError, ValueError):  # e.g. "auto" under some AQE configs
-        n = 200
+    n = shuffle_partitions(spark)
     # Cap the range count: 256 ranges spread the window stage across 256
     # tasks while keeping the stats collect and broadcast row tiny; the
     # per-row cost is log2(256) = 8 probes regardless.
@@ -147,7 +162,9 @@ def _with_global_running_sum(
         # stays in bounds (ANSI mode throws on overflow) and `NULL <= key`
         # is NULL, which `when` treats as "don't advance".
         pow2 = 1
-        while pow2 < len(lows):
+        # pow2 - 1 is the largest index the probes reach; it must cover
+        # len(lows), or the last range merges into the one before it
+        while pow2 <= len(lows):
             pow2 *= 2
         padded = lows + [None] * (pow2 - len(lows))
         key_type = df.schema[order_col].dataType

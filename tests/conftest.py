@@ -33,6 +33,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def set_shuffle_partitions(spark):
+    """Setter for the session's runtime `spark.sql.shuffle.partitions`;
+    the value in force before the test is restored afterwards."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    yield lambda n: spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -189,3 +189,53 @@ def test_no_cartesian_and_bounded_single_partition(spark, sf_dir, name):
         f"{name}: {got} SinglePartition exchange(s), allowance {allowed} — "
         "a global sort/window may have crept in"
     )
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, descending through AQE wrappers."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        children = node.children()
+        kids = [children.apply(i) for i in range(children.size())]
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def _output_names(node):
+    output = node.output()
+    return {output.apply(i).name() for i in range(output.size())}
+
+
+@pytest.mark.parametrize("parts", [2, 4])
+def test_document_chain_has_no_funnel(spark, set_shuffle_partitions, tmp_path, parts):
+    """The stock sync-batch chain over a binaryFile directory (the registry
+    audit above never builds that source): read_documents ->
+    with_size_validation -> split_valid -> convert_documents. The content
+    column must cross exactly one exchange, the spread before decoding,
+    and no exchange may funnel the batch into one task."""
+    from docling_api_spark.pipeline.convert import convert_documents
+    from docling_api_spark.sources import read_documents, split_valid, with_size_validation
+
+    set_shuffle_partitions(parts)
+    for i in range(6):
+        (tmp_path / f"doc{i}.md").write_bytes(f"# Doc {i}\n\n".encode() + b"word " * 2000)
+        (tmp_path / f"page{i}.html").write_bytes(
+            f"<html><body><h1>Page {i}</h1><p>text</p></body></html>".encode()
+        )
+    accepted, _ = split_valid(with_size_validation(read_documents(spark, str(tmp_path))))
+    out = convert_documents(accepted)
+    rows = out.collect()
+    assert len(rows) == 12 and not [r for r in rows if r["error"]]
+    qe_plan = out._jdf.queryExecution().executedPlan()
+
+    assert "SinglePartition" not in qe_plan.toString(), qe_plan.toString()
+    exchanges = [
+        n for n in _plan_nodes(qe_plan) if "Exchange" in n.getClass().getSimpleName()
+    ]
+    with_content = [n for n in exchanges if "content" in _output_names(n)]
+    assert len(with_content) == 1, qe_plan.toString()

@@ -122,3 +122,76 @@ def test_q72_oracle_corpus_assumptions(oracle_con, sf_dir):
         "(plain single-spaced [a-z ] words, length == n_chars) — update "
         "the q72_conversion_pipeline oracle in operators/pipeline_queries.py"
     )
+
+
+def _docs_in_one_partition(spark, k):
+    formats = [
+        ("md", lambda i: f"# Doc {i}\n\nbody {i}\n".encode()),
+        ("csv", lambda i: f"name,value\nrow{i},{i}\n".encode()),
+        ("html", lambda i: f"<html><body><h1>H{i}</h1><p>p{i}</p></body></html>".encode()),
+        ("xyz", lambda i: b"unrecognized file content"),
+    ]
+    rows = []
+    for i in range(k):
+        ext, make = formats[i % len(formats)]
+        rows.append((f"/in/doc{i}.{ext}", make(i)))
+    # an RDD of one slice: unlike coalesce(1), the optimizer cannot fold it
+    # into the conversion's own repartition
+    one_slice = spark.sparkContext.parallelize(rows, 1)
+    return rows, spark.createDataFrame(one_slice, "path string, content binary")
+
+
+@pytest.mark.parametrize("k", [1, 3, 11])
+def test_batch_convert_spreads_documents(spark, set_shuffle_partitions, k):
+    from docling_api_spark.functions.formats import classify_format
+
+    parts = 4
+    set_shuffle_partitions(parts)
+    rows, docs = _docs_in_one_partition(spark, k)
+    assert docs.rdd.getNumPartitions() == 1
+    out = convert_documents(docs)
+
+    sizes = out.rdd.glom().map(len).collect()
+    assert len(sizes) == parts
+    assert sum(1 for n in sizes if n) == min(k, parts)
+
+    conv = LightweightConverter()
+    expected = []
+    for path, content in rows:
+        name = path.rsplit("/", 1)[-1]
+        r = conv.convert(name, content)
+        images = [(i["type"], i["filename"], i["image"]) for i in r["images"]]
+        expected.append(
+            (path, classify_format(content, name), r["filename"], r["markdown"], images, r["error"])
+        )
+    got = [
+        (
+            r["path"],
+            r["format"],
+            r["filename"],
+            r["markdown"],
+            [(i["type"], i["filename"], bytes(i["image"])) for i in r["images"]],
+            r["error"],
+        )
+        for r in out.collect()
+    ]
+    assert sorted(got, key=repr) == sorted(expected, key=repr)
+
+
+def test_conversion_stream_is_not_spread(spark, tmp_path):
+    from docling_api_spark.streaming.jobs import start_conversion_stream
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(3):
+        (landing / f"n{i}.md").write_bytes(b"# streamed")
+    q = start_conversion_stream(
+        spark, str(landing), str(tmp_path / "results"), str(tmp_path / "ckpt")
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(True)
+    finally:
+        q.stop()
+    assert "MapInPandas" in plan, plan
+    assert "RoundRobinPartitioning" not in plan, plan

@@ -3,12 +3,14 @@ tests/test_upload_limits.py onto the dataflow validators)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from docling_api_spark.sources.validation import (
     BATCH_BUDGET_EXCEEDED,
     FILE_TOO_LARGE,
     UNSUPPORTED_FORMAT,
+    _with_global_running_sum,
     split_valid,
     with_format_validation,
     with_size_validation,
@@ -21,6 +23,22 @@ def _df(spark, rows):
 
 def _reasons(df):
     return {r["path"]: r["reject_reason"] for r in df.collect()}
+
+
+def _sequential(rows, max_file, budget):
+    """The reference's read loop: debit each file in path order."""
+    out, running = {}, 0
+    for path, size, _ in sorted(rows):
+        if size > max_file:
+            out[path] = FILE_TOO_LARGE
+            continue
+        running += size
+        out[path] = BATCH_BUDGET_EXCEEDED if running > budget else None
+    return out
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_oversized_single_file_rejected(spark):
@@ -91,7 +109,7 @@ def test_unbounded_budget_skips_running_sum(spark):
     assert reasons["a.pdf"] is None
     assert reasons["b.pdf"] == FILE_TOO_LARGE
     # no running sum → no Window operator in the plan at all
-    assert "Window" not in out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in _executed_plan(out)
 
 
 def test_global_budget_prefix_sum_matches_sequential_debit(spark):
@@ -100,34 +118,33 @@ def test_global_budget_prefix_sum_matches_sequential_debit(spark):
     rows = [(f"f{i:04d}.pdf", (i * 37) % 900 + 10, "b1") for i in range(400)]
     df = _df(spark, rows).repartition(16)
     out = with_size_validation(df, max_file_bytes=800, max_batch_bytes=40_000)
-    reasons = _reasons(out)
-
-    running = 0
-    for path, size, _ in sorted(rows):
-        if size > 800:
-            assert reasons[path] == FILE_TOO_LARGE, path
-            continue
-        running += size
-        if running > 40_000:
-            assert reasons[path] == BATCH_BUDGET_EXCEEDED, path
-        else:
-            assert reasons[path] is None, path
+    assert _reasons(out) == _sequential(rows, 800, 40_000)
 
 
-def test_global_budget_no_single_partition_window(spark):
+@pytest.mark.parametrize("parts", [2, 3, 4, 8])
+def test_global_budget_no_single_partition_window(spark, set_shuffle_partitions, parts):
+    # The round-1 defect: partitionBy(lit(1)) folds to an empty partition
+    # spec and funnels everything into one task. The window is partitioned
+    # by the range bucket instead. 2, 3 and 8 partitions give 1, 2 and 7
+    # range minima; the power-of-two counts exercise the probe bound.
+    set_shuffle_partitions(parts)
     rows = [(f"f{i:04d}.pdf", 100, "b1") for i in range(200)]
     df = _df(spark, rows).repartition(8)
     out = with_size_validation(df, max_file_bytes=800, max_batch_bytes=5_000)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the round-1 defect: partitionBy(lit(1)) folded to an empty partition
-    # spec ("Window [sum(...) ... ORDER BY ...]" with no PARTITION BY),
-    # funnelling everything into one task. The fix partitions the window by
-    # the range bucket.
-    import re
+    assert _reasons(out) == _sequential(rows, 800, 5_000)
+    plan = _executed_plan(out)  # after collect: final and initial plans
+    assert "Window" in plan, plan
+    assert "SinglePartition" not in plan, plan
 
-    for m in re.finditer(r"Window \[[^\]]*windowspecdefinition\(([^)]*)\)", plan):
-        spec = m.group(1)
-        assert "_w" in spec or "bucket" in spec or spec.count(",") >= 2, plan
+
+@pytest.mark.parametrize("parts", [2, 3, 4, 5, 8, 9])
+def test_global_budget_every_range_gets_its_own_bucket(spark, set_shuffle_partitions, parts):
+    # Off-by-one guard: when the number of range minima is a power of two
+    # (parts 2, 3, 5, 9) the binary search must still reach the last range.
+    set_shuffle_partitions(parts)
+    df = _df(spark, [(f"f{i:04d}.pdf", 100, "b1") for i in range(200)])
+    bucketed, _ = _with_global_running_sum(df, F.col("length"), "path")
+    assert bucketed.select("_sv_idx").distinct().count() == parts
 
 
 def test_global_budget_bucket_assignment_is_binary_search(spark):
@@ -164,3 +181,53 @@ def test_global_budget_empty_and_boundary_cases(spark):
         _df(spark, rows).repartition(7), max_file_bytes=1000, max_batch_bytes=100
     )
     assert set(_reasons(out).values()) == {FILE_TOO_LARGE}
+
+
+def test_fits_budget_equals_sequential_debit(spark):
+    # total debit == budget: the fits-budget path accepts every debiting row
+    rows = [("a.pdf", 100, "b"), ("big.pdf", 5000, "b"), ("c.pdf", 150, "b")]
+    out = with_size_validation(_df(spark, rows), max_file_bytes=1000, max_batch_bytes=250)
+    assert _reasons(out) == _sequential(rows, 1000, 250)
+    assert _reasons(out) == {"a.pdf": None, "big.pdf": FILE_TOO_LARGE, "c.pdf": None}
+
+    # total == budget + 1: the window path rejects the first overflow row
+    rows = [("a.pdf", 100, "b"), ("big.pdf", 5000, "b"), ("c.pdf", 151, "b")]
+    out = with_size_validation(_df(spark, rows), max_file_bytes=1000, max_batch_bytes=250)
+    assert _reasons(out) == _sequential(rows, 1000, 250)
+    assert _reasons(out)["c.pdf"] == BATCH_BUDGET_EXCEEDED
+    assert "Window" in _executed_plan(out)
+
+
+def test_fits_budget_plan_has_no_window_or_exchange(spark):
+    rows = [(f"f{i:03d}.pdf", 10, "b") for i in range(50)]
+    out = with_size_validation(_df(spark, rows), max_file_bytes=100, max_batch_bytes=500)
+    assert set(_reasons(out).values()) == {None}
+    plan = _executed_plan(out)
+    assert "Window" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_fits_budget_aggregate_does_not_read_content(spark, tmp_path, monkeypatch):
+    from docling_api_spark.sources.binaryfiles import read_documents
+
+    for i in range(4):
+        (tmp_path / f"d{i}.md").write_bytes(b"# doc\n" * (i + 1))
+    docs = read_documents(spark, str(tmp_path))
+    # record the plan of every eager action run while validating
+    plans = []
+    first = type(docs).first
+
+    def recording_first(self):
+        plans.append(_executed_plan(self))
+        return first(self)
+
+    monkeypatch.setattr(type(docs), "first", recording_first)
+    out = with_size_validation(docs)
+    monkeypatch.undo()
+
+    assert len(plans) == 1, plans
+    (plan,) = plans
+    assert "ReadSchema: struct<length:bigint>" in plan, plan
+    assert "content" not in plan, plan
+    assert set(_reasons(out).values()) == {None}
+    assert "Window" not in _executed_plan(out)
