@@ -106,10 +106,8 @@ class LightweightConverter:
         # error column naming the OCR-capable backend.
         if fmt in ("pdf", "docx", "pptx"):
             from docling_api_spark.pipeline.textextract import (
+                PdfFile,
                 docx_extract,
-                pdf_extract_images,
-                pdf_is_encrypted,
-                pdf_to_markdown,
                 pptx_extract,
             )
 
@@ -129,10 +127,9 @@ class LightweightConverter:
             skipped_note = ""
             try:
                 if fmt == "pdf":
-                    from docling_api_spark.pipeline.textextract import (
-                        pdf_undecodable_image_streams,
-                    )
-
+                    # one stream index (and one decode per stream) serves
+                    # every step below — textextract.PdfFile
+                    pdf = PdfFile(content)
                     # Empty-user-password encrypted PDFs (the common
                     # "restrictions-only" case) decrypt in place since
                     # r15 (pipeline/pdfcrypt.py: RC4 / AES-128 / AES-256
@@ -141,14 +138,14 @@ class LightweightConverter:
                     # unsupported handler) leaves content untouched, so
                     # extraction finds nothing and the existing
                     # encrypted-PDF error path below names the cause.
-                    if pdf_is_encrypted(content):
+                    if pdf.is_encrypted():
                         from docling_api_spark.pipeline.pdfcrypt import (
                             pdf_decrypt,
                         )
 
                         decrypted = pdf_decrypt(content)
                         if decrypted is not None:
-                            content = decrypted
+                            pdf = PdfFile(decrypted)
 
                     # image streams in codecs the stdlib path cannot decode
                     # (JBIG2/JPX/Crypt/indirect-parms CCITT; the CCITT family decodes since
@@ -158,13 +155,12 @@ class LightweightConverter:
                     # no-content path, a placeholder-style comment on the
                     # success path. The q72 corpus has none, so graded
                     # output is untouched.
-                    skipped = pdf_undecodable_image_streams(content)
+                    skipped = pdf.undecodable_image_streams()
                     if skipped:
                         skipped_note = "; ".join(
                             f"{n} undecodable image stream(s) (codec {codec})"
                             for codec, n in sorted(skipped.items())
                         )
-                    text = pdf_to_markdown(content)
                     # images are attempted even with an empty text layer
                     # (ADVICE r12): an image-only PDF whose rasters ARE
                     # recoverable is content — same rule as the ooxml
@@ -173,7 +169,7 @@ class LightweightConverter:
                     # contract when its page scans (DCT-with-exotic
                     # parms, JBIG2, JPX) defeat the lightweight
                     # recovery filters; CCITT fax scans recover since r14.
-                    payloads = pdf_extract_images(content)
+                    text, payloads = pdf.markdown_and_images()
                     tail, images = splice_images(
                         "\n\n".join(sentinel for _ in payloads),
                         [DocElement(kind="picture", image=p) for p in payloads],
@@ -219,7 +215,7 @@ class LightweightConverter:
             # TRAILER dictionaries — the one place the key legally lives
             # — so a nothing-extracted-but-unencrypted PDF whose stream
             # bytes happen to contain the token keeps the OCR breadcrumb.
-            if fmt == "pdf" and pdf_is_encrypted(content):
+            if fmt == "pdf" and pdf.is_encrypted():
                 return _error_result(
                     _stem(filename),
                     "Encrypted (password-protected) PDF is not supported",
@@ -431,7 +427,8 @@ def convert_documents(
     decode on every task slot; the reference scales the same way, one
     document per worker. The scan's own splits do not balance decode
     (binaryFile packs the largest files into one split), and PDF decode
-    runs at about 1 MB/s per core, so one task per split, or AQE's 64 MB
+    runs at about 3.6 MB/s per core (`pipeline.mb_per_s.pdf` in the traced
+    convert-batch run, 4-vCPU VM), so one task per split, or AQE's 64 MB
     advisory partitions, would serialise it. `repartition(n)` is a
     by-number shuffle that AQE leaves uncoalesced. Measured with
     `perfbench/run.py --workload convert-batch` (8 large documents per

@@ -46,9 +46,11 @@ call touches one document's bytes, no Spark plan shape changes.
 
 from __future__ import annotations
 
+import bisect
 import re
 import zipfile
 import zlib
+from functools import cached_property
 from html.parser import HTMLParser
 from io import BytesIO
 from xml.etree import ElementTree as ET
@@ -57,6 +59,7 @@ __all__ = [
     "html_to_markdown",
     "pdf_to_markdown",
     "pdf_extract_images",
+    "PdfFile",
     "docx_to_markdown",
     "docx_extract",
     "pptx_to_markdown",
@@ -95,36 +98,31 @@ _TOKEN_RE = re.compile(
     re.VERBOSE | re.DOTALL,
 )
 _ESCAPES = {
-    b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f",
-    b"(": "(", b")": ")", b"\\": "\\",
+    b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
+    b"(": b"(", b")": b")", b"\\": b"\\",
 }
+# one backslash escape: a named escape, 1-3 octal digits, a line
+# continuation (the backslash and ONE EOL byte go), any other byte (only
+# the backslash goes), or end of string (the backslash stays)
+_ESCAPE_RE = re.compile(rb"\\([nrtbf()\\]|[0-7]{1,3}|[\r\n]|\Z)?")
+
+
+def _unescape(m: "re.Match[bytes]") -> bytes:
+    g = m.group(1)
+    if g is None or g in (b"\r", b"\n"):
+        return b""
+    if not g:
+        return b"\\"
+    if g in _ESCAPES:
+        return _ESCAPES[g]
+    return bytes([int(g, 8) & 0xFF])
 
 
 def _decode_pdf_string(raw: bytes) -> str:
     """Literal string body (parens stripped) → text, PDF escape rules."""
-    out: list[str] = []
-    i, n = 0, len(raw)
-    while i < n:
-        c = raw[i:i + 1]
-        if c == b"\\" and i + 1 < n:
-            nxt = raw[i + 1:i + 2]
-            if nxt in _ESCAPES:
-                out.append(_ESCAPES[nxt])
-                i += 2
-                continue
-            m = re.match(rb"[0-7]{1,3}", raw[i + 1:i + 4])
-            if m:
-                out.append(chr(int(m.group(), 8) & 0xFF))
-                i += 1 + len(m.group())
-                continue
-            if nxt in (b"\n", b"\r"):  # line continuation
-                i += 2
-                continue
-            i += 1
-            continue
-        out.append(c.decode("latin-1"))
-        i += 1
-    return "".join(out)
+    if b"\\" in raw:
+        raw = _ESCAPE_RE.sub(_unescape, raw)
+    return raw.decode("latin-1")
 
 
 def _decode_hex_string(raw: bytes) -> str:
@@ -139,6 +137,8 @@ def _mostly_printable(s: str) -> bool:
     Latin-1 fallback; suppress them instead of emitting mojibake."""
     if not s:
         return False
+    if s.isprintable():
+        return True
     good = sum(1 for ch in s if ch.isprintable() or ch in "\n\r\t ")
     return good / len(s) >= 0.8
 
@@ -569,14 +569,15 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes | None:
     """PDF LZWDecode: 9→12-bit variable-width codes, 256=clear-table,
     257=EOD, code width grows one code EARLY by default (/EarlyChange 1).
     Returns None on any inconsistent code — desynced streams are skipped,
-    never emitted as garbage."""
+    never emitted as garbage. Linear time: the bit buffer keeps only
+    the bits not yet consumed, so it never grows past 20 bits."""
     out = bytearray()
     table: dict[int, bytes] = {}
     next_code, width = 258, 9
     prev: bytes | None = None
     bitbuf = nbits = 0
     for byte in data:
-        bitbuf = (bitbuf << 8) | byte
+        bitbuf = ((bitbuf & ((1 << nbits) - 1)) << 8) | byte
         nbits += 8
         while nbits >= width:
             nbits -= width
@@ -1020,196 +1021,6 @@ _FILTER_CHAIN_RE = re.compile(
 )
 
 
-def pdf_undecodable_image_streams(content: bytes) -> dict[str, int]:
-    """Image XObject streams whose /Filter chain names a codec the
-    lightweight extractor cannot decode (JBIG2Decode, JPXDecode,
-    Crypt, indirect-DecodeParms CCITTFaxDecode, ...; the whole inline-
-    parms CCITT family decodes since r14), counted by the first
-    unsupported codec in
-    each chain. These streams are SKIPPED by `pdf_extract_images` /
-    `pdf_to_markdown` by design (correct-by-omission, never mis-scanned);
-    this counter lets the conversion layer say so in the result instead
-    of silently omitting a scan the user is looking for.
-
-    Streams that are the `/SMask N 0 R` target of another image are NOT
-    counted (ADVICE r13): they are alpha channels of pictures, not
-    pictures — a note claiming "N undecodable image stream(s)" for the
-    soft mask of a successfully extracted image would send the user
-    hunting for a scan that was never missing."""
-    import bisect
-
-    out: dict[str, int] = {}
-    masked = _smask_object_numbers(content)
-    obj_headers = (
-        [
-            (m.start(), int(m.group(1)))
-            for m in re.finditer(rb"(\d+)\s+\d+\s+obj\b", content)
-        ]
-        if masked
-        else []
-    )
-    for m in _STREAM_RE.finditer(content):
-        d = m.group("dict")
-        if not re.search(rb"/Subtype\s*/Image\b", d):
-            continue
-        if masked:
-            idx = bisect.bisect_left(obj_headers, (m.start(), -1)) - 1
-            if idx >= 0 and obj_headers[idx][1] in masked:
-                continue  # alpha OF another image, not a missing picture
-        fm = _FILTER_CHAIN_RE.search(d)
-        if fm is None:
-            continue
-        names = (
-            re.findall(rb"/(\w+)", fm.group("arr"))
-            if fm.group("arr") is not None
-            else [fm.group("one")]
-        )
-        for f in names:
-            name = f.decode("ascii", errors="replace")
-            if (
-                name == "CCITTFaxDecode"
-                and f == names[-1]
-                and _ccitt_parms(d, content) is not None
-            ):
-                # CCITT decodes since r14 (indirect parms resolve since
-                # r15) — but ONLY as the terminal filter (_decode_stream
-                # rejects mid-chain CCITT as malformed), so a mid-chain
-                # occurrence must keep its breadcrumb instead of being
-                # counted decodable yet silently dropped (ADVICE r14 #3)
-                continue
-            if name == "JBIG2Decode" and len(names) == 1:
-                # r15: generic-region JBIG2 decodes — separate those
-                # from symbol/text-coded streams with a header-only
-                # scan (no arithmetic decoding in the counter)
-                start = m.end()
-                send = content.find(b"endstream", start)
-                g = _jbig2_globals(d, content) if send >= 0 else _UNRESOLVED
-                if g is not _UNRESOLVED:
-                    from docling_api_spark.pipeline.jbig2 import (
-                        jbig2_headers_supported,
-                    )
-
-                    if jbig2_headers_supported(
-                        _strip_one_eol(content[start:send]), g
-                    ):
-                        continue
-            if name not in _SUPPORTED_FILTERS:
-                out[name] = out.get(name, 0) + 1
-                break
-    return out
-
-
-def pdf_is_encrypted(content: bytes) -> bool:
-    """True iff a TRAILER dictionary carries an /Encrypt key — the only
-    places the spec lets it live: a classic `trailer << ... >>` section
-    or an XRef-stream dict (/Type /XRef). Grepping the whole payload
-    (the pre-r14 check) gave a non-encrypted, nothing-extracted PDF the
-    wrong error text whenever its raw stream bytes merely contained the
-    token (VERDICT r13 what's-wrong #3); confining the sniff to trailer
-    dicts keeps the OCR breadcrumb for those. Dict scan bounded at 8 KiB
-    per trailer (real trailers are tens of bytes)."""
-
-    def dict_has_encrypt(pos: int) -> bool:
-        # balanced <<…>> scan from `pos` (at or before the opening <<)
-        window = content[pos : pos + 8192]
-        open_ = window.find(b"<<")
-        if open_ < 0:
-            return False
-        depth, i = 0, open_
-        while i < len(window) - 1:
-            pair = window[i : i + 2]
-            if pair == b"<<":
-                depth, i = depth + 1, i + 2
-            elif pair == b">>":
-                depth, i = depth - 1, i + 2
-                if depth == 0:
-                    return (
-                        re.search(
-                            rb"/Encrypt\s*(?:\d+\s+\d+\s+R|<<)",
-                            window[open_:i],
-                        )
-                        is not None
-                    )
-            else:
-                i += 1
-        return False
-
-    for m in re.finditer(rb"\btrailer\b", content):
-        if dict_has_encrypt(m.end()):
-            return True
-    for m in _STREAM_RE.finditer(content):
-        d = m.group("dict")
-        if re.search(rb"/Type\s*/XRef\b", d) and re.search(
-            rb"/Encrypt\s*(?:\d+\s+\d+\s+R|<<)", d
-        ):
-            return True
-    return False
-
-
-def pdf_to_markdown(content: bytes) -> str:
-    """Best-effort text layer of a PDF as markdown-ish plain text.
-
-    Returns "" when the file has no extractable text (image-only scans,
-    or text reachable only through composite fonts) — callers decide
-    whether that is an error (pipeline/convert.py reports it as one,
-    naming the docling backend for the OCR path).
-    """
-    # bounded slice: the spec allows junk only in the first 1024 bytes,
-    # and bytes.lstrip on the whole payload would copy a ~100 MB document
-    # just to check a 5-byte header
-    if not content[:1024].lstrip()[:5].startswith(b"%PDF-"):
-        raise ValueError("not a PDF: missing %PDF- header")
-    # two phases because ToUnicode CMap streams may follow the content
-    # streams whose codes they decode: collect text candidates + CMaps
-    # first, then replay the text operators with every CMap in hand
-    texts: list[bytes] = []
-    cmaps: list[dict[bytes, str]] = []
-    for m in _STREAM_RE.finditer(content):
-        # image XObjects are raster data, never text operators — skipping
-        # them here means image bytes (usually the bulk of the file) are
-        # inflated once by pdf_extract_images, not twice per document
-        if re.search(rb"/Subtype\s*/Image\b", m.group("dict")):
-            continue
-        start = m.end()
-        end = content.find(b"endstream", start)
-        if end < 0:
-            continue
-        # the spec's EOL before `endstream` is handled inside
-        # _decode_stream: decompressobj absorbs it as unused_data on the
-        # flate path (rstrip()ing instead ate REAL payload whenever the
-        # compressed bytes themselves ended in 0x0A/0x0D — ~1% of
-        # streams, the adler32 tail is uniform), hex/a85 ignore
-        # whitespace, and the unfiltered branch strips at most ONE EOL
-        res = _decode_stream(m.group("dict"), content[start:end], content)
-        if res is None or res[1] != "raw":
-            continue
-        data = res[0]
-        if b"beginbfchar" in data or b"beginbfrange" in data:
-            cm = _parse_tounicode(data)
-            if cm:
-                cmaps.append(cm)
-            # NO `continue`: a content stream whose visible TEXT mentions
-            # bfchar syntax (a spec excerpt, font-tooling docs) must keep
-            # its text layer — the BT check below decides independently,
-            # and a real CMap stream has no BT block to extract anyway
-        if b"BT" not in data:
-            continue
-        texts.append(data)
-    lines: list[str] = []
-    for data in texts:
-        # table-aware positional render first (r12, VERDICT r11 Next
-        # #7); a stream with no detected aligned grid — or unusable
-        # positions — keeps the legacy flush-per-Td extraction
-        # byte-for-byte (the q72 corpus oracle's closed form and every
-        # golden conversion depend on that)
-        rendered = _render_stream_with_tables(data, cmaps)
-        if rendered is not None:
-            lines.extend(rendered)
-        else:
-            lines.extend(_extract_text_ops(data, cmaps))
-    return "\n".join(lines)
-
-
 # ---------------------------------------------------------------------------
 # pdf embedded images (T5 for the lightweight backend)
 # ---------------------------------------------------------------------------
@@ -1495,131 +1306,17 @@ def _inline_images(data: bytes) -> list[bytes]:
 
 
 # Streams that can never carry page-content operators, recognized from
-# the dict alone so the inline-image scan (pdf_extract_images) skips them
-# UNDECODED: any /Subtype other than /Form (fonts /Type1C, metadata /XML,
-# embedded-file subtypes...), structural /Type streams (xref, object,
-# metadata, embedded-file), and font programs (/Length1 marks
-# FontFile/FontFile2, which have no /Subtype).
+# the dict alone so the inline-image scan never reads them (an
+# images-only pass, `PdfFile.images()`, skips them UNDECODED): any
+# /Subtype other than /Form (fonts /Type1C, metadata /XML, embedded-file
+# subtypes...), structural /Type streams (xref, object, metadata,
+# embedded-file), and font programs (/Length1 marks FontFile/FontFile2,
+# which have no /Subtype).
 _NON_CONTENT_STREAM_RE = re.compile(
     rb"/Subtype\s*/(?!Form\b)\w"
     rb"|/Type\s*/(?:XRef|ObjStm|Metadata|EmbeddedFile|Filespec)\b"
     rb"|/Length1\b"
 )
-
-
-def pdf_extract_images(content: bytes) -> list[bytes]:
-    """Embedded image payloads of a PDF, in byte order: PNG bytes for
-    Flate/raw Gray+RGB rasters, the untouched JPEG file for /DCTDecode
-    streams. Inline `BI..ID..EI` images inside content streams are
-    recovered too (r13), and an image whose `/SMask N 0 R` target is a
-    recoverable same-size gray raster comes back as Gray+Alpha/RGBA
-    (r13; an unmergeable mask degrades to the opaque parent, never drops
-    it). Total: anomalous streams are skipped, never raised."""
-    import bisect
-
-    out: list[bytes] = []
-    masked = _smask_object_numbers(content)
-    # the object table serves two resolvers: /SMask targets and
-    # indirect Indexed palette streams — build it iff either exists
-    need_objs = bool(masked) or _INDIRECT_INDEXED_RE.search(content) is not None
-    obj_headers = (
-        [
-            (m.start(), int(m.group(1)))
-            for m in re.finditer(rb"(\d+)\s+\d+\s+obj\b", content)
-        ]
-        if need_objs
-        else []
-    )
-
-    def objnum_of(pos: int) -> int | None:
-        # the nearest preceding `N 0 obj` header owns this stream
-        idx = bisect.bisect_left(obj_headers, (pos, -1)) - 1
-        return obj_headers[idx][1] if idx >= 0 else None
-
-    streams: list[tuple[int, bytes, int, int]] = []
-    for m in _STREAM_RE.finditer(content):
-        start = m.end()
-        end = content.find(b"endstream", start)
-        if end >= 0:
-            streams.append((m.start(), m.group("dict"), start, end))
-    by_obj = (
-        {objnum_of(pos): (d, s, e) for pos, d, s, e in streams}
-        if need_objs
-        else {}
-    )
-
-    def resolve_palette(objnum: int) -> bytes | None:
-        target = by_obj.get(objnum)
-        if target is None:
-            return None
-        md, ms, me = target
-        res = _decode_stream(md, content[ms:me], content)
-        return res[0] if res is not None and res[1] == "raw" else None
-
-    for pos, d, start, end in streams:
-        if not re.search(rb"/Subtype\s*/Image\b", d):
-            # content streams can carry INLINE images (BI..ID..EI);
-            # decode and scan them in document order. The byte-level
-            # "BI" pre-check keeps the common no-inline-image case to
-            # one cheap scan of the already-decoded payload. Streams
-            # that cannot BE page content — fonts, XMP metadata, xref/
-            # object streams, embedded files — are skipped undecoded
-            # (ADVICE r13: the scan was decompressing every font and
-            # ICC profile in the file just to look for two bytes).
-            # /Subtype /Form XObjects ARE content and stay scanned.
-            if _NON_CONTENT_STREAM_RE.search(d):
-                continue
-            res = _decode_stream(d, content[start:end], content)
-            if res is not None and res[1] == "raw" and b"BI" in res[0]:
-                out.extend(_inline_images(res[0]))
-            continue
-        if masked and objnum_of(pos) in masked:
-            continue  # soft masks are alpha OF another image, not pictures
-        # unsupported encodings (CCITT/JBIG2/JPX/…) and corrupt
-        # payloads come back None — skipped, never mis-rendered
-        res = _decode_stream(d, content[start:end], content)
-        if res is None:
-            continue
-        data, kind = res
-        if kind == "dct":
-            if data[:2] == b"\xff\xd8":  # JPEG SOI — sanity, not trust
-                out.append(data)
-            continue
-        im = _INDIRECT_INDEXED_RE.search(d)
-        if im is not None:
-            pal = resolve_palette(int(im.group("obj")))
-            if pal is None:
-                continue  # palette unreachable: skip, never guess colors
-            # normalize to the inline form; the appended entry is the one
-            # _INDEXED_CS_RE matches (the indirect original cannot)
-            d = (
-                d + b" /ColorSpace [/Indexed /" + im.group("base")
-                + b" " + im.group("hival")
-                + b" <" + pal.hex().encode() + b">]"
-            )
-        alpha: tuple[int, int, bytes] | None = None
-        sm = re.search(rb"/SMask\s+(\d+)\s+\d+\s+R", d)
-        if sm is not None and masked:
-            target = by_obj.get(int(sm.group(1)))
-            if target is not None:
-                md, ms, me = target
-                mres = _decode_stream(md, content[ms:me], content)
-                if mres is not None and mres[1] == "raw":
-                    msamp = _raster_samples(md, mres[0])
-                    # usable mask: single-channel; prefiltered rows are
-                    # unfiltered to plain samples first
-                    if msamp is not None and msamp[2] == 1:
-                        mw, mh, _, mraw, mpref = msamp
-                        if mpref:
-                            plain = _png_unfilter(mraw, mh, mw, 1)
-                            if plain is not None:
-                                mraw, mpref = plain, False
-                        if not mpref:
-                            alpha = (mw, mh, mraw)
-        png = _raster_to_png(d, data, alpha=alpha)
-        if png is not None:
-            out.append(png)
-    return out
 
 
 # Indexed palette entry: [/Indexed base hival lookup] with an INLINE
@@ -1979,6 +1676,385 @@ def _raster_samples_raw(
     if len(data) != expected:
         return None
     return width, height, channels, data, prefiltered
+
+
+# ---------------------------------------------------------------------------
+# pdf entry points: one stream index per document
+# ---------------------------------------------------------------------------
+#
+# Every pdf entry point walks the same stream objects. `PdfFile` finds
+# them with ONE `_STREAM_RE` pass and shares that index between the
+# encryption sniff, the codec breadcrumbs, the text layer and the
+# images. Its combined `markdown_and_images` pass (the one
+# LightweightConverter runs) also decodes each non-image stream ONCE and
+# hands the payload to both readers: the text layer keeps the streams
+# with a BT block, and the inline-image scan runs on the spot, so no
+# other decoded payload outlives its loop iteration. Image XObjects
+# are decoded once, by the image pass alone. The module-level pdf_*
+# functions keep their one-call-per-entry-point contract (tests and the
+# per-step replay call them one at a time); each builds its own index.
+
+
+class PdfFile:
+    """One PDF's raw bytes and its lazily built stream index."""
+
+    def __init__(self, content: bytes):
+        self.content = content
+
+    @cached_property
+    def streams(self) -> list[tuple[int, bytes, int, int, bool]]:
+        """Every stream object in byte order: (dict offset, dict bytes,
+        payload start, payload end or -1 when `endstream` is missing,
+        whether it is an image XObject)."""
+        content = self.content
+        out = []
+        for m in _STREAM_RE.finditer(content):
+            d, start = m.group("dict"), m.end()
+            out.append((
+                m.start(), d, start, content.find(b"endstream", start),
+                re.search(rb"/Subtype\s*/Image\b", d) is not None,
+            ))
+        return out
+
+    @cached_property
+    def _masked(self) -> set[int]:
+        return _smask_object_numbers(self.content)
+
+    @cached_property
+    def _obj_headers(self) -> list[tuple[int, int]]:
+        return [
+            (m.start(), int(m.group(1)))
+            for m in re.finditer(rb"(\d+)\s+\d+\s+obj\b", self.content)
+        ]
+
+    def _objnum_of(self, pos: int) -> int | None:
+        # the nearest preceding `N 0 obj` header owns this stream
+        idx = bisect.bisect_left(self._obj_headers, (pos, -1)) - 1
+        return self._obj_headers[idx][1] if idx >= 0 else None
+
+    @cached_property
+    def _by_obj(self) -> dict[int | None, tuple[bytes, int, int]]:
+        # stream objects by number: serves /SMask targets and indirect
+        # Indexed palette streams
+        return {
+            self._objnum_of(pos): (d, s, e)
+            for pos, d, s, e, _ in self.streams
+            if e >= 0
+        }
+
+    def is_encrypted(self) -> bool:
+        """True iff a TRAILER dictionary carries an /Encrypt key — the
+        only places the spec lets it live: a classic `trailer << ... >>`
+        section or an XRef-stream dict (/Type /XRef). Grepping the whole
+        payload (the pre-r14 check) gave a non-encrypted,
+        nothing-extracted PDF the wrong error text whenever its raw
+        stream bytes merely contained the token (VERDICT r13 what's-wrong
+        #3); confining the sniff to trailer dicts keeps the OCR
+        breadcrumb for those. Dict scan bounded at 8 KiB per trailer
+        (real trailers are tens of bytes)."""
+        content = self.content
+
+        def dict_has_encrypt(pos: int) -> bool:
+            # balanced <<…>> scan from `pos` (at or before the opening <<)
+            window = content[pos : pos + 8192]
+            open_ = window.find(b"<<")
+            if open_ < 0:
+                return False
+            depth, i = 0, open_
+            while i < len(window) - 1:
+                pair = window[i : i + 2]
+                if pair == b"<<":
+                    depth, i = depth + 1, i + 2
+                elif pair == b">>":
+                    depth, i = depth - 1, i + 2
+                    if depth == 0:
+                        return (
+                            re.search(
+                                rb"/Encrypt\s*(?:\d+\s+\d+\s+R|<<)",
+                                window[open_:i],
+                            )
+                            is not None
+                        )
+                else:
+                    i += 1
+            return False
+
+        for m in re.finditer(rb"\btrailer\b", content):
+            if dict_has_encrypt(m.end()):
+                return True
+        for _, d, _, _, _ in self.streams:
+            if re.search(rb"/Type\s*/XRef\b", d) and re.search(
+                rb"/Encrypt\s*(?:\d+\s+\d+\s+R|<<)", d
+            ):
+                return True
+        return False
+
+    def undecodable_image_streams(self) -> dict[str, int]:
+        """Image XObject streams whose /Filter chain names a codec the
+        lightweight extractor cannot decode (JBIG2Decode, JPXDecode,
+        Crypt, indirect-DecodeParms CCITTFaxDecode, ...; the whole
+        inline-parms CCITT family decodes since r14), counted by the
+        first unsupported codec in each chain. These streams are SKIPPED
+        by the image and text passes by design (correct-by-omission,
+        never mis-scanned); this counter lets the conversion layer say
+        so in the result instead of silently omitting a scan the user is
+        looking for.
+
+        Streams that are the `/SMask N 0 R` target of another image are
+        NOT counted (ADVICE r13): they are alpha channels of pictures,
+        not pictures — a note claiming "N undecodable image stream(s)"
+        for the soft mask of a successfully extracted image would send
+        the user hunting for a scan that was never missing."""
+        content = self.content
+        out: dict[str, int] = {}
+        masked = self._masked
+        for pos, d, start, send, is_image in self.streams:
+            if not is_image:
+                continue
+            if masked and self._objnum_of(pos) in masked:
+                continue  # alpha OF another image, not a missing picture
+            fm = _FILTER_CHAIN_RE.search(d)
+            if fm is None:
+                continue
+            names = (
+                re.findall(rb"/(\w+)", fm.group("arr"))
+                if fm.group("arr") is not None
+                else [fm.group("one")]
+            )
+            for f in names:
+                name = f.decode("ascii", errors="replace")
+                if (
+                    name == "CCITTFaxDecode"
+                    and f == names[-1]
+                    and _ccitt_parms(d, content) is not None
+                ):
+                    # CCITT decodes since r14 (indirect parms resolve
+                    # since r15) — but ONLY as the terminal filter
+                    # (_decode_stream rejects mid-chain CCITT as
+                    # malformed), so a mid-chain occurrence must keep its
+                    # breadcrumb instead of being counted decodable yet
+                    # silently dropped (ADVICE r14 #3)
+                    continue
+                if name == "JBIG2Decode" and len(names) == 1:
+                    # r15: generic-region JBIG2 decodes — separate those
+                    # from symbol/text-coded streams with a header-only
+                    # scan (no arithmetic decoding in the counter)
+                    g = (
+                        _jbig2_globals(d, content) if send >= 0
+                        else _UNRESOLVED
+                    )
+                    if g is not _UNRESOLVED:
+                        from docling_api_spark.pipeline.jbig2 import (
+                            jbig2_headers_supported,
+                        )
+
+                        if jbig2_headers_supported(
+                            _strip_one_eol(content[start:send]), g
+                        ):
+                            continue
+                if name not in _SUPPORTED_FILTERS:
+                    out[name] = out.get(name, 0) + 1
+                    break
+        return out
+
+    def _decode_non_image_streams(
+        self, text: bool, inline: bool
+    ) -> tuple[list[bytes], list[dict[bytes, str]], dict[int, list[bytes]]]:
+        """The one decode of each non-image stream, feeding the text
+        layer (`text`: the payloads with a BT block, plus every
+        ToUnicode CMap) and the inline-image scan (`inline`: recovered
+        images by stream index). Image XObjects are raster data, never
+        text operators or inline images: they are left to `images`,
+        which inflates them once."""
+        content = self.content
+        texts: list[bytes] = []
+        cmaps: list[dict[bytes, str]] = []
+        inline_images: dict[int, list[bytes]] = {}
+        for i, (_, d, start, end, is_image) in enumerate(self.streams):
+            if is_image or end < 0:
+                continue
+            # streams that cannot BE page content — fonts, XMP metadata,
+            # xref/object streams, embedded files — never hold inline
+            # images; an images-only pass skips them undecoded (ADVICE
+            # r13: the scan was decompressing every font and ICC profile
+            # in the file just to look for two bytes). /Subtype /Form
+            # XObjects ARE content and stay scanned.
+            page = inline and _NON_CONTENT_STREAM_RE.search(d) is None
+            if not text and not page:
+                continue
+            # the spec's EOL before `endstream` is handled inside
+            # _decode_stream: decompressobj absorbs it as unused_data on
+            # the flate path (rstrip()ing instead ate REAL payload
+            # whenever the compressed bytes themselves ended in 0x0A/0x0D
+            # — ~1% of streams, the adler32 tail is uniform), hex/a85
+            # ignore whitespace, and the unfiltered branch strips at most
+            # ONE EOL
+            res = _decode_stream(d, content[start:end], content)
+            if res is None or res[1] != "raw":
+                continue
+            data = res[0]
+            # inline BI..ID..EI images, scanned in document order; the
+            # byte-level "BI" pre-check keeps the common no-inline-image
+            # case to one cheap scan of the decoded payload
+            if page and b"BI" in data:
+                inline_images[i] = _inline_images(data)
+            if not text:
+                continue
+            if b"beginbfchar" in data or b"beginbfrange" in data:
+                cm = _parse_tounicode(data)
+                if cm:
+                    cmaps.append(cm)
+                # NO `continue`: a content stream whose visible TEXT
+                # mentions bfchar syntax (a spec excerpt, font-tooling
+                # docs) must keep its text layer — the BT check below
+                # decides independently, and a real CMap stream has no
+                # BT block to extract anyway
+            if b"BT" in data:
+                texts.append(data)
+        return texts, cmaps, inline_images
+
+    def _text_layer(self, inline: bool) -> tuple[str, dict[int, list[bytes]]]:
+        # bounded slice: the spec allows junk only in the first 1024
+        # bytes, and bytes.lstrip on the whole payload would copy a
+        # ~100 MB document just to check a 5-byte header
+        if not self.content[:1024].lstrip()[:5].startswith(b"%PDF-"):
+            raise ValueError("not a PDF: missing %PDF- header")
+        # two phases because ToUnicode CMap streams may follow the
+        # content streams whose codes they decode: collect text
+        # candidates + CMaps first, then replay the text operators with
+        # every CMap in hand
+        texts, cmaps, inline_images = self._decode_non_image_streams(
+            text=True, inline=inline
+        )
+        lines: list[str] = []
+        for data in texts:
+            # table-aware positional render first (r12, VERDICT r11 Next
+            # #7); a stream with no detected aligned grid — or unusable
+            # positions — keeps the legacy flush-per-Td extraction
+            # byte-for-byte (the q72 corpus oracle's closed form and
+            # every golden conversion depend on that)
+            rendered = _render_stream_with_tables(data, cmaps)
+            if rendered is not None:
+                lines.extend(rendered)
+            else:
+                lines.extend(_extract_text_ops(data, cmaps))
+        return "\n".join(lines), inline_images
+
+    def markdown(self) -> str:
+        """Best-effort text layer of the PDF as markdown-ish plain text.
+
+        Returns "" when the file has no extractable text (image-only
+        scans, or text reachable only through composite fonts) — callers
+        decide whether that is an error (pipeline/convert.py reports it
+        as one, naming the docling backend for the OCR path).
+        """
+        return self._text_layer(inline=False)[0]
+
+    def images(self) -> list[bytes]:
+        """Embedded image payloads of the PDF, in byte order: PNG bytes
+        for Flate/raw Gray+RGB rasters, the untouched JPEG file for
+        /DCTDecode streams. Inline `BI..ID..EI` images inside content
+        streams are recovered too (r13), and an image whose
+        `/SMask N 0 R` target is a recoverable same-size gray raster
+        comes back as Gray+Alpha/RGBA (r13; an unmergeable mask degrades
+        to the opaque parent, never drops it). Total: anomalous streams
+        are skipped, never raised."""
+        return self._images(
+            self._decode_non_image_streams(text=False, inline=True)[2]
+        )
+
+    def _images(self, inline_images: dict[int, list[bytes]]) -> list[bytes]:
+        # `inline_images`: the inline-image scan's results by stream index
+        content = self.content
+        out: list[bytes] = []
+        masked = self._masked
+
+        def resolve_palette(objnum: int) -> bytes | None:
+            target = self._by_obj.get(objnum)
+            if target is None:
+                return None
+            md, ms, me = target
+            res = _decode_stream(md, content[ms:me], content)
+            return res[0] if res is not None and res[1] == "raw" else None
+
+        for i, (pos, d, start, end, is_image) in enumerate(self.streams):
+            if end < 0:
+                continue
+            if not is_image:
+                out.extend(inline_images.get(i, ()))
+                continue
+            if masked and self._objnum_of(pos) in masked:
+                continue  # soft masks are alpha OF another image, not pictures
+            # unsupported encodings (CCITT/JBIG2/JPX/…) and corrupt
+            # payloads come back None — skipped, never mis-rendered
+            res = _decode_stream(d, content[start:end], content)
+            if res is None:
+                continue
+            data, kind = res
+            if kind == "dct":
+                if data[:2] == b"\xff\xd8":  # JPEG SOI — sanity, not trust
+                    out.append(data)
+                continue
+            im = _INDIRECT_INDEXED_RE.search(d)
+            if im is not None:
+                pal = resolve_palette(int(im.group("obj")))
+                if pal is None:
+                    continue  # palette unreachable: skip, never guess colors
+                # normalize to the inline form; the appended entry is the
+                # one _INDEXED_CS_RE matches (the indirect original cannot)
+                d = (
+                    d + b" /ColorSpace [/Indexed /" + im.group("base")
+                    + b" " + im.group("hival")
+                    + b" <" + pal.hex().encode() + b">]"
+                )
+            alpha: tuple[int, int, bytes] | None = None
+            sm = re.search(rb"/SMask\s+(\d+)\s+\d+\s+R", d)
+            if sm is not None and masked:
+                target = self._by_obj.get(int(sm.group(1)))
+                if target is not None:
+                    md, ms, me = target
+                    mres = _decode_stream(md, content[ms:me], content)
+                    if mres is not None and mres[1] == "raw":
+                        msamp = _raster_samples(md, mres[0])
+                        # usable mask: single-channel; prefiltered rows
+                        # are unfiltered to plain samples first
+                        if msamp is not None and msamp[2] == 1:
+                            mw, mh, _, mraw, mpref = msamp
+                            if mpref:
+                                plain = _png_unfilter(mraw, mh, mw, 1)
+                                if plain is not None:
+                                    mraw, mpref = plain, False
+                            if not mpref:
+                                alpha = (mw, mh, mraw)
+            png = _raster_to_png(d, data, alpha=alpha)
+            if png is not None:
+                out.append(png)
+        return out
+
+    def markdown_and_images(self) -> tuple[str, list[bytes]]:
+        """`markdown()` and `images()` from one decode of each stream."""
+        text, inline_images = self._text_layer(inline=True)
+        return text, self._images(inline_images)
+
+
+def pdf_is_encrypted(content: bytes) -> bool:
+    """`PdfFile.is_encrypted` of one raw file."""
+    return PdfFile(content).is_encrypted()
+
+
+def pdf_undecodable_image_streams(content: bytes) -> dict[str, int]:
+    """`PdfFile.undecodable_image_streams` of one raw file."""
+    return PdfFile(content).undecodable_image_streams()
+
+
+def pdf_to_markdown(content: bytes) -> str:
+    """`PdfFile.markdown` of one raw file."""
+    return PdfFile(content).markdown()
+
+
+def pdf_extract_images(content: bytes) -> list[bytes]:
+    """`PdfFile.images` of one raw file."""
+    return PdfFile(content).images()
 
 
 # ---------------------------------------------------------------------------

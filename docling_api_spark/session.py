@@ -23,6 +23,21 @@ from pyspark.sql import SparkSession
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
+_MAX_DRIVER_MEM_GIB = 24
+
+
+def default_driver_memory() -> str:
+    """`spark.driver.memory` when SPARK_GRAFT_DRIVER_MEM is unset: half the
+    machine's physical memory in whole GiB, at least 1g and at most 24g.
+    The other half stays with the Python workers that decode documents
+    and with the OS. Where physical memory cannot be read, 24g."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return f"{_MAX_DRIVER_MEM_GIB}g"
+    return f"{max(1, min(_MAX_DRIVER_MEM_GIB, phys // 2**30 // 2))}g"
+
+
 def get_spark(
     app_name: str = "docling-api-spark",
     master: str | None = None,
@@ -73,7 +88,10 @@ def get_spark(
         # Spark 3.x / DuckDB, not Spark 4's inferred TIMESTAMP_NTZ
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # executor thread caps carried over from the reference's tuning
         # (docker-compose.yml:16-18): avoid oversubscription in native libs

@@ -868,3 +868,86 @@ def test_inline_image_framing_never_misextracts(r):
         # inside its encoded bytes truncates the slice, the decode/length
         # check rejects it) — everything else is framing-safe
         assert filt == b"RL"
+
+
+# ---------------------------------------------------------------------------
+# textextract: fast paths agree with the straightforward definitions
+# ---------------------------------------------------------------------------
+_ESCAPES_REF = {
+    b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f",
+    b"(": "(", b")": ")", b"\\": "\\",
+}
+
+
+def _decode_pdf_string_ref(raw: bytes) -> str:
+    """Byte-by-byte PDF literal-string decoding (PDF 7.3.4.2)."""
+    import re
+
+    out: list[str] = []
+    i, n = 0, len(raw)
+    while i < n:
+        c = raw[i:i + 1]
+        if c == b"\\" and i + 1 < n:
+            nxt = raw[i + 1:i + 2]
+            if nxt in _ESCAPES_REF:
+                out.append(_ESCAPES_REF[nxt])
+                i += 2
+                continue
+            m = re.match(rb"[0-7]{1,3}", raw[i + 1:i + 4])
+            if m:
+                out.append(chr(int(m.group(), 8) & 0xFF))
+                i += 1 + len(m.group())
+                continue
+            if nxt in (b"\n", b"\r"):  # line continuation
+                i += 2
+                continue
+            i += 1
+            continue
+        out.append(c.decode("latin-1"))
+        i += 1
+    return "".join(out)
+
+
+def _mostly_printable_ref(s: str) -> bool:
+    if not s:
+        return False
+    good = sum(1 for ch in s if ch.isprintable() or ch in "\n\r\t ")
+    return good / len(s) >= 0.8
+
+
+# escapes, octal runs (with the non-octal 8/9), EOLs and parens, mixed
+# with arbitrary bytes
+_ESCAPE_HEAVY = st.lists(
+    st.one_of(
+        st.sampled_from(
+            [b"\\", b"\\", b"\\", b"0", b"3", b"7", b"8", b"\r", b"\n",
+             b"\r\n", b"(", b")", b"n", b"t", b"b"]
+        ),
+        st.binary(min_size=1, max_size=2),
+    ),
+    max_size=40,
+).map(b"".join)
+
+
+@given(raw=_ESCAPE_HEAVY)
+@settings(max_examples=1000, deadline=None)
+def test_decode_pdf_string_matches_bytewise_reference(raw):
+    from docling_api_spark.pipeline.textextract import _decode_pdf_string
+
+    assert _decode_pdf_string(raw) == _decode_pdf_string_ref(raw)
+
+
+@given(
+    s=st.text(
+        alphabet=st.one_of(
+            st.sampled_from(list("\x00\x01\x07\x1b\x7f\x85\xa0\n\r\t ab")),
+            st.characters(),
+        ),
+        max_size=30,
+    )
+)
+@settings(max_examples=1000, deadline=None)
+def test_mostly_printable_matches_counting_reference(s):
+    from docling_api_spark.pipeline.textextract import _mostly_printable
+
+    assert _mostly_printable(s) == _mostly_printable_ref(s)

@@ -1297,7 +1297,8 @@ def test_pdf_unsupported_filter_stream_skipped_entirely():
 
 def lzw_encode(data: bytes, early: int = 1) -> bytes:
     """Reference LZW encoder for round-trip tests (PDF/TIFF variant:
-    9-12 bit codes, 256=clear, 257=EOD, early width change)."""
+    9-12 bit codes, 256=clear, 257=EOD, early width change). A full
+    4096-entry table is cleared, so inputs of any length encode."""
     table = {bytes([i]): i for i in range(256)}
     next_code, width = 258, 9
     out = bytearray()
@@ -1310,6 +1311,7 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
         while nbits >= 8:
             nbits -= 8
             out.append((bitbuf >> nbits) & 0xFF)
+        bitbuf &= (1 << nbits) - 1
 
     emit(256)
     w = b""
@@ -1329,6 +1331,11 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
         # boundary)
         if next_code + early >= (1 << width) + 1 and width < 12:
             width += 1
+        if next_code == 4096:
+            # sent at width 12, which the decoder has reached too
+            emit(256)
+            table = {bytes([i]): i for i in range(256)}
+            next_code, width = 258, 9
         w = c
     if w:
         emit(table[w])
@@ -1357,6 +1364,33 @@ def test_lzw_decoder_long_input_crosses_width_boundaries():
     payload = bytes((i * 7 + (i >> 3)) & 0xFF for i in range(8192))
     for early in (1, 0):
         assert _lzw_decode(lzw_encode(payload, early), early) == payload
+
+
+def test_lzw_decoder_is_linear_time():
+    """256 KB of text decodes in well under 5 s (the decoder's bit buffer
+    used to grow with the stream, making every shift O(n): ~15 s here).
+    The input refills the table many times, so the round trip also
+    checks that no code is lost at the 9->10->11->12-bit width changes
+    or at the clears."""
+    import random
+    import time
+
+    from docling_api_spark.pipeline.textextract import _lzw_decode
+
+    rng = random.Random(1)
+    vocab = [
+        "".join(rng.choices("abcdefghijklmnopqrstuvwxyz", k=rng.randint(2, 9)))
+        for _ in range(2000)
+    ]
+    payload = " ".join(rng.choices(vocab, k=60_000)).encode()[: 256 * 1024]
+    assert len(payload) == 256 * 1024
+    for early in (1, 0):
+        enc = lzw_encode(payload, early)
+        t0 = time.perf_counter()
+        dec = _lzw_decode(enc, early)
+        elapsed = time.perf_counter() - t0
+        assert dec == payload
+        assert elapsed < 5.0, f"256 KB LZW decode took {elapsed:.1f} s"
 
 
 def test_lzw_decoder_desync_returns_none_not_garbage():
@@ -2525,6 +2559,47 @@ def test_pdf_inline_image_spliced_through_converter():
     assert decode_png(res["images"][0]["image"]) == (2, 2, 1, pixels)
 
 
+def test_converter_decodes_each_stream_once(monkeypatch):
+    """One conversion decodes each stream at most once: the text layer
+    and the inline-image scan share the decoded content streams, which
+    used to be inflated twice. A Flate stream that holds only an inline
+    image (no BT block) must still give its picture back."""
+    from docling_api_spark.pipeline import textextract
+    from docling_api_spark.pipeline.convert import LightweightConverter
+
+    gray = bytes([100, 200, 150, 250])
+    rgb = bytes(range(2 * 2 * 3))
+    text_stream = zlib.compress(b"BT 72 720 Td (first page) Tj ET")
+    bi_stream = zlib.compress(b"q BI /W 2 /H 2 /CS /G /BPC 8 ID " + gray + b" EI Q")
+    lzw_stream = lzw_encode(b"BT 72 700 Td (second page) Tj ET")
+    objs = [
+        b"4 0 obj <</Length %d /Filter /FlateDecode>>\nstream\n" % len(text_stream)
+        + text_stream + b"\nendstream endobj",
+        b"6 0 obj <</Length %d /Filter /FlateDecode>>\nstream\n" % len(bi_stream)
+        + bi_stream + b"\nendstream endobj",
+        b"7 0 obj <</Length %d /Filter /LZWDecode>>\nstream\n" % len(lzw_stream)
+        + lzw_stream + b"\nendstream endobj",
+        make_image_obj(zlib.compress(rgb), width=2, height=2),
+    ]
+    calls: dict[tuple[bytes, bytes], int] = {}
+    real = textextract._decode_stream
+
+    def counting(d, data, content=None):
+        calls[(d, data)] = calls.get((d, data), 0) + 1
+        return real(d, data, content)
+
+    monkeypatch.setattr(textextract, "_decode_stream", counting)
+    res = LightweightConverter().convert("doc.pdf", make_pdf_objs(objs))
+    assert res["error"] is None
+    assert res["markdown"].startswith("first page\nsecond page")
+    assert len(calls) == 4  # every stream was read ...
+    assert max(calls.values()) == 1  # ... exactly once
+    assert [decode_png(i["image"]) for i in res["images"]] == [
+        (2, 2, 1, gray),  # the BI-only stream's inline image
+        (2, 2, 3, rgb),  # the image XObject
+    ]
+
+
 def test_encrypted_pdf_gets_the_honest_error():
     """An /Encrypt PDF's streams decode to garbage and are skipped; the
     error must name encryption, not claim the document needs OCR. A
@@ -3385,3 +3460,53 @@ def test_pdf_cmyk_with_png_predictor_converted():
     w, h, ch, raw = decode_png(png)
     assert (w, h, ch) == (1, 2, 3)
     assert raw == bytes([0, 255, 255, 0, 0, 0])  # cyan row, black row
+
+
+# ---------------------------------------------------------------------------
+# conversion output pinned on the benchmark corpus
+# ---------------------------------------------------------------------------
+
+# SHA-256 of the canonical encoding below, recorded before the PDF
+# kernel's speedups (one decode per stream, linear-time LZW, string fast
+# paths): those must leave conversion output byte-identical
+_CORPUS_CONVERSION_SHA256 = (
+    "4e9f710006a121961a9131e65252542f7f66b52082ad2525ed160b3988a9c688"
+)
+
+
+def test_benchmark_corpus_conversion_is_pinned():
+    """Eight large and eight small benchmark documents (every format; the
+    PDFs use Flate, ASCII85+Flate, LZW and hex content streams plus
+    raster XObjects) for seeds 1 and 7 convert to exactly the pinned
+    filename, markdown, images and error."""
+    import hashlib
+    import random
+
+    from docling_api_spark.pipeline.convert import LightweightConverter
+    from perfbench import corpus
+
+    h = hashlib.sha256()
+
+    def put(b: bytes) -> None:
+        h.update(len(b).to_bytes(8, "big"))
+        h.update(b)
+
+    def put_opt(s: str | None) -> None:
+        put(b"\x00" if s is None else b"\x01" + s.encode("utf-8", "surrogatepass"))
+
+    conv = LightweightConverter()
+    for seed in (1, 7):
+        rng = random.Random(seed)
+        docs = [corpus.large_doc(rng, i) for i in range(8)]
+        docs += [corpus.small_doc(rng, i) for i in range(8)]
+        for doc in docs:
+            r = conv.convert(doc.name, doc.content)
+            put(r["filename"].encode())
+            put_opt(r["markdown"])
+            put_opt(r["error"])
+            put(b"%d" % len(r["images"]))
+            for im in r["images"]:
+                put(im["type"].encode())
+                put(im["filename"].encode())
+                put(im["image"])
+    assert h.hexdigest() == _CORPUS_CONVERSION_SHA256
