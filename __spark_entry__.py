@@ -23,31 +23,6 @@ if _REPO_DIR not in sys.path:
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# The events table stores parquet TIMESTAMP(NANOS), which Spark only reads
-# with this legacy flag (as raw ns longs; tables.load_table converts to µs
-# timestamps exactly like DuckDB's read-time truncation). The driver may
-# hand us an already-built session, so set it at runtime too.
-_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # naive µs parquet timestamps must read as TIMESTAMP (UTC instant),
-    # matching DuckDB's naive micros — not Spark 4's inferred TIMESTAMP_NTZ
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    # Arrow batches bounded by BYTES (large conversion rows) instead of a
-    # row count that throttles narrow-row Python passes — see session.py.
-    # Same env overrides as session.get_spark, so a driver-handed session
-    # honors an env-tuned value instead of silently overwriting it.
-    "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-        "SPARK_GRAFT_ARROW_MAXREC", "10000"
-    ),
-    "spark.sql.execution.arrow.maxBytesPerBatch": os.environ.get(
-        "SPARK_GRAFT_ARROW_MAXBYTES", str(16 * 1024 * 1024)
-    ),
-}
-
 
 def _ship_package(spark: SparkSession) -> None:
     """Make docling_api_spark importable on executor Python workers.
@@ -73,7 +48,12 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def _prepare(spark: SparkSession) -> SparkSession:
-    for k, v in _RUNTIME_CONFS.items():
+    """Set the engine's runtime confs on a session the driver built (it
+    may have none of them: without nanosAsLong every events query fails on
+    the parquet TIMESTAMP(NANOS) column) and ship the package."""
+    from docling_api_spark.session import runtime_confs
+
+    for k, v in runtime_confs().items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -340,7 +340,7 @@ def distributed_grouped_quantiles(
     pre_reduce: bool | str = True,
     probe_key: object = None,
     expected_groups: int | None = None,
-    rank_parts: int | None = None,
+    rank_parts: int = 0,
 ) -> DataFrame:
     """Per-group exact quantiles: one row per group with array<double>
     ``c`` — the distributed replacement for
@@ -462,7 +462,7 @@ def distributed_grouped_quantiles(
         # ranking pipeline (r15 profile: q297 ran 4 serial single-task
         # stages). Callers gate the value with tables._scan_spread_parts
         # (single-file + size threshold), so production multi-file
-        # tables pass None and keep AQE's byte-correct sizing.
+        # tables pass 0 and keep AQE's byte-correct sizing.
         blocked = blocked.repartition(rank_parts, *g, "blk")
     inblock = blocked.select(
         *g, "x", "c", "blk",
@@ -570,7 +570,7 @@ def distributed_quantiles(
     block_width: float | str = 1000.0,
     pre_reduce: bool | str = True,
     probe_key: object = None,
-    rank_parts: int | None = None,
+    rank_parts: int = 0,
 ) -> DataFrame:
     """Exact linear-interpolated quantiles of ``df[col]`` at ``probs``.
 

@@ -26,7 +26,7 @@ from docling_api_spark.functions.quantiles import (
 )
 from docling_api_spark.operators.sampling import hash_bucket, sql_hash_bucket
 from docling_api_spark.plans.registry import register
-from docling_api_spark.tables import literal_df, load_table
+from docling_api_spark.tables import _scan_spread_parts, literal_df, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -1035,10 +1035,8 @@ def q158_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-task 0.17-0.18s stages reading 0.97-0.99 MB), exactly the
     # band where AQE byte-coalescing serializes real ranking work onto
     # one task. Gated by _scan_spread_parts: a multi-file production
-    # events table passes 0 → None and keeps AQE's byte-correct sizing.
-    from docling_api_spark.tables import _scan_spread_parts
-
-    _rp = _scan_spread_parts(spark, f"{sf_dir}/events.parquet") or None
+    # events table passes 0 and keeps AQE's byte-correct sizing.
+    _rp = _scan_spread_parts(spark, f"{sf_dir}/events.parquet")
     med = distributed_grouped_quantiles(
         ev, ["event_type"], "value", [0.5], block_width="auto",
         pre_reduce="auto", probe_key=f"q158a:{sf_dir}", rank_parts=_rp,
@@ -3369,14 +3367,11 @@ def q227_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank_parts (r16, the q296/q297 recipe): the ~75k-row calibration
     # residual ranking exchange is ~1 MB — the band AQE byte-coalescing
     # folds onto ONE task; the pin keeps it at the spread width.
-    # Single-file-gated: None on a production multi-file table.
-    from docling_api_spark.tables import _scan_spread_parts
-
+    # Single-file-gated: 0 on a production multi-file table.
     qh = distributed_grouped_quantiles(
         resid, ["priority"], "r", [0.9], block_width="auto",
         pre_reduce="auto", probe_key=f"q227:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/lineitem.parquet")
-        or None,
+        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/lineitem.parquet"),
     ).select("priority", (F.col("c")[0] / 100.0).alias("qhat_dollars"))
     return (
         resid.groupBy("priority", "k", "beta", "alpha")
@@ -6721,14 +6716,12 @@ def q297_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width so AQE's byte-coalescing can't serialize the whole blocked
     # ranking onto one task (r15 profile: 4 serial single-task stages).
     # _scan_spread_parts gates it on the single-file bench layout — a
-    # multi-file production orders table passes 0 → None, keeping AQE's
+    # multi-file production orders table passes 0, keeping AQE's
     # byte-correct sizing at scale.
-    from docling_api_spark.tables import _scan_spread_parts
-
     th = distributed_quantiles(
         v, "c", [0.9, 0.95, 0.99], block_width="auto",
         pre_reduce="auto", probe_key=f"q297:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/orders.parquet") or None,
+        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/orders.parquet"),
     )
     pts = th.selectExpr(
         "stack(3, CAST(0.90 AS DOUBLE), c[0], CAST(0.95 AS DOUBLE), c[1],"

@@ -45,21 +45,19 @@ SHINGLES_DUCK = """
 """
 
 
-def doc_shingle_arrays(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc distinct 3-gram shingle ARRAYS: (doc_id, source, sh_arr).
 
     Per-doc dedup is `array_distinct` on the shingle array BEFORE any
     explode — entirely map-side (a relation-level `.distinct()` would be a
     full shuffle of the exploded ~10× relation, re-paid per consumer).
 
-    `checkpoint=True` materializes the compact per-doc form (corpus-sized,
-    NOT the 10× exploded relation) so multi-consumer pipelines (q42's
-    probe/counts/join-sides, q43's signatures/verification) pay the parquet
-    scan + tokenization exactly once. This is shuffle-scale intermediate
-    state — the same bargain a 100 TB deployment makes for any reused
-    relation.
+    The result is checkpointed: the compact per-doc form (corpus-sized,
+    NOT the 10× exploded relation) is materialized so multi-consumer
+    pipelines (q42's probe/counts/join-sides, q43's
+    signatures/verification) pay the parquet scan + tokenization exactly
+    once. This is shuffle-scale intermediate state — the same bargain a
+    100 TB deployment makes for any reused relation.
     """
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.split("text", " ").alias("toks")
@@ -70,15 +68,7 @@ def doc_shingle_arrays(
     # lazy (r15): the first consumer's job materializes the cut — the
     # eager form cost every shingle consumer a synchronous driver
     # barrier before its main job could even plan
-    return out.localCheckpoint(eager=False) if checkpoint else out
-
-
-def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded distinct (doc_id, source, shingle) relation (un-checkpointed
-    single-consumer form)."""
-    return doc_shingle_arrays(spark, sf_dir, checkpoint=False).select(
-        "doc_id", "source", F.explode("sh_arr").alias("shingle")
-    )
+    return out.localCheckpoint(eager=False)
 
 
 # ---------------------------------------------------------------------------

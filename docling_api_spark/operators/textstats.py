@@ -1327,12 +1327,6 @@ def q176_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q178 — classifier evaluation: confusion matrix over q64's predictions
 # ---------------------------------------------------------------------------
-def _q64_oracle_body() -> str:
-    from docling_api_spark.plans.registry import QUERIES
-
-    return QUERIES["q64_lang_id"].oracle
-
-
 @register(
     "q178_confusion_matrix",
     tags=("text", "evaluation", "langid"),

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from docling_api_spark.functions.numeric import dsum, sql_dsum
 from docling_api_spark.functions.quantiles import distributed_quantiles
 from docling_api_spark.plans.registry import register
-from docling_api_spark.tables import literal_df, load_table
+from docling_api_spark.tables import _scan_spread_parts, literal_df, load_table
 
 US_30MIN = 30 * 60 * 1_000_000
 US_1H = 60 * 60 * 1_000_000
@@ -5832,10 +5832,8 @@ def q296_watermark_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank_parts (r16, the q297 recipe): pin the ranking exchange to the
     # scan-spread width so AQE byte-coalescing can't serialize the ~1 MB
     # blocked ranking onto one task (profile: two serial single-task
-    # 1.08 MB stages); single-file-gated — None on a production
+    # 1.08 MB stages); single-file-gated — 0 on a production
     # multi-file table, keeping AQE's byte-correct sizing
-    from docling_api_spark.tables import _scan_spread_parts
-
     lq = distributed_quantiles(
         lateness,
         "late_us",
@@ -5843,7 +5841,7 @@ def q296_watermark_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_width="auto",
         pre_reduce="auto",
         probe_key=f"q296:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/events.parquet") or None,
+        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/events.parquet"),
     )
     counts = lateness.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),

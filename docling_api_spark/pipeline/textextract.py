@@ -2496,11 +2496,6 @@ def _ooxml_rels_all(
     return internal, external
 
 
-def _ooxml_rels(zf: zipfile.ZipFile, part: str) -> dict[str, str]:
-    """rId → zip-member path for ``part`` (see `_ooxml_rels_all`)."""
-    return _ooxml_rels_all(zf, part)[0]
-
-
 def _docx_drawing_payloads(
     el: ET.Element, rels: dict[str, str], zf: zipfile.ZipFile
 ) -> list[bytes | None]:

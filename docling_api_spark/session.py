@@ -26,6 +26,41 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 _MAX_DRIVER_MEM_GIB = 24
 
 
+def _cpus() -> str:
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def runtime_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The runtime SQL confs the engine's plans assume. `get_spark` builds
+    its session with them; `__spark_entry__._prepare` sets them on a
+    session someone else built. Shuffle partitions default to one per
+    core (SPARK_GRAFT_CPUS)."""
+    if shuffle_partitions is None:
+        shuffle_partitions = int(_cpus())
+    return {
+        NANOS_AS_LONG: "true",
+        # naive µs parquet timestamps read as TIMESTAMP (UTC instant) like
+        # Spark 3.x / DuckDB, not Spark 4's inferred TIMESTAMP_NTZ
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # Arrow batch sizing (optimization guide §4.2): bound batches by
+        # BYTES, not a row count. The old maxRecordsPerBatch=256 guarded
+        # the conversion stage's megabyte binary rows, but it equally
+        # throttled every narrow-row Python pass — q106's token-level
+        # Misra-Gries consumed ~600k 10-byte rows as ~2300 Arrow batches
+        # per task, all serialization round-trips. maxBytesPerBatch keeps
+        # the memory bound the 256-row cap was for (large rows still cut
+        # batches early; mirrors the reference's lazy one-at-a-time
+        # convert_all iterator, service.py:171-177) while narrow rows get
+        # full 10k-row batches.
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.execution.arrow.maxBytesPerBatch": str(16 * 1024 * 1024),
+    }
+
+
 def default_driver_memory() -> str:
     """`spark.driver.memory` when SPARK_GRAFT_DRIVER_MEM is unset: half the
     machine's physical memory in whole GiB, at least 1g and at most 24g.
@@ -51,42 +86,12 @@ def get_spark(
     skew-join splitting, broadcast demotion), Arrow keeps the pandas-UDF
     boundary columnar, UTC pins timestamp semantics for oracle parity.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{_cpus()}]")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch sizing (optimization guide §4.2): bound batches by
-        # BYTES, not a row count. The old maxRecordsPerBatch=256 guarded
-        # the conversion stage's megabyte binary rows, but it equally
-        # throttled every narrow-row Python pass — q106's token-level
-        # Misra-Gries consumed ~600k 10-byte rows as ~2300 Arrow batches
-        # per task, all serialization round-trips. maxBytesPerBatch keeps
-        # the memory bound the 256-row cap was for (large rows still cut
-        # batches early; mirrors the reference's lazy one-at-a-time
-        # convert_all iterator, service.py:171-177) while narrow rows get
-        # full 10k-row batches.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAXREC", "10000"),
-        )
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAXBYTES", str(16 * 1024 * 1024)),
-        )
-        .config(NANOS_AS_LONG, "true")
-        # naive µs parquet timestamps read as TIMESTAMP (UTC instant) like
-        # Spark 3.x / DuckDB, not Spark 4's inferred TIMESTAMP_NTZ
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config(
             "spark.driver.memory",
@@ -98,7 +103,7 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "2")
         .config("spark.executorEnv.MALLOC_ARENA_MAX", "2")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**runtime_confs(shuffle_partitions), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from docling_api_spark.pipeline.convert import convert_documents
 from docling_api_spark.pipeline.schemas import (
@@ -34,6 +34,7 @@ from docling_api_spark.pipeline.schemas import (
     JOB_IN_PROGRESS,
     JOB_SUCCESS,
 )
+from docling_api_spark.session import shuffle_partitions
 from docling_api_spark.sources.binaryfiles import read_documents_stream
 
 
@@ -42,45 +43,46 @@ def job_id_col() -> Column:
     return F.element_at(F.split(F.col("path"), "/"), -1)
 
 
-class _scoped_stream_state_parts:
-    """Scope the state-partition count of a bounded drain (guide §2.2:
-    size partitions to the data, not the core count).
+# State-store partitions of a bounded drain (guide §2.2: size partitions
+# to the data, not the core count): min(STREAM_STATE_PARTS, shuffle
+# partitions). A stateful streaming operator creates one state-store
+# instance per shuffle partition and commits each of them per micro-batch
+# — at the test corpus's volume, 32 state partitions are pure per-batch
+# file I/O (measured r15: q36 drain 1.9-7.3 s at 32 state partitions vs
+# 1.2-1.4 s at 8). A real deployment sizes this to its per-trigger volume.
+STREAM_STATE_PARTS = 8
 
-    A stateful streaming operator creates one state-store instance per
-    shuffle partition and commits each of them per micro-batch — at the
-    test corpus's volume, 32 state partitions are pure per-batch file I/O
-    (measured r15: q36 drain 1.9-7.3 s at 32 state partitions vs
-    1.2-1.4 s at 8). The stream's session snapshot makes the setting
-    safe to scope: StreamExecution clones the session at start(), and on
-    checkpoint RESUME Spark takes the partition count from the offset
-    log, not this conf, so recovery semantics (pinned by the
-    kill/restart test) are untouched. Env: SPARK_GRAFT_STREAM_STATE_PARTS
-    (a real deployment sizes this to its per-trigger volume; default
-    min(8, shuffle partitions) matches the test corpus).
 
-    The conf mutation is session-global for the scope's duration: a query
+def _run_available_now(writer: DataStreamWriter, spark: SparkSession) -> None:
+    """Start ``writer`` with Trigger.AvailableNow, wait until it has drained
+    every available input and stopped, then stop it.
+
+    AvailableNow (r16, guide §2.4 fixed costs) is the documented
+    run-to-completion trigger for a bounded drain: the stream plans all
+    available input up front, runs the same micro-batches (data batch +
+    watermark-finalization batch; probed: 2 = 2 on q36/q109), then
+    terminates itself. Self-termination cannot hang on a source that keeps
+    reporting new offsets, and recovery still resumes from the offset log
+    (kill/restart test).
+
+    The state-partition count is scoped to start(): StreamExecution clones
+    the session there, and on checkpoint RESUME Spark takes the partition
+    count from the offset log, not this conf, so recovery semantics are
+    untouched. The conf change is session-global while it lasts: a query
     planned CONCURRENTLY on the same session (another driver thread) would
-    inherit the reduced partition count. The drains here are called from
-    single-threaded query paths (bench/driver/tests), which is the
-    assumption; a multi-tenant deployment should start the stream from a
-    cloned session (spark.newSession()) instead."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            prev_n = int(self.prev)
-        except (TypeError, ValueError):
-            prev_n = 8  # non-integer conf (e.g. "auto" on a fork) — floor it
-        target = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS") or str(
-            min(8, prev_n)
-        )
-        self.spark.conf.set("spark.sql.shuffle.partitions", target)
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+    inherit the reduced count. The drains here are called from
+    single-threaded query paths (bench/driver/tests); a multi-tenant
+    deployment should start the stream from a cloned session
+    (spark.newSession()) instead."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(min(STREAM_STATE_PARTS, shuffle_partitions(spark))))
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(key, prev)
+    q.awaitTermination()
+    q.stop()
 
 
 def drain_stream_to_parquet(stream_df: DataFrame, prefix: str = "drain") -> DataFrame:
@@ -98,35 +100,13 @@ def drain_stream_to_parquet(stream_df: DataFrame, prefix: str = "drain") -> Data
 
     spark = stream_df.sparkSession
     out_dir = tempfile.mkdtemp(prefix=f"{prefix}_out_")
-    # Trigger.AvailableNow (r16, guide §2.4 fixed costs): the documented
-    # run-to-completion trigger for a bounded drain — the stream plans all
-    # available input up front, runs the same micro-batches (data batch +
-    # watermark-finalization batch; probed: 2 = 2 on q36/q109), then
-    # terminates itself, replacing the processAllAvailable polling
-    # handshake with awaitTermination. Measured flat-to-slightly-better
-    # locally (family A/B min-sum ×0.85–0.97 over quiet windows); kept
-    # for the semantics: self-termination cannot hang on a source that
-    # keeps reporting new offsets, and recovery still resumes from the
-    # offset log (kill/restart test). Env opt-out restores the old
-    # processingTime drain.
-    avail = os.environ.get("SPARK_GRAFT_STREAM_AVAILABLE_NOW", "1") == "1"
-    with _scoped_stream_state_parts(spark):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-            )
-        )
-        if avail:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-    if avail:
-        q.awaitTermination()
-    else:
-        q.processAllAvailable()
-    q.stop()
+    _run_available_now(
+        stream_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")),
+        spark,
+    )
     # explicit schema: an empty emission set leaves no part files, which a
     # schema-inferring read would refuse
     return spark.read.schema(stream_df.schema).parquet(out_dir)
@@ -262,22 +242,12 @@ def drain_stream_upsert(stream_df: DataFrame, keys: list[str], prefix: str = "up
             .parquet(log_dir)
         )
 
-    # Trigger.AvailableNow, same rationale as drain_stream_to_parquet
-    avail = os.environ.get("SPARK_GRAFT_STREAM_AVAILABLE_NOW", "1") == "1"
-    with _scoped_stream_state_parts(spark):
-        writer = (
-            stream_df.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", ckpt_dir)
-        )
-        if avail:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-    if avail:
-        q.awaitTermination()
-    else:
-        q.processAllAvailable()
-    q.stop()
+    _run_available_now(
+        stream_df.writeStream.outputMode("update")
+        .foreachBatch(upsert)
+        .option("checkpointLocation", ckpt_dir),
+        spark,
+    )
 
     # an empty source produces zero micro-batches → no parquet files, and a
     # bare read would die on schema inference. The stream schema is known

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docling_api_spark.session import shuffle_partitions
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -78,33 +80,34 @@ _SPREAD_KEY = {
 }
 
 
-def _scan_spread_parts(spark: SparkSession, path: str) -> int:
-    """Partitions to spread a single-file scan over, or 0 when the spread
-    should not fire.
+# Spread gate and width. A file below SPREAD_MIN_BYTES is not spread: its
+# narrow work is too small for single-threading to matter. The width
+# is min(SPREAD_MAX_PARTS, shuffle partitions), NOT the full core count:
+# the corpus this guard exists for is small (one row group), so per-task
+# fixed costs (hash-agg buffer setup, checkpoint block reads, Python
+# worker round-trips) overtake the parallelism win past ~8 tasks.
+# Measured r15 fresh-session A/B over the 12 document/embedding headline
+# queries: min-sum ×0.83 at 8 parts vs no spread, and 8 parts beat 32 on
+# 5 of 6 (q106 1.67× slower at 32 than 8). Below 8 cores the width
+# tracks the shuffle partitions, so the driver's low-core bench keeps its
+# geometry.
+SPREAD_MIN_BYTES = 256 * 1024
+SPREAD_MAX_PARTS = 8
 
-    Width is min(8, shuffle partitions) — NOT the full core count: the
-    corpus this guard exists for is small (one row group), so per-task
-    fixed costs (hash-agg buffer setup, checkpoint block reads, Python
-    worker round-trips) overtake the parallelism win past ~8 tasks.
-    Measured r15 fresh-session A/B over the 12 document/embedding headline
-    queries: min-sum ×0.83 at 8 parts vs no spread, and 8 parts beat 32 on
-    5 of 6 (q106 1.67× slower at 32 than 8). Tracks SPARK_GRAFT_CPUS
-    below 8 cores so the driver's low-core bench keeps its geometry;
-    env-overridable for A/B (SPARK_GRAFT_SPREAD_PARTS)."""
-    disable = os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") == "0"
-    min_bytes = int(
-        os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(256 * 1024))
-    )
-    if disable or not os.path.isfile(path) or os.path.getsize(path) < min_bytes:
+
+def _scan_spread_parts(spark: SparkSession, path: str) -> int:
+    """Partitions to spread a scan of ``path`` over, or 0 when the spread
+    should not fire: ``path`` is not a single file of at least
+    SPREAD_MIN_BYTES, or the session has one shuffle partition.
+
+    The ``rank_parts`` callers of the quantile helpers gate on the file
+    of the ranked relation's SOURCE table: a single big file stands in
+    for the test-table layout the pin exists for. It is not a measure of
+    the ranked relation's own size."""
+    if not os.path.isfile(path) or os.path.getsize(path) < SPREAD_MIN_BYTES:
         return 0
-    override = os.environ.get("SPARK_GRAFT_SPREAD_PARTS")
-    if override:
-        return int(override)
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return 0
-    return min(n, 8) if n > 1 else 0
+    n = shuffle_partitions(spark)
+    return min(n, SPREAD_MAX_PARTS) if n > 1 else 0
 
 
 def load_table(
@@ -179,18 +182,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every test table as a temp view (for the SQL-first operators)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def literal_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
     """A tiny constant table as ONE JVM-native partition.
 
@@ -214,7 +205,8 @@ def literal_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFra
     driver-graded, so the swap must be invisible there too.
     """
     st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    if not rows or os.environ.get("SPARK_GRAFT_LITERAL_DF", "1") == "0":
+    if not rows:
+        # inline() needs a typed array; an empty one has no element type
         return spark.createDataFrame(rows, st)
     for row in rows:
         # positional tuples/lists only: Row/dict rows would zip against the

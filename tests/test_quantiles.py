@@ -636,7 +636,7 @@ def test_reserved_group_column_names_raise_clearly(spark):
 def test_rank_parts_bit_identical(spark, sf_dir, table, col, pre_reduce):
     """rank_parts (r16: pin the ranking exchange's width so AQE
     byte-coalescing can't serialize the blocked ranking) must be a pure
-    physical hint: same bits as rank_parts=None on both ranking paths,
+    physical hint: same bits as the default rank_parts=0 on both ranking paths,
     at widths below, at, and above the data's natural partition count."""
     df = load_table(spark, sf_dir, table)
     want = distributed_quantiles(

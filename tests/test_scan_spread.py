@@ -7,13 +7,16 @@ file is big enough (bench scale), and must be a strict no-op everywhere
 else. Results must be bit-identical either way — that is the engine's
 partitioning-independence claim, re-asserted here under the spread's own
 partitioning (the small graded SFs sit below the size threshold, so the
-dryrun never exercises it; this test forces it on via the env knobs).
+dryrun never exercises it; this test forces it on and off by patching
+the size gate, tables.SPREAD_MIN_BYTES).
 """
 
 from __future__ import annotations
 
-import os
+import math
 from unittest import mock
+
+import pytest
 
 from docling_api_spark import tables
 
@@ -22,36 +25,39 @@ def _rows(df):
     return sorted(tuple(map(str, r)) for r in df.collect())
 
 
+def _spread(on: bool):
+    """Force the scan spread on (every single file passes the size gate)
+    or off (none does). The quantile callers' rank_parts pins read the
+    same gate, so they follow too."""
+    return mock.patch.object(tables, "SPREAD_MIN_BYTES", 1 if on else math.inf)
+
+
 def test_spread_fires_only_above_threshold_and_when_enabled(spark, sf_dir):
     path = f"{sf_dir}/documents.parquet"
     # below threshold (sf0.001 documents is ~64 KB): no-op
     assert tables._scan_spread_parts(spark, path) == 0
     # force the threshold down: fires with min(8, shuffle partitions)
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SPREAD_MIN_BYTES": "1"}):
+    with _spread(True):
         n = tables._scan_spread_parts(spark, path)
         assert n == min(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    # disabled explicitly: no-op even above threshold
-    with mock.patch.dict(
-        os.environ,
-        {"SPARK_GRAFT_SPREAD_MIN_BYTES": "1", "SPARK_GRAFT_SCAN_SPREAD": "0"},
-    ):
+        # one shuffle partition: nothing to spread over
+        with mock.patch.object(tables, "shuffle_partitions", return_value=1):
+            assert tables._scan_spread_parts(spark, path) == 0
+        # a directory (multi-file production table): no-op — scan parallelizes
+        assert tables._scan_spread_parts(spark, sf_dir) == 0
+    with _spread(False):
         assert tables._scan_spread_parts(spark, path) == 0
-    # a directory (multi-file production table): no-op — scan parallelizes
-    assert tables._scan_spread_parts(spark, sf_dir) == 0
 
 
 def test_spread_partitions_and_row_parity(spark, sf_dir):
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SPREAD_MIN_BYTES": "1"}):
+    with _spread(True):
         spread = tables.load_table(spark, sf_dir, "documents")
         assert spread.rdd.getNumPartitions() == min(
             8, int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SCAN_SPREAD": "0"}):
+    with _spread(False):
         plain = tables.load_table(spark, sf_dir, "documents")
     assert _rows(spread) == _rows(plain)
-
-
-import pytest
 
 
 @pytest.mark.parametrize(
@@ -72,6 +78,11 @@ import pytest
         # spread exchange
         "q12_cube",
         "q144_part_supplier_stats",
+        # r16 opt-ins on lineitem: decimal conditional sums after a
+        # broadcast join (q143) and a spread that replaces the per-order
+        # aggregate's own exchange (q148)
+        "q143_promo_share",
+        "q148_denorm_drift_audit",
     ],
 )
 def test_spread_query_results_bit_identical(spark, sf_dir, name):
@@ -80,9 +91,9 @@ def test_spread_query_results_bit_identical(spark, sf_dir, name):
     from docling_api_spark.plans import all_queries
 
     q = all_queries()[name]
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SPREAD_MIN_BYTES": "1"}):
+    with _spread(True):
         with_spread = _rows(q.fn(spark, sf_dir))
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SCAN_SPREAD": "0"}):
+    with _spread(False):
         without = _rows(q.fn(spark, sf_dir))
     assert with_spread == without
 
@@ -104,7 +115,7 @@ def test_spread_opt_out_keeps_plan_and_rows(spark, sf_dir, name, payload_key):
     from docling_api_spark.plans import all_queries
 
     q = all_queries()[name]
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SPREAD_MIN_BYTES": "1"}):
+    with _spread(True):
         df = q.fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         # the spread exchange is an explicit repartition (REPARTITION_BY_NUM
@@ -115,6 +126,6 @@ def test_spread_opt_out_keeps_plan_and_rows(spark, sf_dir, name, payload_key):
             for line in plan.splitlines()
         )
         forced = _rows(df)
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SCAN_SPREAD": "0"}):
+    with _spread(False):
         plain = _rows(q.fn(spark, sf_dir))
     assert forced == plain

@@ -1,12 +1,17 @@
-"""session.py defaults that depend on the machine."""
+"""session.py: defaults that depend on the machine, and the engine's
+configuration surface."""
 
 from __future__ import annotations
 
 import os
+import re
+from unittest import mock
 
 import pytest
 
 from docling_api_spark import session
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GIB = 2**30
 
@@ -36,3 +41,42 @@ def test_driver_memory_fits_this_machine():
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert 1 <= gib <= 24
     assert gib * GIB <= max(phys, GIB)
+
+
+def _engine_sources():
+    yield os.path.join(REPO_DIR, "__spark_entry__.py")
+    for root, _, files in os.walk(os.path.join(REPO_DIR, "docling_api_spark")):
+        yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def test_engine_reads_only_deployment_env_vars():
+    """Environment variables carry deployment settings only (core count,
+    master URL, driver heap); tuning is declared as module constants."""
+    names = set()
+    for path in _engine_sources():
+        with open(path, encoding="utf-8") as f:
+            names.update(re.findall(r"SPARK_GRAFT_\w*", f.read()))
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def test_prepare_sets_the_runtime_confs_get_spark_sets(spark):
+    """A session the driver builds has none of the engine's confs;
+    `_prepare` must bring every one of them to the value `get_spark`
+    builds its own session with."""
+    import __spark_entry__ as entry
+
+    confs = session.runtime_confs()
+    # a new session starts from the SparkContext conf, i.e. from the
+    # conftest's get_spark(shuffle_partitions=8) call
+    built = spark.newSession()
+    assert {k: built.conf.get(k) for k in confs} == session.runtime_confs(
+        shuffle_partitions=8
+    )
+
+    plain = spark.newSession()
+    for k in confs:
+        plain.conf.unset(k)
+    assert plain.conf.get(session.NANOS_AS_LONG) == "false"
+    with mock.patch.object(entry, "_ship_package"):
+        entry._prepare(plain)
+    assert {k: plain.conf.get(k) for k in confs} == confs
