@@ -23,46 +23,7 @@ if _REPO_DIR not in sys.path:
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make docling_api_spark importable on executor Python workers.
-
-    Queries that use pandas UDFs / mapInPandas pickle closures referencing
-    the package; workers spawned with a different cwd (the driver's) can't
-    import it from /root/repo. addPyFile distributes a zip of the package
-    to every worker's sys.path.
-    """
-    if getattr(spark, "_docling_api_spark_shipped", False):
-        return
-    import shutil
-    import tempfile
-
-    zip_base = os.path.join(
-        tempfile.mkdtemp(prefix="docling_api_spark_pkg_"), "docling_api_spark_pkg"
-    )
-    zip_path = shutil.make_archive(
-        zip_base, "zip", root_dir=_REPO_DIR, base_dir="docling_api_spark"
-    )
-    spark.sparkContext.addPyFile(zip_path)
-    spark._docling_api_spark_shipped = True
-
-
-def _prepare(spark: SparkSession) -> SparkSession:
-    """Set the engine's runtime confs on a session the driver built (it
-    may have none of them: without nanosAsLong every events query fails on
-    the parquet TIMESTAMP(NANOS) column) and ship the package."""
-    from docling_api_spark.session import runtime_confs
-
-    for k, v in runtime_confs().items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a live session — keep going
-    try:
-        _ship_package(spark)
-    except Exception:
-        pass  # workers sharing the driver's path still work
-    return spark
+from docling_api_spark.session import prepare as _prepare  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:

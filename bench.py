@@ -547,10 +547,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="docling-api-spark-bench")
-    # foreign-cwd safety: pandas-UDF closures reference the package; ship it
-    import __spark_entry__
-
-    __spark_entry__._ship_package(spark)
 
     registry = all_queries()
     bench_queries = {n: q for n, q in sorted(registry.items()) if q.bench}

@@ -62,22 +62,21 @@ of every current caller, documented so "drop-in" is honest):
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from docling_api_spark.session import shuffle_partitions
 from docling_api_spark.tables import literal_df
 
-# --- adaptive pre_reduce (r10) ---------------------------------------------
-# ``pre_reduce="auto"`` replaces the r8/r9 hand-measured booleans with a
-# data-driven branch: a bounded sample of the cleaned input is probed for
-# its distinct-value ratio, and the strategy that the r8/r9 sf0.1 A/B
-# measurements picked falls out of the ratio instead of a compile-time
-# constant — the 100 TB-correct version (VERDICT r9 Next #2): a column
-# whose domain saturates at scale (event values, small-int counts) flips
-# to the cardinality pre-reduce exactly when the data says so, not when a
-# local stopwatch did.
+# --- the probe picks the plan ----------------------------------------------
+# Both helpers choose their ranking branch and block width from ONE
+# bounded probe of the cleaned input; nothing else selects a plan. The
+# branch follows the column's distinct-value ratio, so a column whose
+# domain saturates at scale (event values, small-int counts) flips to the
+# cardinality pre-reduce exactly when the data says so, not when a local
+# stopwatch did.
 #
 # Decision rule: pre-reduce iff distinct_ratio < AUTO_DISTINCT_RATIO.
 # GROUPED inputs judge the MIN per-group ratio, not the global one — the
@@ -97,28 +96,26 @@ from docling_api_spark.tables import literal_df
 # toward raw, which is safe: the skew-funnel cases it must catch sit
 # orders of magnitude below 0.30.
 #
-# Clustered-layout caveat (r10 review): the limit() sample is a PREFIX,
+# Clustered-layout limit (r10 review): the limit() sample is a PREFIX,
 # so on storage clustered/partitioned BY THE GROUP KEY it can read only
 # one group's splits and miss a later low-cardinality group entirely —
 # and a missed group biases toward raw, the unsafe direction for the
-# funnel (the consequence is bounded: one (group, blk) window partition
+# funnel. The consequence is bounded: one (group, blk) window partition
 # holding that group's rows sorts single-task with spill — slow, never
-# wrong or OOM). No bounded prefix probe can see a group that is not in
-# the prefix; callers whose input is group-clustered should pass an
-# explicit boolean (the hand escape hatch is still the API). None of
-# the in-repo callers are group-clustered: every grouped probe input is
-# either a raw fact scan (row order uncorrelated with the group key) or
-# a stacked/aggregated relation whose layout this module builds itself.
+# wrong or OOM. No bounded prefix probe can see a group that is not in
+# the prefix. None of the in-repo callers are group-clustered: every
+# grouped probe input is either a raw fact scan (row order uncorrelated
+# with the group key) or a stacked/aggregated relation whose layout this
+# module builds itself.
 #
 # The probe is ONE bounded job (limit(AUTO_PROBE_ROWS) -> one aggregate;
 # at 100 TB CollectLimit reads a handful of input splits). It runs
-# EAGERLY at plan-build time, so decisions are memoized in _auto_memo:
-# callers pass a stable ``probe_key`` (query name + sf_dir) because
-# semanticHash is NOT stable across rebuilds when a lazy localCheckpoint
-# sits upstream (each checkpoint instance hashes fresh — measured);
-# keyless callers fall back to semanticHash where it IS stable. First
-# build pays the probe (in bench, the warm sweep); every rebuild —
-# bench's timed runs — is a dict hit.
+# EAGERLY at plan-build time, so its findings are memoized in _auto_memo
+# under the caller's stable ``probe_key`` (query name + sf_dir).
+# semanticHash is no substitute: it is NOT stable across rebuilds when a
+# lazy localCheckpoint sits upstream (each checkpoint instance hashes
+# fresh — measured). First build pays the probe (in bench, the warm
+# sweep); every rebuild — bench's timed runs — is a dict hit.
 AUTO_DISTINCT_RATIO = 0.30
 AUTO_PROBE_ROWS = 100_000
 AUTO_MIN_GROUP_SAMPLE = 100
@@ -130,10 +127,9 @@ _INTERNAL_COLS = frozenset(
      "n", "i", "q", "pos", "lo", "hi", "vlo", "vhi", "cut"}
 )
 
-# Adaptive block_width (r10, same probe job): ``block_width="auto"``
-# derives the width from the probe sample's value range —
-# (hi - lo) / target_blocks, where target_blocks scales with the
-# CONFIGURED parallelism (AUTO_BLOCKS_PER_PARTITION x
+# Block width (r10, same probe job): the width is derived from the probe
+# sample's value range — (hi - lo) / target_blocks, where target_blocks
+# scales with the CONFIGURED parallelism (AUTO_BLOCKS_PER_PARTITION x
 # spark.sql.shuffle.partitions, floored at AUTO_TARGET_BLOCKS_MIN and
 # capped at AUTO_TARGET_BLOCKS_CAP). Rationale, measured at sf0.1 on
 # q118's prices: 3 blocks 1.82s, 21 blocks 1.17s, ~1000 blocks 0.93s —
@@ -147,42 +143,29 @@ _INTERNAL_COLS = frozenset(
 # just land in blocks past the target count (block ids are unbounded
 # floor(x/width)), costing nothing but a longer prefix table.
 # Correctness never depends on the width (pinned by the silly-width
-# unit tests); "auto" only moves the parallelism/size trade.
+# unit tests); the width only moves the parallelism/size trade.
 AUTO_BLOCKS_PER_PARTITION = 32
 AUTO_TARGET_BLOCKS_MIN = 1024
 AUTO_TARGET_BLOCKS_CAP = 65536
 AUTO_MIN_BLOCKS_PER_GROUP = 16
 
 
+@dataclass(frozen=True)
 class ProbeStats:
     """One probe job's findings: the pre_reduce decision, the distinct
     ratio it came from (min per-group when grouped), the sample's value
     range (None when the sample was empty), and the sampled group count
-    (1 ungrouped). Tuple-compatible ([0] == pre_reduce, [1] == ratio)
-    for memo poking in tests and tools/plan_report.py's dump."""
+    (1 ungrouped)."""
 
-    __slots__ = ("pre_reduce", "ratio", "lo", "hi", "groups")
-
-    def __init__(self, pre_reduce: bool, ratio: float, lo=None, hi=None,
-                 groups: int = 1):
-        self.pre_reduce = pre_reduce
-        self.ratio = ratio
-        self.lo = lo
-        self.hi = hi
-        self.groups = groups
-
-    def __getitem__(self, i: int):
-        return (self.pre_reduce, self.ratio, self.lo, self.hi, self.groups)[i]
-
-    def __repr__(self) -> str:  # pragma: no cover - debug aid
-        return (
-            f"ProbeStats(pre_reduce={self.pre_reduce}, ratio={self.ratio:.4f},"
-            f" lo={self.lo}, hi={self.hi}, groups={self.groups})"
-        )
+    pre_reduce: bool
+    ratio: float
+    lo: float | None = None
+    hi: float | None = None
+    groups: int = 1
 
 
-# probe_key -> ProbeStats; rides along for tests and postmortems
-# (tools/plan_report.py dumps it after building plans)
+# (probe_key, col, group_cols) -> ProbeStats; rides along for tests and
+# postmortems (tools/plan_report.py dumps it after building plans)
 _auto_memo: dict[object, ProbeStats] = {}
 
 
@@ -190,36 +173,24 @@ def _probe(
     clean: DataFrame,
     group_cols: Sequence[str],
     col: str,
-    probe_key: object = None,
+    probe_key: object,
 ) -> ProbeStats:
     """ONE bounded probe job over ``clean``: per-group (or global)
     approx-distinct + count for the pre_reduce ratio, plus global
-    min/max for the adaptive block width. Memoized by ``probe_key`` (or
-    semanticHash when the caller has no stable key and the plan has no
-    lazy checkpoint — semanticHash is NOT stable across rebuilds when a
-    lazy localCheckpoint sits upstream, measured).
+    min/max for the block width. Memoized by ``probe_key``.
 
     The memo entry is keyed by ``(probe_key, col, group_cols)``, not the
     caller-supplied key alone (r10 advisor): a probe_key reused across
     call sites — or copy-pasted between two quantile calls in one query
     — must never hand one column's ProbeStats to another column's
-    decision. The semanticHash fallback already encodes (col, g) via the
-    projected plan, so only the explicit-key path needs the fold."""
+    decision."""
     g = list(group_cols)
-    if probe_key is not None:
-        probe_key = (probe_key, col, tuple(g))
-        if probe_key in _auto_memo:
-            return _auto_memo[probe_key]
+    memo_key = (probe_key, col, tuple(g))
+    if memo_key in _auto_memo:
+        return _auto_memo[memo_key]
     probe_in = clean.select(
         *g, F.col(col).cast("double").alias("x")
     ).limit(AUTO_PROBE_ROWS)
-    if probe_key is None:
-        try:
-            probe_key = ("semantic", probe_in.semanticHash())
-        except Exception:  # pragma: no cover - dev-API fallback
-            probe_key = None
-        if probe_key is not None and probe_key in _auto_memo:
-            return _auto_memo[probe_key]
     if g:
         rows = (
             probe_in.groupBy(*g)
@@ -242,7 +213,7 @@ def _probe(
         # to catch — weak evidence still beats no evidence. A group with
         # ZERO sample rows (group-clustered storage where limit() reads
         # one group's splits) is invisible to any bounded prefix probe;
-        # see the block comment's clustered-layout caveat.
+        # see the block comment's clustered-layout limit.
         small = [r for r in rows if r["n"] < AUTO_MIN_GROUP_SAMPLE]
         if small:
             nd, nn = sum(r["d"] for r in small), sum(r["n"] for r in small)
@@ -283,29 +254,14 @@ def _probe(
         if row2["lo"] is not None:
             lo, hi = min(lo, row2["lo"]), max(hi, row2["hi"])
     stats = ProbeStats(ratio < AUTO_DISTINCT_RATIO, ratio, lo, hi, groups)
-    if probe_key is not None:
-        _auto_memo[probe_key] = stats
+    _auto_memo[memo_key] = stats
     return stats
 
 
-def decide_pre_reduce(
-    clean: DataFrame,
-    group_cols: Sequence[str],
-    col: str,
-    probe_key: object = None,
-) -> bool:
-    """Resolve ``pre_reduce="auto"``: probe a bounded sample of ``clean``
-    for its distinct-value ratio (min per-group ratio when grouped — see
-    the block comment above) and return True iff the cardinality
-    pre-reduce pays. Memoized by ``probe_key`` (or semanticHash when the
-    caller has no stable key and the plan has no lazy checkpoint)."""
-    return _probe(clean, group_cols, col, probe_key)[0]
-
-
 def _auto_block_width(stats: ProbeStats, spark) -> float:
-    """Resolve ``block_width="auto"`` from the probe's value range: the
-    width that yields ~AUTO_BLOCKS_PER_PARTITION (group × block) CELLS
-    per configured shuffle partition (see the block comment above).
+    """The block width from the probe's value range: the width that
+    yields ~AUTO_BLOCKS_PER_PARTITION (group × block) CELLS per
+    configured shuffle partition (see the block comment above).
     Cells, not blocks: the window's sort parallelism unit is the
     (group, blk) partition, so a grouped input already multiplies the
     target by its group count — the per-group block count divides by it
@@ -319,13 +275,12 @@ def _auto_block_width(stats: ProbeStats, spark) -> float:
     is also what the data is."""
     if stats.lo is None or stats.hi is None or not stats.hi > stats.lo:
         return 1.0
-    try:
-        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" under some AQE setups
-        shuffle = 128
     target_cells = min(
         AUTO_TARGET_BLOCKS_CAP,
-        max(AUTO_TARGET_BLOCKS_MIN, AUTO_BLOCKS_PER_PARTITION * shuffle),
+        max(
+            AUTO_TARGET_BLOCKS_MIN,
+            AUTO_BLOCKS_PER_PARTITION * shuffle_partitions(spark),
+        ),
     )
     blocks = max(AUTO_MIN_BLOCKS_PER_GROUP, target_cells // max(1, stats.groups))
     return (stats.hi - stats.lo) / blocks
@@ -336,10 +291,8 @@ def distributed_grouped_quantiles(
     group_cols: Sequence[str],
     col: str,
     probs: Sequence[float],
-    block_width: float | str = 1000.0,
-    pre_reduce: bool | str = True,
-    probe_key: object = None,
-    expected_groups: int | None = None,
+    *,
+    probe_key: object,
     rank_parts: int = 0,
 ) -> DataFrame:
     """Per-group exact quantiles: one row per group with array<double>
@@ -354,49 +307,36 @@ def distributed_grouped_quantiles(
     of one buffer. The (group × block) size table and the
     (group × |probs|) target table stay broadcast-small.
 
-    ``block_width="auto"`` (r10) derives the width from the probe
-    sample's GLOBAL value range via :func:`_auto_block_width` (same
-    probe job as ``pre_reduce="auto"``; a group's block count scales
-    with its share of the global range).
+    The plan comes from one bounded probe of the input (see the block
+    comment above), memoized under ``probe_key`` — a key stable across
+    plan rebuilds, such as the query name plus sf_dir:
 
-    ``pre_reduce`` applies the same distinct-count lens as the ungrouped
-    helper (r9; bit-identical either way, pinned by tests), judged on
-    the PER-GROUP distinct ratio:
-
-    - ``"auto"`` (r10): probe the data and decide — min per-group
-      distinct ratio vs :data:`AUTO_DISTINCT_RATIO` (see
-      :func:`decide_pre_reduce`); pass ``probe_key`` so the eager probe
-      runs once per process, not once per plan build.
-    - ``True`` (default): reduce to per-group distinct-value counts
-      (g, x, c) first — right when values repeat within a group (event
-      types over integer scores, bucketed amounts).
-    - ``False``: rank raw rows (c = 1) straight into (group, block)
-      windows — one shuffle instead of two, no checkpoint
-      materialization. Right when a group's values are near-unique
-      (per-brand prices, per-user spend), where the groupBy shuffles the
-      full data for a few-percent reduction.
+    - the block width follows the sample's GLOBAL value range
+      (:func:`_auto_block_width`; a group's block count scales with its
+      share of the global range);
+    - the ranking branch follows the MIN per-group distinct ratio
+      against :data:`AUTO_DISTINCT_RATIO`. Below it, the input is first
+      reduced to per-group distinct-value counts (g, x, c) — right when
+      values repeat within a group (event types over integer scores,
+      bucketed amounts). Otherwise raw rows (c = 1) go straight into
+      (group, block) windows — one shuffle instead of two, no
+      checkpoint materialization — right when a group's values are
+      near-unique (per-brand prices, per-user spend), where the groupBy
+      would shuffle the full data for a few-percent reduction. Both
+      branches give the same bits (pinned by tests).
 
     Group keys must be non-null (they thread through equi-joins); rows
     with a null ``col`` value are excluded per group, like the builtin
     (NaN rows too — divergence, see the module docstring; a group whose
     values are ALL null/NaN yields no output row).
 
-    .. warning:: ``pre_reduce="auto"``'s probe samples a limit() PREFIX
-       of the input. If ``df``'s storage is clustered/partitioned BY THE
-       GROUP KEY, a group absent from the prefix is invisible to the
-       probe, and the decision biases to raw ranking — the slow (never
-       wrong: one spilling single-task sort per missed low-cardinality
-       group) direction. Callers with group-clustered input should pass
-       an explicit ``pre_reduce`` boolean instead of ``"auto"``. Pinned
-       by ``test_clustered_layout_probe_caveat`` in tests/test_quantiles.py.
-
-       ``expected_groups`` is the cheap runtime guard for that caveat
-       (VERDICT r11 Next #8): a caller that KNOWS its group cardinality
-       (e.g. 5 event types) declares it, and if the probe's sampled
-       group count comes in at under half of it — the clustered-prefix
-       signature — a ``UserWarning`` names the caveat and the escape
-       hatch. Advisory only: the decision still stands (it is perf-only
-       either way), so plans never fail on a layout change.
+    .. warning:: the probe samples a limit() PREFIX of the input. If
+       ``df``'s storage is clustered/partitioned BY THE GROUP KEY, a
+       group absent from the prefix is invisible to the probe, and the
+       decision biases to raw ranking — the slow (never wrong: one
+       spilling single-task sort per missed low-cardinality group)
+       direction. Pinned by ``test_clustered_layout_probe_caveat`` in
+       tests/test_quantiles.py.
     """
     spark = df.sparkSession
     g = list(group_cols)
@@ -410,28 +350,9 @@ def distributed_grouped_quantiles(
     clean = df.where(
         F.col(col).isNotNull() & ~F.isnan(F.col(col).cast("double"))
     )
-    if pre_reduce == "auto" or block_width == "auto":
-        stats = _probe(clean, g, col, probe_key)
-        if (
-            expected_groups is not None
-            and g
-            and stats.groups * 2 < expected_groups
-        ):
-            warnings.warn(
-                f"distributed_grouped_quantiles: probe sampled only "
-                f"{stats.groups} group(s) but the caller declared "
-                f"expected_groups={expected_groups} — the limit() prefix "
-                "sample is likely reading group-clustered storage and the "
-                "auto decision may miss low-cardinality groups (perf-only; "
-                "pass an explicit pre_reduce boolean to bypass the probe)",
-                UserWarning,
-                stacklevel=2,
-            )
-        if pre_reduce == "auto":
-            pre_reduce = stats.pre_reduce
-        if block_width == "auto":
-            block_width = _auto_block_width(stats, spark)
-    if pre_reduce:
+    stats = _probe(clean, g, col, probe_key)
+    block_width = _auto_block_width(stats, spark)
+    if stats.pre_reduce:
         counts = (
             clean.groupBy(*g, F.col(col).cast("double").alias("x"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -567,9 +488,8 @@ def distributed_quantiles(
     df: DataFrame,
     col: str,
     probs: Sequence[float],
-    block_width: float | str = 1000.0,
-    pre_reduce: bool | str = True,
-    probe_key: object = None,
+    *,
+    probe_key: object,
     rank_parts: int = 0,
 ) -> DataFrame:
     """Exact linear-interpolated quantiles of ``df[col]`` at ``probs``.
@@ -581,58 +501,37 @@ def distributed_quantiles(
     values. Nulls are excluded, matching the builtin; NaN is excluded
     too (divergence — see the module docstring).
 
-    ``block_width`` partitions the VALUE RANGE (not the rows): pick it
-    so (max-min)/block_width is 50-10000 blocks; correctness does not
-    depend on it. ``"auto"`` (r10) derives it from the probe sample's
-    range via :func:`_auto_block_width` — ~AUTO_BLOCKS_PER_PARTITION
-    blocks per configured shuffle partition, the measured sweet spot
-    (same probe job as ``pre_reduce="auto"``, so pass ``probe_key``).
+    The plan comes from one bounded probe memoized under ``probe_key``
+    (see the block comment above). The block width partitions the VALUE
+    RANGE (not the rows) into ~AUTO_BLOCKS_PER_PARTITION blocks per
+    configured shuffle partition, the measured sweet spot; correctness
+    does not depend on it. The distinct ratio prices the FIRST shuffle
+    against the column's duplication (r8):
 
-    ``pre_reduce`` prices the FIRST shuffle against the column's
-    duplication (r8; bit-identical either way, pinned by tests):
-
-    - ``"auto"`` (r10): probe the data and decide — distinct ratio of a
-      bounded sample vs :data:`AUTO_DISTINCT_RATIO` (see
-      :func:`decide_pre_reduce`); pass ``probe_key`` so the eager probe
-      runs once per process, not once per plan build.
-    - ``True`` (default): reduce to distinct-value counts (x, c) first —
-      the blocked-ranking window then sees CARDINALITY-many rows. The
-      right call when values repeat (event types, integer scores,
-      bucketed amounts): at 100 TB a low-cardinality column collapses
-      to a tiny relation before any window runs.
-    - ``False``: rank RAW rows (c = 1) straight into the value-range
+    - below :data:`AUTO_DISTINCT_RATIO`, reduce to distinct-value counts
+      (x, c) first — the blocked-ranking window then sees
+      CARDINALITY-many rows. At 100 TB a low-cardinality column
+      collapses to a tiny relation before any window runs.
+    - otherwise rank RAW rows (c = 1) straight into the value-range
       blocks — ONE shuffle (on blk) instead of two (groupBy x, then
-      blk), no checkpoint materialization. The right call when values
-      are near-unique (prices, revenues, microsecond latencies), where
-      the groupBy would shuffle the full data to "reduce" it by ~3%:
-      measured on q118's 97%-unique prices at sf0.1, cuts went
-      1.6-2.8s -> a tight 1.1s. Per-task memory is still block-bounded;
-      only the window INPUT is row-sized rather than cardinality-sized.
+      blk), no checkpoint materialization. Measured on q118's
+      97%-unique prices at sf0.1, cuts went 1.6-2.8s -> a tight 1.1s.
+      Per-task memory is still block-bounded; only the window INPUT is
+      row-sized rather than cardinality-sized.
 
-    .. warning:: ``pre_reduce="auto"``'s probe samples a limit() PREFIX
-       of the input: on storage sorted/clustered by value it sees only
-       the head of the distribution. Ungrouped, the consequence is a
-       possibly-misjudged distinct ratio and an under-estimated range
-       (both perf-only: wrong-branch is slower, never wrong; a short
-       range just yields more blocks past the target count). Callers
-       whose layout correlates with the probed column should pass an
-       explicit ``pre_reduce`` boolean.
+    .. warning:: the probe samples a limit() PREFIX of the input: on
+       storage sorted/clustered by value it sees only the head of the
+       distribution. The consequence is a possibly-misjudged distinct
+       ratio and an under-estimated range, both perf-only: the wrong
+       branch is slower, never wrong, and a short range just yields
+       more blocks past the target count.
 
     Since r11 this is a thin delegation to
     :func:`distributed_grouped_quantiles` with ``group_cols=[]`` — the
     ungrouped plan IS the grouped plan with empty window partitioning
     and the coverage predicate as the join condition (verified
-    bit-identical across every pre_reduce × block_width regime before
-    the collapse). The r6-r10 history of applying every fix twice —
-    NaN filter, pre_reduce branches, auto probe — ends here.
+    bit-identical across both ranking branches and silly block widths).
     """
     return distributed_grouped_quantiles(
-        df,
-        [],
-        col,
-        probs,
-        block_width=block_width,
-        pre_reduce=pre_reduce,
-        probe_key=probe_key,
-        rank_parts=rank_parts,
+        df, [], col, probs, probe_key=probe_key, rank_parts=rank_parts
     )

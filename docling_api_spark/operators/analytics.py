@@ -174,7 +174,7 @@ def q121_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three metrics stack into a (metric, v) relation and group by
     # metric): bit-identical to the three builtin `percentile` calls,
     # whose buffers each held the full customer dimension.
-    # pre_reduce="auto" resolves to TRUE here (r10 probe; r9 measured):
+    # The probe picks the cardinality pre-reduce here (r10; r9 measured):
     # f_orders is a small-int domain — the probe's MIN per-group
     # distinct ratio sees the 'f' metric at ~0.002 (sf0.1), far under
     # the 0.30 threshold, because raw-row ranking would land EVERY
@@ -194,8 +194,7 @@ def q121_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         " 'm', m_value) AS (metric, v)"
     )
     tc = distributed_grouped_quantiles(
-        mstack, ["metric"], "v", [1 / 3, 2 / 3], block_width="auto",
-        pre_reduce="auto", probe_key=f"q121:{sf_dir}",
+        mstack, ["metric"], "v", [1 / 3, 2 / 3], probe_key=f"q121:{sf_dir}",
     )
     cuts = tc.agg(
         F.max(F.when(F.col("metric") == "r", F.col("c"))).alias("rc"),
@@ -1025,7 +1024,7 @@ def q158_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer held a fifth of the table, the judge-flagged 100 TB soft spot.
     """
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # pre_reduce="auto" on both passes (r10): the probe reproduces the
+    # Raw-row ranking on both passes (r10): the probe reproduces the
     # r9 A/B call — values are ~46% distinct per type at sf0.1 and the
     # MAD input below is an explicit checkpoint, so raw-row ranking (one
     # shuffle per pass) measured 2.27s vs 2.84s end-to-end at sf0.1
@@ -1038,8 +1037,8 @@ def q158_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events table passes 0 and keeps AQE's byte-correct sizing.
     _rp = _scan_spread_parts(spark, f"{sf_dir}/events.parquet")
     med = distributed_grouped_quantiles(
-        ev, ["event_type"], "value", [0.5], block_width="auto",
-        pre_reduce="auto", probe_key=f"q158a:{sf_dir}", rank_parts=_rp,
+        ev, ["event_type"], "value", [0.5],
+        probe_key=f"q158a:{sf_dir}", rank_parts=_rp,
     ).select("event_type", F.col("c")[0].alias("med"))
     # lazy cut: the MAD aggregation and the outlier count both consume the
     # deviation relation; uncut, each re-derives the fact scan + median
@@ -1052,8 +1051,8 @@ def q158_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("value") - F.col("med")).alias("adev"),
     ).localCheckpoint(eager=False)
     mad = distributed_grouped_quantiles(
-        dev, ["event_type"], "adev", [0.5], block_width="auto",
-        pre_reduce="auto", probe_key=f"q158b:{sf_dir}", rank_parts=_rp,
+        dev, ["event_type"], "adev", [0.5],
+        probe_key=f"q158b:{sf_dir}", rank_parts=_rp,
     ).select("event_type", F.col("c")[0].alias("mad"))
     return (
         dev.join(F.broadcast(mad), "event_type")
@@ -1352,15 +1351,13 @@ def q162_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decile cuts via the blocked-rank distributed selection: acctbal is
     # a continuous value, so the builtin `percentile` buffer would hold
     # ~every customer — bit-identical, bounded
-    # pre_reduce="auto" (r10, probe reproduces r8): account balances are
+    # Raw-row ranking (r10, probe reproduces r8): account balances are
     # near-continuous — rank raw rows, one shuffle instead of a no-op
     # distinct-count reduce
     cuts = distributed_quantiles(
         pc.select("c_acctbal"),
         "c_acctbal",
         [float(p) for p in _DECILE_FRACS.split(", ")],
-        block_width="auto",
-        pre_reduce="auto",
         probe_key=f"q162:{sf_dir}",
     ).select(F.col("c").alias("qc"))
     dec = pc.join(F.broadcast(cuts)).select(
@@ -3360,7 +3357,7 @@ def q227_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-priority 0.9 residual quantile via the blocked-rank selection
     # (bit-identical to `percentile`); the builtin's per-group buffer held
     # every calibration residual of a priority — order-count-sized at
-    # 100 TB with only 5 groups. pre_reduce="auto" (r10): the probe
+    # 100 TB with only 5 groups. Raw-row ranking (r10): the probe
     # reproduces the r9 call — cent-scale residuals are near-unique per
     # priority and `resid` is already a checkpoint, so raw-row ranking
     # measured 1.77s vs 2.13s at sf0.1
@@ -3369,8 +3366,7 @@ def q227_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # folds onto ONE task; the pin keeps it at the spread width.
     # Single-file-gated: 0 on a production multi-file table.
     qh = distributed_grouped_quantiles(
-        resid, ["priority"], "r", [0.9], block_width="auto",
-        pre_reduce="auto", probe_key=f"q227:{sf_dir}",
+        resid, ["priority"], "r", [0.9], probe_key=f"q227:{sf_dir}",
         rank_parts=_scan_spread_parts(spark, f"{sf_dir}/lineitem.parquet"),
     ).select("priority", (F.col("c")[0] / 100.0).alias("qhat_dollars"))
     return (
@@ -4276,14 +4272,13 @@ def q241_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFram
     # ONE grouped blocked-rank selection computes all three taus for both
     # arms (bit-identical to `percentile`); the builtin's CASE-filtered
     # buffers each held an arm's entire per-user spend distribution —
-    # user-count-sized at 100 TB with two groups. pre_reduce="auto"
+    # user-count-sized at 100 TB with two groups. Raw-row ranking
     # (r10): the probe reproduces the r9 call — per-user spend is ~99%
     # distinct per arm, so the distinct-count pre-reduce re-shuffled
     # user-count-sized data for no reduction; the checkpoint above caps
     # the double scan at one materialization (1.08s vs 1.16s at sf0.1)
     qa = distributed_grouped_quantiles(
-        u, ["arm"], "y", [0.1, 0.5, 0.9], block_width="auto",
-        pre_reduce="auto", probe_key=f"q241:{sf_dir}",
+        u, ["arm"], "y", [0.1, 0.5, 0.9], probe_key=f"q241:{sf_dir}",
     ).localCheckpoint(eager=False)  # 2-row relation, read once per arm
     wide = (
         qa.where(F.col("arm") == 1)
@@ -6709,7 +6704,7 @@ def q297_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = o.select(F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"))
     # tail thresholds via the blocked-rank distributed selection: the
     # builtin's buffer held every order's cents — bit-identical, bounded
-    # pre_reduce="auto" (r10, probe reproduces r8): order totals in
+    # Raw-row ranking (r10, probe reproduces r8): order totals in
     # cents are near-unique — rank raw rows, one shuffle instead of a
     # no-op distinct-count reduce
     # rank_parts: pin the ranking-window exchange to the scan-spread
@@ -6719,8 +6714,7 @@ def q297_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-file production orders table passes 0, keeping AQE's
     # byte-correct sizing at scale.
     th = distributed_quantiles(
-        v, "c", [0.9, 0.95, 0.99], block_width="auto",
-        pre_reduce="auto", probe_key=f"q297:{sf_dir}",
+        v, "c", [0.9, 0.95, 0.99], probe_key=f"q297:{sf_dir}",
         rank_parts=_scan_spread_parts(spark, f"{sf_dir}/orders.parquet"),
     )
     pts = th.selectExpr(

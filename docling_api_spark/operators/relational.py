@@ -868,15 +868,14 @@ def q24_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per buffer. Bit-identical results (helper unit tests + this oracle).
     """
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # pre_reduce="auto" (r10): the distinct-ratio probe picks the branch
+    # The distinct-ratio probe (r10) picks the ranking branch
     # from the data — at sf0.1 it measures ~0.46 min per-type ratio and
     # reproduces the r9 A/B call (rank raw rows straight off the parquet
     # scan, one shuffle: 1.65s vs 1.95s end-to-end, best-of-3); at a
     # scale where the value domain saturates it flips to the
     # cardinality pre-reduce on its own
     med = distributed_grouped_quantiles(
-        ev, ["event_type"], "value", [0.5], block_width="auto",
-        pre_reduce="auto", probe_key=f"q24:{sf_dir}",
+        ev, ["event_type"], "value", [0.5], probe_key=f"q24:{sf_dir}",
     ).select("event_type", F.col("c")[0].alias("median_v"))
     return (
         ev.groupBy("event_type")
@@ -1038,7 +1037,7 @@ def q114_winsorized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-brand cuts via the blocked-rank distributed selection: the
     # builtin's per-brand buffer held every price of the brand (1/25th of
     # the fact table each) — bit-identical, bounded memory.
-    # pre_reduce="auto" (r10): the probe measures ~0.94 min per-brand
+    # Raw-row ranking (r10): the probe measures ~0.94 min per-brand
     # distinct ratio at sf0.1 and reproduces the r9 call — prices are
     # near-unique, so the distinct-count pre-reduce was a full-table
     # shuffle for a 3% reduction; raw-row ranking measured 2.39s vs
@@ -1049,8 +1048,7 @@ def q114_winsorized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh (the q118 precedent: past ~5 MB the pin only disables AQE's
     # byte-correct sizing).
     cuts = distributed_grouped_quantiles(
-        pb, ["p_brand"], "x", [0.05, 0.95], block_width="auto",
-        pre_reduce="auto", probe_key=f"q114:{sf_dir}",
+        pb, ["p_brand"], "x", [0.05, 0.95], probe_key=f"q114:{sf_dir}",
     ).select(
         "p_brand",
         F.col("c")[0].alias("p05"),
@@ -1126,12 +1124,12 @@ def q118_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom as q302:
 
       1. rank RAW rows straight into value-range blocks
-         (``pre_reduce=False``, r8): prices are ~97% unique, so the
+         (r8; the probe picks it since r10): prices are ~97% unique, so the
          former distinct-count groupBy shuffled the whole table to
          reduce it by 3% — now the ONLY data shuffle is the block
          partitioning (duplicate-heavy callers keep the cardinality
-         reduce via the default ``pre_reduce=True``);
-      2. within value-range blocks (width "auto", r10: the probe's
+         reduce, which the probe picks for them);
+      2. within value-range blocks (width from the probe, r10: the
          sampled price range over ~32 blocks per configured shuffle
          partition — sized by the cluster, not a hand constant): running
          count ordered by x → per-block rank; block totals + a prefix
@@ -1151,7 +1149,7 @@ def q118_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain hash aggregate.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # pre_reduce="auto" (r10): the probe reproduces the r8 call — prices
+    # Raw-row ranking (r10): the probe reproduces the r8 call — prices
     # are ~97% unique (583k distinct of 600k at sf0.1; probe ratio 1.0),
     # so the distinct-count groupBy would shuffle the whole table to
     # reduce it by 3% — raw-row ranking shuffles ONCE (r8: 1.6-2.8s
@@ -1160,8 +1158,6 @@ def q118_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         "l_extendedprice",
         [i / _EQD_BUCKETS for i in range(1, _EQD_BUCKETS)],
-        block_width="auto",
-        pre_reduce="auto",
         probe_key=f"q118:{sf_dir}",
     )
     return (

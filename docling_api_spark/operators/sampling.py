@@ -299,12 +299,11 @@ def q102_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_cust"),
         F.sum(dec("rev")).cast("double").alias("total"),
     )
-    # pre_reduce="auto" (r10, probe reproduces r8): summed revenues are
+    # Raw-row ranking (r10, probe reproduces r8): summed revenues are
     # near-unique doubles — rank raw rows, one shuffle instead of a
     # no-op distinct-count reduce
     tq = distributed_quantiles(
-        cust, "rev", [0.90, 0.99], block_width="auto",
-        pre_reduce="auto", probe_key=f"q102:{sf_dir}",
+        cust, "rev", [0.90, 0.99], probe_key=f"q102:{sf_dir}",
     )
     stats = base.join(F.broadcast(tq)).selectExpr(
         "n_cust", "total", "c[0] AS t90", "c[1] AS t99"

@@ -1912,58 +1912,14 @@ def q119_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q151_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running totals as a custom stateful streaming operator —
-    the stateful-processor class registered on whichever API the build
-    supports: transformWithStateInPandas (Spark-4 typed ValueState) when
-    its protobuf runner dependency is importable, else the
-    applyInPandasWithState twin (`streaming/stateful.py`), which has
-    identical per-batch semantics. tests/test_stateful_counter.py pins the
-    two paths against each other where both run.
+    applyInPandasWithState over two integers of state per user
+    (`streaming/stateful.py::running_counter_stream`).
 
-    State is two integers per user (cents integer-quantized exactly like
-    q115, so totals are order-independent and exact). The single-file
-    input lands in one micro-batch, so each user emits exactly one
-    snapshot == its batch aggregate, which is what the oracle computes.
-    Drains through the production parquet sink (streaming/jobs.py).
-    """
-    from docling_api_spark.streaming.jobs import drain_stream_to_parquet
-    from docling_api_spark.streaming.stateful import running_counter_stream_auto
-    from docling_api_spark.tables import events_stream
-
-    ev = events_stream(spark, sf_dir).select(
-        "user_id", F.round(F.col("value") * 100).cast("bigint").alias("cents")
-    )
-    return drain_stream_to_parquet(
-        running_counter_stream_auto(ev), prefix="q151_counter"
-    )
-
-
-# ---------------------------------------------------------------------------
-# q307 — transformWithState counter (registered only where protobuf exists)
-# ---------------------------------------------------------------------------
-def stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals via `transformWithStateInPandas` — the
-    Spark-4 stateful-processor API (typed ValueState, timers, TTL) that
-    supersedes q37's applyInPandasWithState.
-
-    CONDITIONALLY registered (r10, `q307_tws_counter`): the TWS Python
-    runner imports google.protobuf, so the registry entry is gated on
-    `streaming.stateful.tws_available()` — exactly the docling / Pillow
-    seam. In this container (no protobuf, no pip) the entry is absent
-    and the graded surface stays at 307 queries; wherever protobuf
-    exists the op registers, its end-to-end test unskips
-    (tests/test_stateful_counter.py), and the skip-seam test pins the
-    gate's direction. q37/q151 cover the graded
-    custom-stateful-streaming rows on the always-runnable API.
-
-    State is two integers per user (cents are integer-quantized exactly
-    like q115). The single-file input lands in one micro-batch, so each
-    user emits exactly one snapshot == its batch aggregate. Drains
-    through the production parquet sink; batch twin:
-
-        SELECT user_id, COUNT(*) AS n_events,
-               CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                 AS total_cents
-        FROM events GROUP BY user_id
+    Cents are integer-quantized exactly like q115, so totals are
+    order-independent and exact. The single-file input lands in one
+    micro-batch, so each user emits exactly one snapshot == its batch
+    aggregate, which is what the oracle computes. Drains through the
+    production parquet sink (streaming/jobs.py).
     """
     from docling_api_spark.streaming.jobs import drain_stream_to_parquet
     from docling_api_spark.streaming.stateful import running_counter_stream
@@ -1972,29 +1928,9 @@ def stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir).select(
         "user_id", F.round(F.col("value") * 100).cast("bigint").alias("cents")
     )
-    return drain_stream_to_parquet(running_counter_stream(ev), prefix="tws_counter")
-
-
-def _maybe_register_tws() -> None:
-    """Register q307 iff the TWS runner can start (import-gated seam)."""
-    from docling_api_spark.streaming.stateful import tws_available
-
-    if tws_available():
-        register(
-            "q307_tws_counter",
-            tags=("streaming", "stateful", "tws"),
-            oracle="""
-                SELECT user_id,
-                       COUNT(*) AS n_events,
-                       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                         AS total_cents
-                FROM events
-                GROUP BY user_id
-            """,
-        )(stateful_counter)
-
-
-_maybe_register_tws()
+    return drain_stream_to_parquet(
+        running_counter_stream(ev), prefix="q151_counter"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5826,9 +5762,10 @@ def q296_watermark_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lateness percentiles via the blocked-rank distributed selection:
     # late_us is near-continuous (microseconds), so the builtin
     # `percentile` buffer would hold ~every event — bit-identical, bounded
-    # pre_reduce="auto" (r10, probe reproduces r8): microsecond lateness
-    # is near-continuous — rank raw rows, one shuffle instead of a no-op
-    # distinct-count reduce
+    # The probe (r10) picks the ranking branch. The synthetic events
+    # arrive in order, so late_us is almost all 0 and at sf0.01 the
+    # probe picks the cardinality pre-reduce; near-continuous lateness
+    # would rank raw rows, one shuffle instead of a no-op reduce
     # rank_parts (r16, the q297 recipe): pin the ranking exchange to the
     # scan-spread width so AQE byte-coalescing can't serialize the ~1 MB
     # blocked ranking onto one task (profile: two serial single-task
@@ -5838,8 +5775,6 @@ def q296_watermark_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         lateness,
         "late_us",
         [0.5, 0.95, 0.99],
-        block_width="auto",
-        pre_reduce="auto",
         probe_key=f"q296:{sf_dir}",
         rank_parts=_scan_spread_parts(spark, f"{sf_dir}/events.parquet"),
     )

@@ -45,30 +45,17 @@ QUERIES: dict[str, Query] = {}
 # sweep a future q430 out of the plan audit; tests assert every listed
 # name exists in the registry.
 #
-# The r10 pre_reduce="auto" probe is the one sanctioned EXCEPTION to
+# The quantile helpers' probe (r10) is the one sanctioned EXCEPTION to
 # "plan-build runs no jobs": building a quantile caller launches ONE
 # bounded probe (a limit(100k) sample aggregate; where the probe input
 # is a lazy localCheckpoint, its materialization is shared with the
-# query's own first execution in the same build) and memoizes the
-# decision per (query, sf_dir). That is deliberately NOT grounds for
+# query's own first execution in the same build) and memoizes its
+# findings per (query, sf_dir). That is deliberately NOT grounds for
 # EXECUTING_QUERIES membership: this list exists for builds that run
 # the FULL query (or unbounded work), and sweeping the 11 quantile
 # callers out of the plan audit would cost exactly the coverage the
 # audit exists for. plan_report/test_global_plan_audit tolerate the
 # probe by construction (it completes in milliseconds at their scale).
-# Queries whose REGISTRATION depends on the environment (r10): q307
-# registers iff the transformWithState protobuf runner is importable
-# (operators/timeseries.py::_maybe_register_tws). Conditional names are
-# excluded from GRADED_FIRST (a static tuple cannot track an
-# environment-dependent surface), from the window policy
-# (tools/compose_window.py — the grading driver's container lacks
-# protobuf, so composing them into the window would grade a query that
-# does not exist there), and from the exact-coverage assertions in
-# tests/test_registry_order.py. all_queries() keeps unknown names at
-# the iteration tail, so a conditional entry can never displace a
-# window slot.
-CONDITIONAL_QUERIES: frozenset[str] = frozenset(("q307_tws_counter",))
-
 EXECUTING_QUERIES: frozenset[str] = frozenset((
     # streaming drains
     "q36_streaming_tumbling",
@@ -105,21 +92,6 @@ EXECUTING_QUERIES: frozenset[str] = frozenset((
     "q80_media_features",
     "q82_media_resize",
 ))
-
-
-def _conditional_executing() -> frozenset[str]:
-    """Streaming drains that exist only on some builds: q307 registers
-    iff the transformWithState runner's protobuf dependency is
-    importable (operators/timeseries.py::_maybe_register_tws), so it
-    joins the skip list on exactly those builds — the plan-audit subset
-    assertion (every EXECUTING name must be registered) holds on both
-    sides of the gate."""
-    from docling_api_spark.streaming.stateful import tws_available
-
-    return frozenset(("q307_tws_counter",)) if tws_available() else frozenset()
-
-
-EXECUTING_QUERIES |= _conditional_executing()
 
 
 def register(

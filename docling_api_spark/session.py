@@ -14,6 +14,8 @@ configs hold, plus dynamic allocation / executor sizing set by the deployer.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +27,9 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 _MAX_DRIVER_MEM_GIB = 24
 
+# set on a session once get_spark or prepare has configured it
+_PREPARED = "_docling_api_spark_prepared"
+
 
 def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -32,9 +37,8 @@ def _cpus() -> str:
 
 def runtime_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """The runtime SQL confs the engine's plans assume. `get_spark` builds
-    its session with them; `__spark_entry__._prepare` sets them on a
-    session someone else built. Shuffle partitions default to one per
-    core (SPARK_GRAFT_CPUS)."""
+    its session with them; `prepare` sets them on a session someone else
+    built. Shuffle partitions default to one per core (SPARK_GRAFT_CPUS)."""
     if shuffle_partitions is None:
         shuffle_partitions = int(_cpus())
     return {
@@ -107,7 +111,55 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
+    setattr(spark, _PREPARED, True)
     return spark
+
+
+def prepare(spark: SparkSession) -> SparkSession:
+    """Set the engine's runtime confs on a session someone else built (it
+    may have none of them: without nanosAsLong every events query fails on
+    the parquet TIMESTAMP(NANOS) column) and ship the package. A session
+    that `get_spark` built, or that was prepared before, is left as it
+    is, so its shuffle width does not depend on who called first."""
+    if getattr(spark, _PREPARED, False):
+        return spark
+    for k, v in runtime_confs().items():
+        try:
+            spark.conf.set(k, v)
+        except Exception:
+            pass  # static conf on a live session — keep going
+    try:
+        _ship_package(spark)
+    except Exception:
+        pass  # workers sharing the driver's path still work
+    setattr(spark, _PREPARED, True)
+    return spark
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make docling_api_spark importable on executor Python workers, once
+    per SparkContext.
+
+    Queries that use pandas UDFs / mapInPandas pickle closures referencing
+    the package; workers spawned with a different cwd (the driver's) can't
+    import it. addPyFile distributes a zip of the package to every
+    worker's sys.path.
+    """
+    sc = spark.sparkContext
+    if getattr(sc, "_docling_api_spark_shipped", False):
+        return
+    zip_base = os.path.join(
+        tempfile.mkdtemp(prefix="docling_api_spark_pkg_"), "docling_api_spark_pkg"
+    )
+    zip_path = shutil.make_archive(
+        zip_base,
+        "zip",
+        root_dir=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        base_dir="docling_api_spark",
+    )
+    sc.addPyFile(zip_path)
+    sc._docling_api_spark_shipped = True
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

@@ -91,7 +91,7 @@ def sessionize_stream(events_stream: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas: the Spark-4 native stateful-processor API
+# running per-user counter (q151)
 # ---------------------------------------------------------------------------
 COUNTER_OUTPUT_SCHEMA = T.StructType(
     [
@@ -111,8 +111,8 @@ COUNTER_STATE_SCHEMA = T.StructType(
 
 
 def _counter_group(key, pdf_iter, state: GroupState):
-    """applyInPandasWithState twin of the RunningCounter processor: same
-    two-integer state, same one-snapshot-per-batch emission."""
+    """Fold one micro-batch of a user's rows into the two-integer state
+    and emit one snapshot of the running totals."""
     import pandas as pd
 
     (user_id,) = key
@@ -126,107 +126,13 @@ def _counter_group(key, pdf_iter, state: GroupState):
     )
 
 
-def running_counter_stream_fallback(events_stream: DataFrame) -> DataFrame:
-    """Per-user running totals via applyInPandasWithState — identical
-    semantics to `running_counter_stream` on the API every Spark build
-    ships (no protobuf dependency, HDFS-backed state store is fine)."""
+def running_counter_stream(events_stream: DataFrame) -> DataFrame:
+    """events stream with (user_id, cents) → per-user running totals via
+    applyInPandasWithState: one snapshot per user per micro-batch."""
     return events_stream.groupBy("user_id").applyInPandasWithState(
         _counter_group,
         COUNTER_OUTPUT_SCHEMA,
         COUNTER_STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def tws_available() -> bool:
-    """True when the transformWithStateInPandas Python runner can start —
-    it hard-requires google.protobuf, which this container does not ship.
-    The same import-gating contract as the docling / Pillow seams
-    (pipeline/convert.py, operators/multimodal.py): the real API runs
-    wherever the dep exists, the applyInPandasWithState twin is the
-    fallback, and the q307 registry entry appears only where runnable.
-
-    A REAL import, not find_spec: a present-but-broken install (partial
-    wheel, missing C extension) has a spec but fails to execute — the
-    gate must select the fallback there, not register an op that dies at
-    its first micro-batch. The broad except is deliberate for the same
-    reason (C-extension import failures are not always ImportError)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def running_counter_stream_auto(events_stream: DataFrame) -> DataFrame:
-    """Prefer the Spark-4 stateful-processor API (typed state, timers,
-    TTL); fall back to applyInPandasWithState where the TWS Python runner's
-    protobuf dependency is absent. Both paths produce identical output for
-    the same input batches, so the selection is an implementation detail —
-    exactly the DoclingConverter-selection pattern (pipeline/convert.py)."""
-    if tws_available():
-        return running_counter_stream(events_stream)
-    return running_counter_stream_fallback(events_stream)
-
-
-def _make_counter_processor():
-    """Running per-user counter as a StatefulProcessor (ValueState holding
-    two integers, updated per micro-batch, snapshot emitted each batch).
-
-    Defined inside a factory so importing this module never requires the
-    transformWithState machinery (Spark >= 4.0) at import time.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningCounter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            state_schema = T.StructType(
-                [
-                    T.StructField("n_events", T.LongType()),
-                    T.StructField("total_cents", T.LongType()),
-                ]
-            )
-            self._state = handle.getValueState("counter", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, cents = (self._state.get() or (0, 0)) if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            self._state.update((n, cents))
-            (user_id,) = key
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n], "total_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningCounter()
-
-
-def running_counter_stream(events_stream: DataFrame) -> DataFrame:
-    """events stream with (user_id, cents) → per-user running totals via
-    transformWithStateInPandas (arbitrary typed state, the API that
-    supersedes applyInPandasWithState in Spark 4).
-
-    transformWithState only runs on the RocksDB state store; pin the
-    provider before the query starts (HDFS-backed is the default)."""
-    events_stream.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_counter_processor(),
-        outputStructType=COUNTER_OUTPUT_SCHEMA,
-        outputMode="Append",  # file sinks are append-only; single-batch
-        # inputs emit each user exactly once, so Append == final totals
-        timeMode="None",
     )

@@ -126,15 +126,10 @@ def load_table(
     work is cheap and whose payload should never cross an exchange (e.g.
     q104: per-doc digests in the scan stage, only (id, digest) pairs may
     shuffle — the spread exchange would move the full text)."""
-    try:
-        # Unannotated parquet timestamps (isAdjustedToUTC=false) should read
-        # as TIMESTAMP (UTC instant), matching the DuckDB oracle's naive
-        # micros — Spark 4's NTZ inference would otherwise leak
-        # TIMESTAMP_NTZ into every downstream plan (unix_micros etc. reject
-        # it). Runtime-settable, so this also covers the driver's session.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass  # unknown conf on some future version — fallback below
+    # Unannotated parquet timestamps (isAdjustedToUTC=false) read as
+    # TIMESTAMP (UTC instant), matching the DuckDB oracle's naive micros:
+    # session.runtime_confs() turns Spark 4's NTZ inference off. Any
+    # TIMESTAMP_NTZ column that still appears is converted below.
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # parquet TIMESTAMP(NANOS) read as raw ns longs
@@ -163,10 +158,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     different times, and a readStream schema baked for one encoding
     silently corrupts (ns→µs div on µs values) or fails on the others.
     """
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
     src = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(src)

@@ -2,17 +2,55 @@
 builtin exact `percentile` aggregate — on a double fact column, an
 integer key column (exercising the up-front double cast), probs hitting
 integral positions (0.0, 1.0, and whatever 0.5 lands on), nulls, and a
-deliberately silly block width (correctness must not depend on it)."""
+deliberately silly block width (correctness must not depend on it).
+
+The helpers take their plan from the probe only; a test that needs a
+particular ranking branch or block width forces it with `_forced`,
+which patches the probe's decision and the width function."""
 
 from __future__ import annotations
+
+import contextlib
+import dataclasses
+import itertools
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
+from docling_api_spark.functions import quantiles as Q
 from docling_api_spark.functions.quantiles import distributed_quantiles
 from docling_api_spark.tables import load_table
 
 PROBS = [0.0, 0.05, 0.25, 0.5, 0.62, 0.75, 0.95, 1.0]
+
+_KEYS = itertools.count()
+
+
+def _key() -> str:
+    """A fresh probe_key. The memo stores each probe's findings under its
+    key, so no case may reuse a key another case probed with."""
+    return f"test:quantiles:{next(_KEYS)}"
+
+
+def _forced(pre_reduce: bool | None = None, block_width: float | None = None):
+    """Pin the plan the data would otherwise pick. ``pre_reduce`` replaces
+    the probe's branch decision (the real probe still runs, so the
+    block width stays the data's); ``block_width`` replaces the width.
+    None leaves that choice to the probe."""
+    stack = contextlib.ExitStack()
+    if pre_reduce is not None:
+        probe = Q._probe
+
+        def forced_probe(*args):
+            return dataclasses.replace(probe(*args), pre_reduce=pre_reduce)
+
+        stack.enter_context(mock.patch.object(Q, "_probe", forced_probe))
+    if block_width is not None:
+        stack.enter_context(
+            mock.patch.object(Q, "_auto_block_width", return_value=block_width)
+        )
+    return stack
 
 
 def _builtin(df, col):
@@ -33,7 +71,8 @@ def _builtin(df, col):
 )
 def test_bit_identical_to_builtin(spark, sf_dir, table, col, block):
     df = load_table(spark, sf_dir, table)
-    got = distributed_quantiles(df, col, PROBS, block_width=block).collect()[0].c
+    with _forced(pre_reduce=True, block_width=block):
+        got = distributed_quantiles(df, col, PROBS, probe_key=_key()).collect()[0].c
     want = _builtin(df.select(F.col(col).cast("double").alias(col)), col)
     assert [repr(g) for g in got] == [repr(w) for w in want]
 
@@ -46,14 +85,13 @@ def test_bit_identical_to_builtin(spark, sf_dir, table, col, block):
     ],
 )
 def test_raw_row_ranking_bit_identical(spark, sf_dir, table, col, block):
-    """pre_reduce=False (rank raw rows, one shuffle) must produce the
-    same bits as the default distinct-count path AND the builtin —
+    """The raw-row branch (one shuffle) must produce the same bits as
+    the distinct-count branch AND the builtin —
     including under heavy ties, where position assignment among equal
     values is arbitrary but every such position holds the same value."""
     df = load_table(spark, sf_dir, table)
-    raw = distributed_quantiles(
-        df, col, PROBS, block_width=block, pre_reduce=False
-    ).collect()[0].c
+    with _forced(pre_reduce=False, block_width=block):
+        raw = distributed_quantiles(df, col, PROBS, probe_key=_key()).collect()[0].c
     want = _builtin(df.select(F.col(col).cast("double").alias(col)), col)
     assert [repr(g) for g in raw] == [repr(w) for w in want]
 
@@ -62,9 +100,10 @@ def test_raw_row_ranking_excludes_nulls_and_nans(spark):
     df = spark.createDataFrame(
         [(1.0,), (None,), (2.0,), (float("nan"),), (3.0,)], "v double"
     )
-    got = distributed_quantiles(
-        df, "v", [0.0, 0.5, 1.0], block_width=10.0, pre_reduce=False
-    ).collect()[0].c
+    with _forced(pre_reduce=False, block_width=10.0):
+        got = distributed_quantiles(
+            df, "v", [0.0, 0.5, 1.0], probe_key=_key()
+        ).collect()[0].c
     assert got == [1.0, 2.0, 3.0]
 
 
@@ -72,7 +111,8 @@ def test_nulls_excluded_like_builtin(spark):
     df = spark.createDataFrame(
         [(1.0,), (None,), (2.0,), (None,), (10.0,)], "v double"
     )
-    got = distributed_quantiles(df, "v", PROBS, block_width=5.0).collect()[0].c
+    with _forced(pre_reduce=True, block_width=5.0):
+        got = distributed_quantiles(df, "v", PROBS, probe_key=_key()).collect()[0].c
     want = _builtin(df, "v")
     assert [repr(g) for g in got] == [repr(w) for w in want]
 
@@ -87,7 +127,8 @@ def test_nan_excluded_with_documented_semantics(spark):
         [(1.0,), (float("nan"),), (2.0,), (float("nan"),), (None,), (10.0,)],
         "v double",
     )
-    got = distributed_quantiles(df, "v", PROBS, block_width=5.0).collect()[0].c
+    with _forced(pre_reduce=True, block_width=5.0):
+        got = distributed_quantiles(df, "v", PROBS, probe_key=_key()).collect()[0].c
     want = _builtin(df.where(~F.isnan("v")), "v")
     assert [repr(g) for g in got] == [repr(w) for w in want]
     assert not any(repr(g) == "nan" for g in got)
@@ -106,12 +147,13 @@ def test_grouped_nan_and_all_null_groups(spark, pre_reduce):
         [("a", 1.0), ("a", nan), ("a", 3.0), ("b", nan), ("b", None), ("c", 5.0)],
         "g string, v double",
     )
-    rows = {
-        r.g: [repr(v) for v in r.c]
-        for r in distributed_grouped_quantiles(
-            df, ["g"], "v", PROBS, block_width=2.0, pre_reduce=pre_reduce
-        ).collect()
-    }
+    with _forced(pre_reduce=pre_reduce, block_width=2.0):
+        rows = {
+            r.g: [repr(v) for v in r.c]
+            for r in distributed_grouped_quantiles(
+                df, ["g"], "v", PROBS, probe_key=_key()
+            ).collect()
+        }
     assert set(rows) == {"a", "c"}  # b (all null/NaN) dropped, as documented
     want_a = _builtin(
         df.where((F.col("g") == "a") & ~F.isnan("v")), "v"
@@ -141,12 +183,13 @@ def test_grouped_bit_identical_to_builtin(
     from docling_api_spark.functions.quantiles import distributed_grouped_quantiles
 
     df = load_table(spark, sf_dir, table)
-    got = {
-        tuple(r)[0]: [repr(v) for v in r.c]
-        for r in distributed_grouped_quantiles(
-            df, [grp], col, PROBS, block_width=block, pre_reduce=pre_reduce
-        ).collect()
-    }
+    with _forced(pre_reduce=pre_reduce, block_width=block):
+        got = {
+            tuple(r)[0]: [repr(v) for v in r.c]
+            for r in distributed_grouped_quantiles(
+                df, [grp], col, PROBS, probe_key=_key()
+            ).collect()
+        }
     want = {
         tuple(r)[0]: [repr(v) for v in r.c]
         for r in df.select(grp, F.col(col).cast("double").alias(col))
@@ -161,25 +204,21 @@ def test_grouped_bit_identical_to_builtin(
     assert got == want
 
 
-# --- pre_reduce="auto": the r10 distinct-ratio probe -----------------------
+# --- the r10 distinct-ratio probe picks the branch -------------------------
 
 
 def test_auto_decision_near_unique_picks_raw(spark):
     """Near-unique values (every row distinct) must resolve to the
     raw-row ranking branch (pre_reduce False)."""
-    from docling_api_spark.functions.quantiles import decide_pre_reduce
-
     df = spark.range(2000).selectExpr("CAST(id AS DOUBLE) + 0.5 AS v")
-    assert decide_pre_reduce(df, [], "v") is False
+    assert Q._probe(df, [], "v", _key()).pre_reduce is False
 
 
 def test_auto_decision_small_domain_picks_pre_reduce(spark):
     """A saturated small-int domain must resolve to the cardinality
     pre-reduce (pre_reduce True)."""
-    from docling_api_spark.functions.quantiles import decide_pre_reduce
-
     df = spark.range(2000).selectExpr("CAST(id % 7 AS DOUBLE) AS v")
-    assert decide_pre_reduce(df, [], "v") is True
+    assert Q._probe(df, [], "v", _key()).pre_reduce is True
 
 
 def test_auto_grouped_judges_min_per_group_ratio(spark):
@@ -188,16 +227,14 @@ def test_auto_grouped_judges_min_per_group_ratio(spark):
     must judge the MIN per-group ratio — the tiny-domain group is the
     one that funnels into a single (group, blk) window partition under
     raw ranking — and pick the pre-reduce."""
-    from docling_api_spark.functions.quantiles import decide_pre_reduce
-
     df = spark.range(4000).selectExpr(
         "CASE WHEN id % 2 = 0 THEN 'm' ELSE 'f' END AS g",
         "CASE WHEN id % 2 = 0 THEN CAST(id AS DOUBLE) + 0.25"
         " ELSE CAST(id % 5 AS DOUBLE) END AS v",
     )
-    assert decide_pre_reduce(df, ["g"], "v") is True
+    assert Q._probe(df, ["g"], "v", _key()).pre_reduce is True
     # and with the tiny-domain group removed, the same data picks raw
-    assert decide_pre_reduce(df.where("g = 'm'"), ["g"], "v") is False
+    assert Q._probe(df.where("g = 'm'"), ["g"], "v", _key()).pre_reduce is False
 
 
 def test_auto_memoizes_by_probe_key(spark):
@@ -205,19 +242,18 @@ def test_auto_memoizes_by_probe_key(spark):
     call must not re-probe (bench times plan builds, so rebuild N must
     be a dict hit). Verified by poisoning the memo and observing the
     poisoned decision come back without a job."""
-    from docling_api_spark.functions import quantiles as Q
-
     df = spark.range(500).selectExpr("CAST(id AS DOUBLE) AS v")
     key = "test:memo:poison"
     # the memo folds (col, group_cols) into the caller's key (r10
     # advisor): a reused probe_key must never cross-contaminate columns
     memo_key = (key, "v", ())
     Q._auto_memo.pop(memo_key, None)
-    assert Q.decide_pre_reduce(df, [], "v", probe_key=key) is False
-    assert memo_key in Q._auto_memo and Q._auto_memo[memo_key][0] is False
+    assert Q._probe(df, [], "v", key).pre_reduce is False
+    assert memo_key in Q._auto_memo
+    assert Q._auto_memo[memo_key].pre_reduce is False
     # poison: a re-probe would say False
     Q._auto_memo[memo_key] = Q.ProbeStats(True, 0.0)
-    assert Q.decide_pre_reduce(df, [], "v", probe_key=key) is True
+    assert Q._probe(df, [], "v", key).pre_reduce is True
     Q._auto_memo.pop(memo_key, None)
 
 
@@ -226,8 +262,6 @@ def test_memo_key_collision_does_not_cross_columns(spark):
     (wrongly) share one probe_key string but probe DIFFERENT columns
     must get independent decisions — the near-unique column stays raw
     even after the tiny-domain column memoized under the same key."""
-    from docling_api_spark.functions import quantiles as Q
-
     df = spark.range(2000).selectExpr(
         "CAST(id AS DOUBLE) AS unique_v",
         "CAST(id % 3 AS DOUBLE) AS tiny_v",
@@ -235,14 +269,14 @@ def test_memo_key_collision_does_not_cross_columns(spark):
     key = "test:memo:shared-key"
     for c in ("unique_v", "tiny_v"):
         Q._auto_memo.pop((key, c, ()), None)
-    assert Q.decide_pre_reduce(df, [], "tiny_v", probe_key=key) is True
+    assert Q._probe(df, [], "tiny_v", key).pre_reduce is True
     # same caller key, different column: must re-probe, not reuse
-    assert Q.decide_pre_reduce(df, [], "unique_v", probe_key=key) is False
+    assert Q._probe(df, [], "unique_v", key).pre_reduce is False
     # and grouped-vs-ungrouped under one key stay independent too
     g = spark.range(2000).selectExpr(
         "CAST(id % 2 AS STRING) AS g", "CAST(id AS DOUBLE) AS unique_v"
     )
-    assert Q.decide_pre_reduce(g, ["g"], "unique_v", probe_key=key) is False
+    assert Q._probe(g, ["g"], "unique_v", key).pre_reduce is False
     assert (key, "unique_v", ("g",)) in Q._auto_memo
     for c in ("unique_v", "tiny_v"):
         Q._auto_memo.pop((key, c, ()), None)
@@ -255,13 +289,11 @@ def test_auto_reproduces_caller_decisions_on_testdata(spark, sf_dir):
     pinned here at the test scale): q118's near-unique prices -> raw;
     q24's per-type event values -> raw; the q121 metric stack (small-int
     f beside near-unique m) -> pre-reduce via the min-per-group ratio."""
-    from docling_api_spark.functions.quantiles import decide_pre_reduce
-
     li = load_table(spark, sf_dir, "lineitem")
-    assert decide_pre_reduce(li, [], "l_extendedprice") is False
+    assert Q._probe(li, [], "l_extendedprice", _key()).pre_reduce is False
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    assert decide_pre_reduce(ev, ["event_type"], "value") is False
+    assert Q._probe(ev, ["event_type"], "value", _key()).pre_reduce is False
 
     orders = load_table(spark, sf_dir, "orders")
     base = orders.groupBy("o_custkey").agg(
@@ -271,16 +303,17 @@ def test_auto_reproduces_caller_decisions_on_testdata(spark, sf_dir):
     mstack = base.selectExpr(
         "stack(2, 'f', CAST(f_orders AS DOUBLE), 'm', m_value) AS (metric, v)"
     )
-    assert decide_pre_reduce(mstack, ["metric"], "v") is True
+    assert Q._probe(mstack, ["metric"], "v", _key()).pre_reduce is True
 
 
 def test_auto_end_to_end_bit_identical(spark, sf_dir):
-    """pre_reduce="auto" must produce the same bits as both explicit
-    branches (it only ever RESOLVES to one of them)."""
+    """The probe's own branch must produce the builtin's bits (it only
+    ever RESOLVES to one of the two pinned branches)."""
     df = load_table(spark, sf_dir, "lineitem")
-    auto = distributed_quantiles(
-        df, "l_extendedprice", PROBS, block_width=1000.0, pre_reduce="auto"
-    ).collect()[0].c
+    with _forced(block_width=1000.0):
+        auto = distributed_quantiles(
+            df, "l_extendedprice", PROBS, probe_key=_key()
+        ).collect()[0].c
     want = _builtin(
         df.select(F.col("l_extendedprice").cast("double").alias("v")), "v"
     )
@@ -288,11 +321,10 @@ def test_auto_end_to_end_bit_identical(spark, sf_dir):
 
 
 def test_auto_block_width_scales_with_parallelism_and_groups(spark):
-    """block_width="auto": width = range / blocks where blocks targets
-    ~AUTO_BLOCKS_PER_PARTITION (group x block) cells per configured
-    shuffle partition, divided by the sampled group count (floored)."""
-    from docling_api_spark.functions import quantiles as Q
-
+    """The probe's block width: width = range / blocks where blocks
+    targets ~AUTO_BLOCKS_PER_PARTITION (group x block) cells per
+    configured shuffle partition, divided by the sampled group count
+    (floored)."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cells = min(
         Q.AUTO_TARGET_BLOCKS_CAP,
@@ -315,15 +347,15 @@ def test_auto_block_width_scales_with_parallelism_and_groups(spark):
 
 
 def test_auto_block_width_end_to_end_bit_identical(spark, sf_dir):
-    """block_width="auto" only moves the parallelism/size trade — the
-    cuts must still match the builtin bit-for-bit (both helpers)."""
+    """The probe's block width only moves the parallelism/size trade —
+    the cuts must still match the builtin bit-for-bit (both helpers)."""
     from docling_api_spark.functions.quantiles import (
         distributed_grouped_quantiles,
     )
 
     df = load_table(spark, sf_dir, "lineitem")
     auto = distributed_quantiles(
-        df, "l_extendedprice", PROBS, block_width="auto", pre_reduce="auto"
+        df, "l_extendedprice", PROBS, probe_key=_key()
     ).collect()[0].c
     want = _builtin(
         df.select(F.col("l_extendedprice").cast("double").alias("v")), "v"
@@ -334,8 +366,7 @@ def test_auto_block_width_end_to_end_bit_identical(spark, sf_dir):
     got = {
         tuple(r)[0]: [repr(v) for v in r.c]
         for r in distributed_grouped_quantiles(
-            ev, ["event_type"], "value", PROBS,
-            block_width="auto", pre_reduce="auto",
+            ev, ["event_type"], "value", PROBS, probe_key=_key()
         ).collect()
     }
     want_g = {
@@ -358,12 +389,10 @@ def test_auto_flips_branches_as_the_domain_saturates(spark):
     volume — raw-row ranking — and saturated at large volume — the probe
     flips to the cardinality pre-reduce with no code or constant change.
     A hand-measured boolean can only ever encode one of these."""
-    from docling_api_spark.functions.quantiles import decide_pre_reduce
-
     small = spark.range(1500).selectExpr("CAST(id % 1000 AS DOUBLE) AS v")
     big = spark.range(60_000).selectExpr("CAST(id % 1000 AS DOUBLE) AS v")
-    assert decide_pre_reduce(small, [], "v") is False  # ratio ~0.67
-    assert decide_pre_reduce(big, [], "v") is True  # ratio ~0.017
+    assert Q._probe(small, [], "v", _key()).pre_reduce is False  # ratio ~0.67
+    assert Q._probe(big, [], "v", _key()).pre_reduce is True  # ratio ~0.017
 
 
 def test_probe_decisions_pinned_for_every_auto_caller(spark):
@@ -372,7 +401,6 @@ def test_probe_decisions_pinned_for_every_auto_caller(spark):
     a future edit to the probe (threshold, sampling, grouping statistic)
     cannot silently flip a measured decision. Build-only: plans are
     constructed (probes fire eagerly), never executed."""
-    from docling_api_spark.functions import quantiles as Q
     from docling_api_spark.plans import all_queries
 
     sf01 = "/root/testdata/sf0.01"
@@ -419,19 +447,17 @@ def test_flat_sample_triggers_second_chance_range_probe(spark):
     probe scans past the constant and sizes the width from the real
     spread; a TRULY constant column keeps the degenerate 1.0 width —
     one occupied block, which is also what the data is."""
-    from docling_api_spark.functions import quantiles as Q
-
     # zero-dominated head, spread tail (monotonic id keeps the zeros first)
     df = spark.range(200_000).selectExpr(
         "CASE WHEN id < 150000 THEN 0.0"
         " ELSE CAST((id - 150000) * 2048 AS DOUBLE) END AS v"
     ).coalesce(1)
-    st = Q._probe(df, [], "v")
+    st = Q._probe(df, [], "v", _key())
     assert st.lo == 0.0 and st.hi == (200_000 - 150_000 - 1) * 2048.0
     assert Q._auto_block_width(st, spark) > 1.0
 
     flat = spark.range(5000).selectExpr("7.5 AS v")
-    st2 = Q._probe(flat, [], "v")
+    st2 = Q._probe(flat, [], "v", _key())
     assert st2.lo == st2.hi == 7.5
     assert Q._auto_block_width(st2, spark) == 1.0
 
@@ -441,8 +467,9 @@ def test_randomized_shapes_bit_identical(spark, seed):
     """Seeded adversarial shapes the table-backed tests don't cover:
     negative values (floor(x/width) must round toward -inf), mixtures of
     heavy ties and near-unique tails, values straddling block
-    boundaries, and magnitudes far from the block width — all three
-    pre_reduce modes must match the builtin bit-for-bit."""
+    boundaries, and magnitudes far from the block width — both forced
+    branches and the probe's own pick must match the builtin
+    bit-for-bit."""
     import random
 
     rng = random.Random(seed)
@@ -456,10 +483,11 @@ def test_randomized_shapes_bit_identical(spark, seed):
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     probs = sorted(rng.uniform(0.0, 1.0) for _ in range(5)) + [0.0, 1.0]
     want = _builtin_probs(df, "v", probs)
-    for mode in (True, False, "auto"):
-        got = distributed_quantiles(
-            df, "v", probs, block_width=25.0, pre_reduce=mode
-        ).collect()[0].c
+    for mode in (True, False, None):
+        with _forced(pre_reduce=mode, block_width=25.0):
+            got = distributed_quantiles(
+                df, "v", probs, probe_key=_key()
+            ).collect()[0].c
         assert [repr(g) for g in got] == [repr(w) for w in want], mode
     # grouped: interleave a tie-heavy and a near-unique group
     gdf = spark.createDataFrame(
@@ -479,13 +507,14 @@ def test_randomized_shapes_bit_identical(spark, seed):
             ).alias("c")
         ).collect()
     }
-    for mode in (True, False, "auto"):
-        got_g = {
-            r.g: [repr(v) for v in r.c]
-            for r in distributed_grouped_quantiles(
-                gdf, ["g"], "v", probs, block_width="auto", pre_reduce=mode
-            ).collect()
-        }
+    for mode in (True, False, None):
+        with _forced(pre_reduce=mode):
+            got_g = {
+                r.g: [repr(v) for v in r.c]
+                for r in distributed_grouped_quantiles(
+                    gdf, ["g"], "v", probs, probe_key=_key()
+                ).collect()
+            }
         assert got_g == want_g, mode
 
 
@@ -507,7 +536,6 @@ def test_clustered_layout_probe_caveat(spark, tmp_path):
     window partition for the missed group), NEVER wrong — the grouped
     result must still be bit-identical to the builtin. This test turns
     the module block comment's honest caveat into a pinned contract."""
-    from docling_api_spark.functions import quantiles as Q
     from docling_api_spark.functions.quantiles import (
         distributed_grouped_quantiles,
     )
@@ -528,11 +556,11 @@ def test_clustered_layout_probe_caveat(spark, tmp_path):
     # 1) the blind spot happens: the prefix probe saw ONE group and
     #    chose raw — even though group 'z' alone (ratio 1e-4) would
     #    demand the pre-reduce.
-    stats = Q._probe(back, ["g"], "v")
+    stats = Q._probe(back, ["g"], "v", _key())
     assert stats.groups == 1, "prefix unexpectedly reached group 'z'"
     assert stats.pre_reduce is False
     # ground truth at full scan: the funnel group IS pre-reduce-worthy
-    assert Q.decide_pre_reduce(back.where("g = 'z'"), ["g"], "v") is True
+    assert Q._probe(back.where("g = 'z'"), ["g"], "v", _key()).pre_reduce is True
 
     # 2) the consequence is bounded: the raw branch is slow-never-wrong
     probs = [0.0, 0.25, 0.5, 0.9, 1.0]
@@ -547,38 +575,10 @@ def test_clustered_layout_probe_caveat(spark, tmp_path):
     got = {
         r.g: [repr(v) for v in r.c]
         for r in distributed_grouped_quantiles(
-            back, ["g"], "v", probs, block_width="auto", pre_reduce="auto"
+            back, ["g"], "v", probs, probe_key=_key()
         ).collect()
     }
     assert got == want
-
-
-def test_expected_groups_guard_warns_on_undersampled_probe(spark):
-    """VERDICT r11 Next #8: a caller that declares its group cardinality
-    gets a UserWarning when the probe's prefix sample saw under half of
-    it (the clustered-layout signature). Advisory only — the plan still
-    builds and the result is unchanged."""
-    import warnings as W_
-
-    from docling_api_spark.functions.quantiles import (
-        distributed_grouped_quantiles,
-    )
-
-    df = spark.range(500).selectExpr(
-        "'only' AS g", "CAST(id AS DOUBLE) AS v"
-    )
-    with pytest.warns(UserWarning, match="expected_groups=5"):
-        out = distributed_grouped_quantiles(
-            df, ["g"], "v", [0.5], pre_reduce="auto", expected_groups=5
-        ).collect()
-    assert [repr(v) for v in out[0]["c"]] == [repr(249.5)]
-
-    # expectation met (1 sampled >= half of 2): no warning
-    with W_.catch_warnings():
-        W_.simplefilter("error")
-        distributed_grouped_quantiles(
-            df, ["g"], "v", [0.5], pre_reduce="auto", expected_groups=2
-        ).collect()
 
 
 def test_ungrouped_is_the_grouped_plan_with_no_groups(spark):
@@ -601,12 +601,11 @@ def test_ungrouped_is_the_grouped_plan_with_no_groups(spark):
     probs = [0.0, 0.3, 0.5, 0.77, 1.0]
     for pre_reduce in (True, False):
         for bw in (0.9, 1000.0):
-            a = distributed_quantiles(
-                df, "v", probs, block_width=bw, pre_reduce=pre_reduce
-            ).collect()
-            b = distributed_grouped_quantiles(
-                df, [], "v", probs, block_width=bw, pre_reduce=pre_reduce
-            ).collect()
+            with _forced(pre_reduce=pre_reduce, block_width=bw):
+                a = distributed_quantiles(df, "v", probs, probe_key=_key()).collect()
+                b = distributed_grouped_quantiles(
+                    df, [], "v", probs, probe_key=_key()
+                ).collect()
             assert len(a) == len(b) == 1
             assert list(a[0]["c"]) == list(b[0]["c"]), (pre_reduce, bw)
 
@@ -623,7 +622,7 @@ def test_reserved_group_column_names_raise_clearly(spark):
 
     df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "c string, v double")
     with pytest.raises(ValueError, match="reserved"):
-        distributed_grouped_quantiles(df, ["c"], "v", [0.5])
+        distributed_grouped_quantiles(df, ["c"], "v", [0.5], probe_key=_key())
 
 
 @pytest.mark.parametrize(
@@ -639,12 +638,53 @@ def test_rank_parts_bit_identical(spark, sf_dir, table, col, pre_reduce):
     physical hint: same bits as the default rank_parts=0 on both ranking paths,
     at widths below, at, and above the data's natural partition count."""
     df = load_table(spark, sf_dir, table)
-    want = distributed_quantiles(
-        df, col, PROBS, block_width="auto", pre_reduce=pre_reduce
-    ).collect()[0].c
-    for parts in (1, 8, 64):
-        got = distributed_quantiles(
-            df, col, PROBS, block_width="auto",
-            pre_reduce=pre_reduce, rank_parts=parts,
-        ).collect()[0].c
+    with _forced(pre_reduce=pre_reduce):
+        want = distributed_quantiles(df, col, PROBS, probe_key=_key()).collect()[0].c
+        for parts in (1, 8, 64):
+            got = distributed_quantiles(
+                df, col, PROBS, probe_key=_key(), rank_parts=parts
+            ).collect()[0].c
         assert [repr(g) for g in got] == [repr(w) for w in want], parts
+
+
+def test_helpers_take_their_plan_from_the_probe_only():
+    """No caller-selected strategy: the only knobs are the probe's memo
+    key and the ranking exchange's width."""
+    import inspect
+
+    from docling_api_spark.functions.quantiles import (
+        distributed_grouped_quantiles,
+    )
+
+    def shape(fn):
+        return [(p.name, p.kind.name) for p in inspect.signature(fn).parameters.values()]
+
+    tail = [("probe_key", "KEYWORD_ONLY"), ("rank_parts", "KEYWORD_ONLY")]
+    assert shape(distributed_quantiles) == [
+        ("df", "POSITIONAL_OR_KEYWORD"),
+        ("col", "POSITIONAL_OR_KEYWORD"),
+        ("probs", "POSITIONAL_OR_KEYWORD"),
+        *tail,
+    ]
+    assert shape(distributed_grouped_quantiles) == [
+        ("df", "POSITIONAL_OR_KEYWORD"),
+        ("group_cols", "POSITIONAL_OR_KEYWORD"),
+        ("col", "POSITIONAL_OR_KEYWORD"),
+        ("probs", "POSITIONAL_OR_KEYWORD"),
+        *tail,
+    ]
+
+
+@pytest.mark.parametrize("pre_reduce", [True, False])
+def test_forced_branch_reaches_the_plan(spark, pre_reduce):
+    """`_forced` must steer the builder, or the forced-branch cases above
+    would all test the probe's own pick: only the pre-reduce branch
+    ranks a checkpointed (x, c) distinct-count relation."""
+    import re
+
+    df = spark.range(500).selectExpr("CAST(id % 7 AS DOUBLE) AS v")
+    with _forced(pre_reduce=pre_reduce):
+        out = distributed_quantiles(df, "v", [0.5], probe_key=_key())
+    plan = out._jdf.queryExecution().analyzed().treeString()
+    assert bool(re.search(r"LogicalRDD \[x#\d+, c#\d+L\]", plan)) is pre_reduce
+    assert [repr(v) for v in out.collect()[0].c] == [repr(3.0)]

@@ -48,27 +48,13 @@ def _correctness_rounds() -> dict[int, set[str]]:
 
 
 def test_graded_first_covers_registry_exactly():
-    """Exact coverage MODULO the conditional entries (r10): q307
-    registers only where protobuf exists, and a static tuple cannot
-    track an environment-dependent surface — on such builds it must
-    still be absent from GRADED_FIRST and sit at the iteration tail."""
-    from docling_api_spark.plans.registry import CONDITIONAL_QUERIES
-
-    names = set(all_queries()) - CONDITIONAL_QUERIES
+    names = set(all_queries())
     assert set(GRADED_FIRST) == names
     assert len(GRADED_FIRST) == len(names)  # no duplicates
-    assert not CONDITIONAL_QUERIES & set(GRADED_FIRST)
 
 
 def test_registry_iteration_follows_graded_first():
-    from docling_api_spark.plans.registry import CONDITIONAL_QUERIES
-
-    it = list(all_queries())
-    assert [n for n in it if n not in CONDITIONAL_QUERIES] == list(GRADED_FIRST)
-    # conditional entries (when present) must trail the whole tuple,
-    # never displace a window slot
-    for name in CONDITIONAL_QUERIES & set(it):
-        assert it.index(name) >= len(GRADED_FIRST)
+    assert list(all_queries()) == list(GRADED_FIRST)
 
 
 def test_window_follows_policy():
@@ -150,37 +136,6 @@ def test_rewrite_registry_source_round_trip():
     assert set(tup) == set(GRADED_FIRST)
     with pytest.raises(ValueError):
         rewrite_registry_source("no anchors here", window, tail, 99)
-
-
-def test_window_policy_excludes_conditional_queries():
-    """On a protobuf-equipped build q307 registers, and the policy must
-    NOT compose it into the window (the grading driver's container
-    lacks the dep — a windowed q307 would grade a query that does not
-    exist there). Simulated here by injecting the conditional entry
-    into the live registry, since this container cannot register it for
-    real; the full protobuf-build simulation (stub google.protobuf →
-    registry-order suite green) was run at build time."""
-    from docling_api_spark.plans.registry import (
-        CONDITIONAL_QUERIES,
-        QUERIES,
-        Query,
-    )
-    from compose_window import compose
-
-    name = "q307_tws_counter"
-    assert name in CONDITIONAL_QUERIES
-    injected = name not in QUERIES
-    if injected:
-        QUERIES[name] = Query(name=name, fn=lambda spark, sf: None)
-    try:
-        window = compose(WINDOW_COMPOSED_FOR_ROUND)
-        assert not set(window) & CONDITIONAL_QUERIES
-        # never-graded tier would otherwise grab it: prove the exclusion
-        # is doing the work, not an accident of grade history
-        assert name not in window
-    finally:
-        if injected:
-            QUERIES.pop(name, None)
 
 
 def test_window_carries_rows_only_recert_slot():

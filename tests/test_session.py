@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 import re
+import subprocess
+import sys
 from unittest import mock
 
 import pytest
@@ -77,6 +79,55 @@ def test_prepare_sets_the_runtime_confs_get_spark_sets(spark):
     for k in confs:
         plain.conf.unset(k)
     assert plain.conf.get(session.NANOS_AS_LONG) == "false"
-    with mock.patch.object(entry, "_ship_package"):
+    with mock.patch.object(session, "_ship_package"):
         entry._prepare(plain)
     assert {k: plain.conf.get(k) for k in confs} == confs
+
+
+def test_queries_leave_a_configured_session_alone(spark, sf_dir):
+    """The driver contract configures a session once: running a query
+    through `queries()` on a session `get_spark` built keeps that
+    session's shuffle width, whatever SPARK_GRAFT_CPUS says."""
+    import __spark_entry__ as entry
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "8"
+    assert entry.queries()["q01_pricing_summary"](spark, sf_dir).collect()
+    assert spark.conf.get(key) == "8"
+
+
+def test_get_spark_ships_the_package(tmp_path):
+    """A `get_spark` session runs mapInPandas work from any working
+    directory: the package reaches the Python workers without PYTHONPATH
+    and without the process starting in the repo root."""
+    script = tmp_path / "convert_one.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {REPO_DIR!r})\n"
+        "from docling_api_spark.pipeline.convert import convert_documents\n"
+        "from docling_api_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "docs = spark.createDataFrame(\n"
+        "    [('/in/a.md', bytearray(b'# Title\\n\\nhello'))],\n"
+        "    'path string, content binary',\n"
+        ")\n"
+        "row = convert_documents(docs).collect()[0]\n"
+        "print('ERROR' if row['error'] else 'MARKDOWN', row['markdown'])\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "MARKDOWN" in out.stdout and "hello" in out.stdout, out.stdout

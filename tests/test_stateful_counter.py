@@ -1,107 +1,14 @@
-"""transformWithStateInPandas coverage — import-gated.
-
-The Spark-4 stateful-processor API's Python runner requires
-google.protobuf, which this container does not ship (`pip install` is
-unavailable). Where protobuf exists the operator runs end-to-end against
-the batch twin; here the gate documents the constraint the same way the
-docling and Pillow paths are gated.
-"""
+"""The q151 running counter (`streaming/stateful.py::running_counter_stream`):
+end to end against the batch aggregate, and its per-batch state fold."""
 
 from __future__ import annotations
 
-import importlib.util
-
-import pytest
 from pyspark.sql import functions as F
-
-try:  # find_spec("google.protobuf") itself raises if the namespace pkg is absent
-    _HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _HAS_PROTOBUF = False
-
-
-def test_processor_state_math():
-    """The StatefulProcessor's per-batch fold is plain integer math —
-    pin it without a streaming query (no protobuf needed)."""
-    import pandas as pd
-
-    from docling_api_spark.streaming.stateful import _make_counter_processor
-
-    proc = _make_counter_processor()
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema):
-            return FakeValueState()
-
-    proc.init(FakeHandle())
-    out1 = list(
-        proc.handleInputRows((7,), iter([pd.DataFrame({"cents": [100, 250]})]), None)
-    )
-    out2 = list(
-        proc.handleInputRows((7,), iter([pd.DataFrame({"cents": [50]})]), None)
-    )
-    assert out1[0].iloc[0].to_dict() == {"user_id": 7, "n_events": 2, "total_cents": 350}
-    assert out2[0].iloc[0].to_dict() == {"user_id": 7, "n_events": 3, "total_cents": 400}
-
-
-def test_tws_registration_gate_pins_direction():
-    """q307_tws_counter is registered IFF the TWS runner can start: the
-    registry entry and `tws_available()` must agree (r10 — the seam that
-    flips the SURVEY §2.9 row to 'registered where runnable'). In this
-    container protobuf is absent, so the entry is absent and the graded
-    surface stays at 307; on a protobuf-equipped build both sides flip
-    together and the end-to-end test below unskips."""
-    from docling_api_spark.plans import all_queries
-    from docling_api_spark.streaming.stateful import tws_available
-
-    assert tws_available() is _HAS_PROTOBUF
-    assert ("q307_tws_counter" in all_queries()) is _HAS_PROTOBUF
-
-
-@pytest.mark.skipif(not _HAS_PROTOBUF, reason="google.protobuf absent: TWS Python runner cannot start")
-def test_stateful_counter_matches_batch(spark, sf_dir):
-    """End-to-end through the REGISTERED entry (same fn object as
-    `stateful_counter`; the registry is the product surface)."""
-    from docling_api_spark.operators.timeseries import stateful_counter
-    from docling_api_spark.plans import all_queries
-    from docling_api_spark.tables import load_table
-
-    assert all_queries()["q307_tws_counter"].fn is stateful_counter
-
-    got = {
-        (r.user_id, r.n_events, r.total_cents)
-        for r in stateful_counter(spark, sf_dir).collect()
-    }
-    want = {
-        (r.user_id, r.n_events, r.total_cents)
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("total_cents"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def test_fallback_counter_matches_batch(spark, sf_dir):
-    """The applyInPandasWithState fallback (and therefore the registered
-    q151, which auto-selects it when protobuf is absent) must equal the
-    batch aggregate — no protobuf gate on this path."""
+    """The registered q151 (applyInPandasWithState through the
+    production parquet sink) must equal the batch aggregate."""
     from docling_api_spark.plans import all_queries
     from docling_api_spark.tables import load_table
 
@@ -124,8 +31,8 @@ def test_fallback_counter_matches_batch(spark, sf_dir):
 
 
 def test_fallback_group_fold_carries_state_across_batches():
-    """_counter_group evolves (n, cents) across calls exactly like the
-    TWS processor — pinned with a fake GroupState, no streaming query."""
+    """_counter_group evolves (n, cents) across micro-batches — pinned
+    with a fake GroupState, no streaming query."""
     import pandas as pd
 
     from docling_api_spark.streaming.stateful import _counter_group

@@ -45,9 +45,6 @@ def child(name: str) -> None:
     from docling_api_spark.session import get_spark
 
     spark = get_spark(app_name=f"ab-{name}")
-    import __spark_entry__
-
-    __spark_entry__._ship_package(spark)
     q = all_queries()[name]
     q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
     import gc

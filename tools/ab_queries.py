@@ -31,9 +31,6 @@ def child(name: str) -> None:
 
     spark = get_spark(app_name=f"ab-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__
-
-    __spark_entry__._ship_package(spark)
     q = all_queries()[name]
     q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
     import gc

@@ -65,30 +65,21 @@ def compose(as_of_round: int | None = None) -> list[str]:
     """The 50 window names per the policy, for a window composed FOR
     ``as_of_round`` (grades from rounds < as_of_round)."""
     from docling_api_spark.plans import all_queries
-    from docling_api_spark.plans.registry import CONDITIONAL_QUERIES
 
     stale, _fresh, _missing, grades = compute_stale(as_of_round)
     registry = all_queries()
-    # conditional entries (q307: registered iff protobuf exists) never
-    # enter the window — the grading driver's container lacks the dep,
-    # so composing one in would grade a query that does not exist there
-    queries = [n for n in registry if n not in CONDITIONAL_QUERIES]
 
-    window: list[str] = [n for n in queries if n not in grades][:WINDOW]
+    window: list[str] = [n for n in registry if n not in grades][:WINDOW]
     taken = set(window)
-    eligible = set(queries)  # excludes conditionals in EVERY tier (r11
-    # review: tier 2 iterated the raw stale list, so a conditional query
-    # that ever acquired a grade could be composed into a window the
-    # grading container cannot execute)
     for name, _rnd, _why in stale:  # already (grade round, name)-sorted
         if len(window) >= WINDOW:
             break
-        if name in eligible and name not in taken:
+        if name not in taken:
             window.append(name)
             taken.add(name)
     if len(window) < WINDOW:
         stale_names = {s[0] for s in stale}
-        fresh = [n for n in queries if n in grades and n not in stale_names]
+        fresh = [n for n in registry if n in grades and n not in stale_names]
         # one re-cert slot for the single OLDEST rows-only grade (r10
         # verdict Next #5) — without it the oracle-first ranking below
         # starves unchanged rows-only grades forever
@@ -159,12 +150,10 @@ def rewrite_registry_source(
 def update_registry(window: list[str], for_round: int) -> None:
     from docling_api_spark.plans import all_queries
 
-    from docling_api_spark.plans.registry import CONDITIONAL_QUERIES
-
     with open(REGISTRY) as f:
         src = f.read()
-    skip = set(window) | CONDITIONAL_QUERIES
-    prior = [n for n in all_queries() if n not in skip]
+    taken = set(window)
+    prior = [n for n in all_queries() if n not in taken]
     src = rewrite_registry_source(src, window, prior, for_round)
     with open(REGISTRY, "w") as f:
         f.write(src)

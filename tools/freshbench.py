@@ -65,9 +65,6 @@ def child(name: str) -> None:
     from docling_api_spark.session import get_spark
 
     spark = get_spark(app_name=f"freshbench-{name}")
-    import __spark_entry__
-
-    __spark_entry__._ship_package(spark)
     import bench
 
     q = all_queries()[name]

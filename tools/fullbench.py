@@ -38,10 +38,8 @@ def main() -> None:
     from docling_api_spark.plans import all_queries
     from docling_api_spark.session import get_spark
     import bench
-    import __spark_entry__
 
     spark = get_spark(app_name="docling-api-spark-fullbench")
-    __spark_entry__._ship_package(spark)
     registry = all_queries()
 
     runs: dict[str, list[float]] = {}

@@ -53,7 +53,7 @@ def main() -> None:
         )
         print(f"{name:34} " + " ".join(f"{v:>6}" for v in row))
 
-    # pre_reduce="auto" decisions made while building the plans above
+    # Quantile-probe decisions made while building the plans above
     # (r10): the probe memo records (decision, measured distinct ratio)
     # per (query, sf_dir) key — the postmortem view of which branch the
     # data picked and how close to the 0.30 threshold it sat.
@@ -63,7 +63,7 @@ def main() -> None:
     )
 
     if _auto_memo:
-        print(f"\npre_reduce='auto' decisions (threshold {AUTO_DISTINCT_RATIO}):")
+        print(f"\nquantile probe decisions (threshold {AUTO_DISTINCT_RATIO}):")
         for key, st in sorted(_auto_memo.items(), key=lambda kv: str(kv[0])):
             branch = "pre-reduce" if st.pre_reduce else "raw-row"
             rng = (
