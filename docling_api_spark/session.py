@@ -13,6 +13,7 @@ configs hold, plus dynamic allocation / executor sizing set by the deployer.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -144,14 +145,15 @@ def _ship_package(spark: SparkSession) -> None:
     Queries that use pandas UDFs / mapInPandas pickle closures referencing
     the package; workers spawned with a different cwd (the driver's) can't
     import it. addPyFile distributes a zip of the package to every
-    worker's sys.path.
+    worker's sys.path. Workers fetch the zip lazily, so it stays on disk
+    until the process exits.
     """
     sc = spark.sparkContext
     if getattr(sc, "_docling_api_spark_shipped", False):
         return
-    zip_base = os.path.join(
-        tempfile.mkdtemp(prefix="docling_api_spark_pkg_"), "docling_api_spark_pkg"
-    )
+    zip_dir = tempfile.mkdtemp(prefix="docling_api_spark_pkg_")
+    atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+    zip_base = os.path.join(zip_dir, "docling_api_spark_pkg")
     zip_path = shutil.make_archive(
         zip_base,
         "zip",

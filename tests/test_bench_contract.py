@@ -1,56 +1,35 @@
-"""bench.py's driver-facing output contract, unit-tested without Spark:
-the LAST printed line must always be one complete JSON record that fits
-the grading driver's 2000-char output-tail capture (r3/r4 failure mode:
-the line outgrew the capture, its head was cut, and the driver recorded
-"parsed": null)."""
+"""bench.py's driver-facing output contract: the LAST printed line must
+always be one complete JSON record that fits the grading driver's
+2000-char output-tail capture (a line that outgrows the capture loses its
+head and the driver records "parsed": null)."""
 
 from __future__ import annotations
 
 import json
+import os
+import re
 
-from bench import (
-    PROBE_REF_SPARK_MS,
-    TAIL_CAPTURE_BUDGET,
-    ensure_min_probes,
-    final_line,
-    probe_scaled,
-    probe_stats,
-)
+from bench import CARRIED_R3, TAIL_CAPTURE_BUDGET, final_line, measure
 
-# the COMPACT-line scalar set — every derivable or constant key
-# (probe start/end/raw samples, probe_numpy_ms, probe_ref_ms, carried_n,
-# n_queries, carried_median_probe_scaled and — since r12 —
-# carried_min_probe_scaled) lives in the detailed record only;
-# tail-capture budget math in bench.main. r9 regime: queries carries
-# best-of-N mins (queries_stat marks it), the min-sum carried stats
-# lead, and the shuffle AND window probes' median+spread ride along —
-# driver records keep only this line, and the spreads are the burst
-# signal compare_bench's widened floor runs on (ADVICE r8 / VERDICT r8
-# Next #6 / VERDICT r11 Next #2).
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+LINE_KEYS = {
+    "queries", "metric", "value", "unit",
+    "carried_total", "carried_total_median", "sf",
+}
+
 SCALARS = {
     "metric": "headline_queries_total_time",
     "value": 39.44,
     "unit": "sec",
-    "queries_stat": "min",
     "carried_total": 21.47,
     "carried_total_median": 23.75,
-    "probe_spark_ms_median": 106.77,
-    "probe_spark_ms_spread": 24.3,
-    "probe_shuffle_ms_median": 301.4,
-    "probe_shuffle_ms_spread": 188.2,
-    "probe_window_ms_median": 612.4,
-    "probe_window_ms_spread": 488.2,
-    "regime": "quiet",
-    "quiet_gate_quiet": 1,
-    "quiet_gate_attempts": 1,
-    "quiet_gate_spread_ms": [24, 188, 488],
     "sf": 0.1,
 }
 
 
 def _medians(n: int) -> dict[str, float]:
-    # ~21-char names ≈ the real registry's average (the real 51-query
-    # compact line measured 1838 chars against the 1900 budget)
+    # ~21-char names ≈ the real registry's average
     return {f"q{i:03d}_realistic_name": i * 0.01 for i in range(n)}
 
 
@@ -58,43 +37,34 @@ def test_fitting_headline_set_keeps_the_queries_dict():
     line = final_line(SCALARS, _medians(45))
     assert len(line) <= TAIL_CAPTURE_BUDGET
     rec = json.loads(line)
-    assert "queries" in rec and len(rec["queries"]) == 45
+    assert set(rec) == LINE_KEYS and len(rec["queries"]) == 45
     assert rec["carried_total_median"] == SCALARS["carried_total_median"]
 
 
 def test_real_headline_set_fits_budget_with_queries_dict():
-    """The REAL headline set + the real compact scalar shape must fit the
-    tail capture WITH the queries dict — the r9 scalar additions were
-    paid for by moving derivable keys to the detailed record, and this
-    pins that the budget math holds as the registry evolves."""
-    from bench import CARRIED_R3
+    """The real headline set must fit the tail capture WITH the queries
+    dict; one name too many silently degrades the record to scalars."""
     from docling_api_spark.plans import all_queries
 
     reg = all_queries()
     names = sorted({n for n, q in reg.items() if q.bench} | set(CARRIED_R3))
-    # pessimistic widths: 4-sig-fig scalars, 2dp per-query values, and
-    # the quiet-gate fields at their widest (never-quiet after a
-    # 2-digit attempt budget, 4-digit spreads on every instrument)
-    scalars = {**SCALARS, "value": 123.4567, "carried_total": 99.8765,
-               "carried_total_median": 77.6543,
-               "quiet_gate_quiet": 0, "quiet_gate_attempts": 30,
-               "quiet_gate_spread_ms": [9999, 9999, 9999]}
+    # pessimistic widths: 4-decimal scalars, 2dp per-query values
+    scalars = {**SCALARS, "value": 1234.5678, "carried_total": 999.8765,
+               "carried_total_median": 777.6543, "sf": 0.001}
     line = final_line(scalars, {n: 99.99 for n in names})
     assert len(line) <= TAIL_CAPTURE_BUDGET
     assert len(json.loads(line)["queries"]) == len(names)
 
 
 def test_carried_set_fully_registered():
-    """Every CARRIED_R3 name must exist in the registry: bench.main
-    filters with `if n in registry`, so a renamed or dropped query would
-    silently shrink the frozen carried set and break the cross-round
-    comparability of carried_total / carried_total_median."""
-    from bench import CARRIED_R3
+    """Every CARRIED_R3 name must exist in the registry: bench.measure
+    keeps only the carried names it is given, so a renamed or dropped
+    query would silently shrink the frozen carried set."""
     from docling_api_spark.plans import all_queries
 
     reg = all_queries()
-    missing = [n for n in CARRIED_R3 if n not in reg]
-    assert not missing, f"carried queries missing from registry: {missing}"
+    missing = [n for n in CARRIED_R3 if n not in reg or not reg[n].bench]
+    assert not missing, f"carried queries missing from the headline set: {missing}"
     assert len(set(CARRIED_R3)) == len(CARRIED_R3) == 27
 
 
@@ -102,9 +72,7 @@ def test_oversized_headline_set_degrades_to_bounded_scalars():
     line = final_line(SCALARS, _medians(500))
     assert len(line) <= TAIL_CAPTURE_BUDGET  # ALWAYS fits the tail capture
     rec = json.loads(line)
-    assert "queries" not in rec  # degraded, but every scalar survives
-    assert rec["metric"] == "headline_queries_total_time"
-    assert rec["value"] == SCALARS["value"]
+    assert rec == SCALARS  # degraded, but every scalar survives
 
 
 def test_final_line_is_single_line_json():
@@ -114,482 +82,48 @@ def test_final_line_is_single_line_json():
         json.loads(line)
 
 
-def test_probe_stats_median_and_spread():
-    # 5+ samples spread across the run; an inflated start (JIT tier-up)
-    # must not move the median (r6 judge what's-wrong #2)
-    s = probe_stats([207.8, 110.2, 98.5, 104.0, 96.1])
-    assert s["probe_spark_ms"] == 207.8  # start keeps its historical key
-    assert s["probe_spark_ms_end"] == 96.1
-    # median/spread over WARM samples only — the start's JIT inflation is
-    # procedure, not machine movement
-    assert s["probe_spark_ms_median"] == round((104.0 + 98.5) / 2, 2)
-    assert s["probe_spark_ms_spread"] == round(110.2 - 96.1, 2)
-    assert s["probe_spark_n"] == 5
-
-
-def test_probe_stats_single_sample_degenerate():
-    s = probe_stats([100.0])
-    assert s["probe_spark_ms_median"] == 100.0
-    assert s["probe_spark_ms_spread"] == 0.0
-
-
-def test_probe_stats_prefix_names_the_instrument():
-    s = probe_stats([210.0, 104.0, 96.0], prefix="probe_shuffle")
-    assert set(s) == {
-        "probe_shuffle_ms",
-        "probe_shuffle_ms_end",
-        "probe_shuffle_ms_median",
-        "probe_shuffle_ms_spread",
-        "probe_shuffle_n",
-    }
-    assert s["probe_shuffle_ms_median"] == 100.0  # warm samples only
-
-
-def test_ensure_min_probes_pads_short_runs():
-    """The ≥5-sample contract is self-enforcing (ADVICE r7): a shrunken
-    phase must trigger extra probe calls, a full run must trigger none."""
-    calls = []
-
-    def fake_probe():
-        calls.append(1)
-        return 100.0
-
-    samples = ensure_min_probes([120.0, 101.0, 99.0], fake_probe)
-    assert len(samples) == 5 and len(calls) == 2
-    full = [120.0, 101.0, 99.0, 98.0, 97.0, 96.0]
-    assert ensure_min_probes(list(full), fake_probe) == full
-    assert len(calls) == 2  # untouched
-
-
-def test_probe_scaling_direction_and_identity():
-    # slower box (probe ms up) => scaled number goes DOWN (credit the box)
-    assert probe_scaled(24.0, PROBE_REF_SPARK_MS * 2) == 12.0
-    # reference box => identity
-    assert probe_scaled(24.0, PROBE_REF_SPARK_MS) == 24.0
-    # dead probe => no scaled stat rather than a crash
-    assert probe_scaled(24.0, 0.0) is None
-
-
-# -- regime self-qualification + r10-scaled done-bar (VERDICT r12 Next #1) --
-def test_regime_deadband_mirrors_compare_bench():
-    """ONE definition of 'quiet' across the grader and the comparer: a
-    record tagged quiet is exactly one whose comparisons keep
-    compare_bench's tight x1.25 floor."""
-    import importlib.util
-    import os
-
-    import bench
-
-    spec = importlib.util.spec_from_file_location(
-        "compare_bench",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "compare_bench.py",
-        ),
-    )
-    cb = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cb)
-    assert bench.BURST_DEADBAND == cb.BURST_DEADBAND
-
-
-def test_run_regime_quiet_and_burst():
-    from bench import run_regime
-
-    quiet = {"probe_spark_ms_median": 100.0, "probe_spark_ms_spread": 15.0}
-    assert run_regime(quiet) == "quiet"
-    # exactly at the dead-band stays quiet (<=, matching burst_allowance's
-    # excess-over-deadband semantics where excess 0 keeps the tight floor)
-    assert run_regime({"probe_spark_ms_median": 100.0,
-                       "probe_spark_ms_spread": 20.0}) == "quiet"
-    # ANY instrument over the dead-band makes the whole run burst
-    assert run_regime(
-        quiet,
-        {"probe_shuffle_ms_median": 500.0, "probe_shuffle_ms_spread": 180.0},
-    ) == "burst"
-    # degenerate inputs never crash and never fake quietness away
-    assert run_regime({}) == "quiet"
-    assert run_regime({"probe_spark_ms_median": 0.0,
-                       "probe_spark_ms_spread": 50.0}) == "quiet"
-
-
-def test_historic_records_classify_as_documented():
-    """The r12 driver record and pre-flight BOTH ran burst by this
-    definition (spark 31/98.4 = 0.31; shuffle 274/574 = 0.48) — the tag
-    would have adjudicated the three-round carried-median miss instead of
-    an essay. Pin those two data points so the definition is anchored to
-    the record history it was derived from."""
-    from bench import run_regime
-
-    r12_record = {
-        "probe_spark_ms_median": 98.44, "probe_spark_ms_spread": 30.99,
-        "probe_shuffle_ms_median": 523.73, "probe_shuffle_ms_spread": 98.36,
-        "probe_window_ms_median": 466.11, "probe_window_ms_spread": 69.14,
-    }
-    r12_preflight = {
-        "probe_spark_ms_median": 128.5, "probe_spark_ms_spread": 70.5,
-        "probe_shuffle_ms_median": 574.36, "probe_shuffle_ms_spread": 274.29,
-    }
-    assert run_regime(r12_record) == "burst"
-    assert run_regime(r12_preflight) == "burst"
-
-
-def test_r10_reference_probe_is_pinned():
-    """carried_min_r10_scaled's denominator reference is BENCH_r10's
-    probe_spark_ms_median — the record the accepted band (<=23.0 pass,
-    23.0-24.1 gray, >24.1 fail) is derived from. Retuning it silently
-    re-derives the band, which is the exact failure mode the r13 bar
-    exists to end."""
-    import json
-
-    from bench import PROBE_R10_SPARK_MS
-
-    assert PROBE_R10_SPARK_MS == 93.55
-    rec = json.load(open("BENCH_r10.json"))
-    rec = rec.get("parsed", rec)
-    assert rec["probe_spark_ms_median"] == PROBE_R10_SPARK_MS
-    # historical readings under the band: r12's carried min-sum 23.4037
-    # on a 98.44ms probe reads 22.24 — PASS region, as documented
-    assert round(23.4037 * PROBE_R10_SPARK_MS / 98.44, 2) == 22.24
-
-
-# -- tools/grade_bench.py: the done-bar as a command, not an essay ----------
-def _grade_bench():
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "grade_bench",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "grade_bench.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_grade_bench_reproduces_the_judges_r12_arithmetic():
-    """VERDICT r12 Next #1's own example: 'r12 would read 23.40/1.05 ≈
-    22.2 vs 19.27'. Under the r13 conservative rule (max(raw, scaled) —
-    scaling may excuse nothing below the raw number) r12's raw 23.40s
-    lands in GRAY, which is exactly how that record was historically
-    cleared: compare_bench vs BENCH_r10, 0 flagged => machine."""
-    import json
-
-    gb = _grade_bench()
-    rec = json.load(open("BENCH_r12.json"))
-    rec = rec.get("parsed", rec)
-    verdict, detail = gb.grade(rec)
-    assert verdict == "GRAY"
-    assert "22.24" in detail and "23.40" in detail and "burst" in detail
-
-
-def test_grade_bench_r13_record_still_passes_conservative_rule():
-    """VERDICT r13 Next #1 done-condition: BENCH_r13 (raw 21.95s, scaled
-    16.21s) must still grade PASS — the conservative stat is the raw
-    min-sum, inside the <=23.0 band without any probe help."""
-    import json
-
-    gb = _grade_bench()
-    rec = json.load(open("BENCH_r13.json"))
-    rec = rec.get("parsed", rec)
-    verdict, detail = gb.grade(rec)
-    assert verdict == "PASS"
-    assert "21.95" in detail
-
-
-def test_grade_bench_probe_scaling_cannot_flatter_a_regression():
-    """VERDICT r13 Next #1's failure mode, synthesized: a genuinely
-    regressed raw min-sum (28.0s, x1.45 over the r10 record) on a very
-    loud box (probe x1.6 over r10) used to scale down to ~17.5s and PASS;
-    the conservative rule grades max(28.0, 17.5) = 28.0 -> FAIL."""
-    gb = _grade_bench()
-    rec = {
-        "regime": "burst",
-        "carried_total": 28.0,
-        "probe_spark_ms_median": 93.55 * 1.6,
-    }
-    verdict, detail = gb.grade(rec)
-    assert verdict == "FAIL"
-    assert "28.00" in detail
-
-
-def test_grade_bench_fast_box_still_up_corrects():
-    """On a FASTER-than-r10 box (probe below the r10 pin) the scaled
-    statistic exceeds the raw one and max() keeps the up-correction: a
-    22.0s raw min-sum at half the r10 probe is really ~44s of r10-box
-    work and must not PASS on raw alone."""
-    gb = _grade_bench()
-    rec = {
-        "regime": "burst",
-        "carried_total": 22.0,
-        "probe_spark_ms_median": 93.55 / 2,
-    }
-    assert gb.grade(rec)[0] == "FAIL"
-
-
-def test_grade_bench_quiet_regime_uses_the_median_bar():
-    gb = _grade_bench()
-    quiet_pass = {"regime": "quiet", "carried_total_median": 22.51}
-    quiet_fail = {"regime": "quiet", "carried_total_median": 23.5}
-    assert gb.grade(quiet_pass)[0] == "PASS"
-    assert gb.grade(quiet_fail)[0] == "FAIL"
-
-
-def test_grade_bench_burst_band_edges():
-    gb = _grade_bench()
-
-    def burst(scaled):
-        # probe at the r10 reference makes carried_total == scaled
-        return {"regime": "burst", "carried_total": scaled,
-                "probe_spark_ms_median": 93.55}
-
-    assert gb.grade(burst(22.9))[0] == "PASS"
-    assert gb.grade(burst(23.5))[0] == "GRAY"
-    assert gb.grade(burst(24.5))[0] == "FAIL"
-
-
-def test_grade_bench_derives_regime_when_untagged():
-    """Pre-r13 records carry no regime tag: the tool derives it from the
-    probe spreads with bench.run_regime, so old records stay gradeable."""
-    gb = _grade_bench()
-    rec = {
-        "carried_total": 20.0, "carried_total_median": 21.0,
-        "probe_spark_ms_median": 93.55, "probe_spark_ms_spread": 40.0,
-    }
-    verdict, detail = gb.grade(rec)  # spread 0.43 -> burst path
-    assert "burst" in detail and verdict == "PASS"
-    assert gb.grade({"carried_total_median": 21.0,
-                     "probe_spark_ms_median": 93.55,
-                     "probe_spark_ms_spread": 5.0})[1].startswith("quiet")
-
-
-def test_grade_bench_ungradeable_is_explicit():
-    gb = _grade_bench()
-    assert gb.grade({"regime": "quiet"})[0] == "UNGRADEABLE"
-    assert gb.grade({"regime": "burst"})[0] == "UNGRADEABLE"
-
-
-def test_window_probe_spread_rests_on_five_organic_samples():
-    """VERDICT r12 Next #6 done-condition: the window-probe spread that
-    widens compare_bench's burst floor is computed from >=5 ORGANIC
-    samples (start + 3x phase boundary + end), zero end-of-run padding.
-    Pinned against the round's real pre-flight record so a schedule
-    regression in bench.main is caught by its own output."""
-    import json
-
-    line = [
-        l for l in open("BENCH_r13_PREFLIGHT2.log") if l.strip().startswith("{")
-    ][0]  # the detailed record is the first JSON line
-    rec = json.loads(line)
-    assert rec["probe_window_n"] >= 5
-    assert rec["probe_window_padded"] == 0
-    assert len(rec["probe_window_samples_ms"]) == rec["probe_window_n"]
-    # shuffle/codegen probes keep their interleaved >=5 organic schedule
-    assert rec["probe_shuffle_padded"] == 0 and rec["probe_shuffle_n"] >= 5
-    assert rec["probe_spark_padded"] == 0 and rec["probe_spark_n"] >= 5
-
-
-# -- bench.quiet_gate: quiet-window launch gating (VERDICT r13 Next #2) ------
-def test_quiet_gate_passes_immediately_on_a_quiet_box():
-    import bench
-
-    calls = {"n": 0}
-
-    def steady():
-        calls["n"] += 1
-        return 100.0 + (calls["n"] % 3)  # spread ~2ms on a 100ms median
-
-    slept = []
-    gate = bench.quiet_gate(
-        {"probe_spark": steady, "probe_shuffle": steady,
-         "probe_window": steady},
-        attempts=5, sleep_s=1.0, sleep_fn=slept.append, log=lambda m: None,
-    )
-    assert gate["quiet"] is True and gate["attempts"] == 1
-    assert slept == []  # no retry, no sleep
-    assert gate["trail"][0]["regime"] == "quiet"
-
-
-def test_quiet_gate_retries_then_catches_the_quiet_window():
-    """Burst for two attempts, quiet on the third: the gate sleeps twice
-    (bounded) and records the full trail."""
-    import bench
-
-    attempt_box = {"n": 0}
-
-    def moody():
-        # samples within one attempt alternate wildly until attempt 3
-        attempt_box["n"] += 1
-        if attempt_box["n"] <= 8:  # attempts 1-2 (4 samples each)
-            return 100.0 if attempt_box["n"] % 2 else 300.0
-        return 100.0
-
-    slept = []
-    gate = bench.quiet_gate(
-        {"probe_spark": moody},
-        attempts=5, sleep_s=7.5, sleep_fn=slept.append, log=lambda m: None,
-    )
-    assert gate["quiet"] is True and gate["attempts"] == 3
-    assert slept == [7.5, 7.5]
-    assert [t["regime"] for t in gate["trail"]] == ["burst", "burst", "quiet"]
-
-
-def test_quiet_gate_bounded_attempts_leave_a_logged_trail():
-    """Never-quiet box: the gate gives up after N attempts and the trail
-    (one stat dict per attempt) IS the proof the done-condition asks for."""
-    import bench
-
-    flip = {"n": 0}
-
-    def loud():
-        flip["n"] += 1
-        return 100.0 if flip["n"] % 2 else 260.0
-
-    logged = []
-    gate = bench.quiet_gate(
-        {"probe_spark": loud},
-        attempts=4, sleep_s=0.0, sleep_fn=lambda s: None,
-        log=logged.append,
-    )
-    assert gate["quiet"] is False and gate["attempts"] == 4
-    assert len(gate["trail"]) == 4
-    assert all(t["regime"] == "burst" for t in gate["trail"])
-    assert len(logged) == 4 and all("burst" in m for m in logged)
-
-
-def test_quiet_gate_first_sample_jit_inflation_is_not_a_burst():
-    """Attempt 1 on a cold JVM: the first sample runs ~2x (JIT tier-up).
-    probe_stats' warm convention discards it, so a box that is actually
-    steady passes on attempt 1 despite the cold first sample."""
-    import bench
-
-    seq = iter([210.0, 101.0, 102.0, 100.0])
-    gate = bench.quiet_gate(
-        {"probe_spark": lambda: next(seq)},
-        attempts=1, sleep_s=0.0, sleep_fn=lambda s: None, log=lambda m: None,
-    )
-    assert gate["quiet"] is True
-
-
-def test_quiet_gate_sleep_cadence_escalates_after_two_short_retries():
-    """VERDICT r14 Next #1b: r14's preflight3 found quiet on a 45s retry
-    cadence after the 20s one failed twice — a neighbor-load burst
-    outlives short sleeps. Sleeps 1-2 use sleep_s, every later one
-    sleep_late_s; the schedule is pinned so a record run's patience
-    cannot silently regress to the r14 shape."""
-    import bench
-
-    flip = {"n": 0}
-
-    def loud():
-        flip["n"] += 1
-        return 100.0 if flip["n"] % 2 else 260.0
-
-    slept = []
-    gate = bench.quiet_gate(
-        {"probe_spark": loud},
-        attempts=5, sleep_s=20.0, sleep_late_s=45.0,
-        sleep_fn=slept.append, log=lambda m: None,
-    )
-    assert gate["quiet"] is False
-    assert slept == [20.0, 20.0, 45.0, 45.0]
-
-
-def test_quiet_gate_default_attempt_budget_is_fourteen():
-    """The DRIVER's record run gets the default budget (no env vars set
-    there): 14 attempts on the 20/20/45... cadence = ~9.5min of maximum
-    patience. Pinned so the default cannot drift back to r14's 10x20s."""
-    import os
-
-    import bench
-
-    assert "SPARK_GRAFT_QUIET_ATTEMPTS" not in os.environ
-    gate = bench.quiet_gate(
-        {"probe_spark": lambda: 100.0},
-        sleep_s=0.0, sleep_fn=lambda s: None, log=lambda m: None,
-    )
-    assert gate["quiet"] is True  # steady box: passes on attempt 1
-    flip = {"n": 0}
-
-    def loud():
-        flip["n"] += 1
-        return 100.0 if flip["n"] % 2 else 260.0
-
-    gate = bench.quiet_gate(
-        {"probe_spark": loud},
-        sleep_s=0.0, sleep_late_s=0.0, sleep_fn=lambda s: None,
-        log=lambda m: None,
-    )
-    assert gate["attempts"] == 14 and gate["quiet"] is False
-
-
-# -- quiet-gate launch state on the COMPACT line (VERDICT r14 Next #1a) ------
-def test_gate_summary_scalars_quiet_launch():
-    from bench import gate_summary_scalars
-
-    gate = {
-        "quiet": True, "attempts": 3,
-        "trail": [
-            {"attempt": 1, "regime": "burst"},
-            {"attempt": 2, "regime": "burst"},
-            {"attempt": 3, "regime": "quiet",
-             "probe_spark_ms_median": 100.0, "probe_spark_ms_spread": 12.4,
-             "probe_shuffle_ms_median": 300.0,
-             "probe_shuffle_ms_spread": 44.6,
-             "probe_window_ms_median": 600.0,
-             "probe_window_ms_spread": 88.5},
-        ],
-    }
-    s = gate_summary_scalars(gate)
-    assert s == {
-        "quiet_gate_quiet": 1,
-        "quiet_gate_attempts": 3,
-        "quiet_gate_spread_ms": [12, 45, 88],  # FINAL attempt, int ms
-    }
-
-
-def test_gate_summary_scalars_never_quiet_and_disabled():
-    from bench import gate_summary_scalars
-
-    # gate disabled (SPARK_GRAFT_QUIET_GATE=0): NO keys on the line —
-    # absence is the self-documenting "no gate ran" marker
-    assert gate_summary_scalars(None) == {}
-    gate = {
-        "quiet": False, "attempts": 2,
-        "trail": [
-            {"attempt": 1, "regime": "burst",
-             "probe_spark_ms_spread": 180.0},
-            {"attempt": 2, "regime": "burst",
-             "probe_spark_ms_spread": 205.6},
-        ],
-    }
-    s = gate_summary_scalars(gate)
-    assert s["quiet_gate_quiet"] == 0 and s["quiet_gate_attempts"] == 2
-    # single-instrument gate: list carries only what was sampled
-    assert s["quiet_gate_spread_ms"] == [206]
-
-
-def test_gate_scalars_survive_onto_the_compact_line():
-    """The whole point of r14 Next #1a: BENCH_r15.json's parsed record
-    must carry the launch state. The fixture SCALARS includes the gate
-    fields; pin that final_line keeps them next to the queries dict."""
-    line = final_line(SCALARS, _medians(45))
-    rec = json.loads(line)
-    assert rec["quiet_gate_quiet"] == 1
-    assert rec["quiet_gate_attempts"] == 1
-    assert rec["quiet_gate_spread_ms"] == [24, 188, 488]
-    assert "queries" in rec
-
-
 def test_final_line_uses_compact_separators():
-    """Compact separators pay for the gate fields (~130 chars reclaimed
-    across ~68 pairs): no ': ' or ', ' padding anywhere in the line."""
-    line = final_line(SCALARS, _medians(45))
-    assert ": " not in line and ", " not in line
-    # degraded scalars-only record too
-    line = final_line(SCALARS, _medians(500))
-    assert ": " not in line and ", " not in line
+    for n in (45, 500):  # with the queries dict, and degraded
+        line = final_line(SCALARS, _medians(n))
+        assert ": " not in line and ", " not in line
+
+
+def test_bench_procedure_prints_the_driver_line(spark, sf_dir):
+    """The real timing procedure on two headliners, one carried and one
+    not, feeds a driver line with exactly the contract keys."""
+    from docling_api_spark.plans import all_queries
+
+    reg = all_queries()
+    names = ["q01_pricing_summary", "q157_ohlc_bars"]
+    assert names[0] in CARRIED_R3 and names[1] not in CARRIED_R3
+    out, scalars = measure(spark, {n: reg[n] for n in names}, sf_dir, runs=1)
+    assert all(len(out["queries_runs"][n]) == 1 for n in names)
+    assert set(out["queries_median"]) == set(out["queries_spread"]) == set(names)
+
+    rec = json.loads(final_line(scalars, out["queries"]))
+    assert set(rec) == LINE_KEYS
+    assert set(rec["queries"]) == set(names)
+    assert all(v > 0 for v in rec["queries"].values())
+    assert rec["carried_total"] == out["queries"][names[0]]
+    assert rec["value"] == round(sum(out["queries"].values()), 4)
+    assert rec["sf"] == float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+
+
+def test_tooling_reads_only_its_own_env_vars():
+    """bench.py and tools/ read five variables: data location, run count,
+    core count, sweep output file and the test master. Gate, probe or
+    A/B knobs stay out."""
+    paths = [os.path.join(REPO_DIR, "bench.py")]
+    tools = os.path.join(REPO_DIR, "tools")
+    paths += [os.path.join(tools, f) for f in os.listdir(tools) if f.endswith(".py")]
+    names = set()
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            names.update(re.findall(r"SPARK_GRAFT_\w*", f.read()))
+    assert names == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_BENCH_RUNS",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_FULLBENCH_OUT",
+        "SPARK_GRAFT_TEST_MASTER",
+    }

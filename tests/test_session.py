@@ -131,3 +131,44 @@ def test_get_spark_ships_the_package(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "MARKDOWN" in out.stdout and "hello" in out.stdout, out.stdout
+
+
+def test_package_zip_dir_is_removed_at_exit(tmp_path):
+    """The package zip shipped per SparkContext lives in a temp directory
+    that is gone once the process exits."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = tmp_path / "convert_and_exit.py"
+    script.write_text(
+        "import glob, os, sys, tempfile\n"
+        f"sys.path.insert(0, {REPO_DIR!r})\n"
+        "from docling_api_spark.pipeline.convert import convert_documents\n"
+        "from docling_api_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "docs = spark.createDataFrame(\n"
+        "    [('/in/a.md', bytearray(b'# Title\\n\\nhello'))],\n"
+        "    'path string, content binary',\n"
+        ")\n"
+        "assert not convert_documents(docs).collect()[0]['error']\n"
+        "print(len(glob.glob(os.path.join(tempfile.gettempdir(),\n"
+        "                                 'docling_api_spark_pkg_*'))))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        TMPDIR=str(tmp),
+        PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "1"  # the zip existed while Spark ran
+    assert not list(tmp.glob("docling_api_spark_pkg_*"))

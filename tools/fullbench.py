@@ -7,14 +7,13 @@ an accidental re-shuffle) can hide.
 Procedure: one session (bench's get_spark), registry order, per query a
 GC nudge then TWO timed noop-writes (run1 includes codegen/footer
 warmup; MIN is the rankable number — one cold run alone would flag
-~0.4s of codegen as an outlier). Fixed-work machine probes sample drift
-every 25 queries. Queries already in the headline set are marked so the
-report can rank NON-headline outliers separately.
+~0.4s of codegen as an outlier). Queries already in the headline set are
+marked so the report can rank NON-headline outliers separately.
 
     python tools/fullbench.py            # writes FULLBENCH_r11.json, prints top
 
 Output: {"queries": {name: min_sec}, "runs": {name: [r1, r2]},
-"headline": [...], "probe_ms": [...], "slowest_nonheadline": [...]}.
+"headline": [...], "slowest_nonheadline": [...]}.
 """
 
 from __future__ import annotations
@@ -31,23 +30,18 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(REPO, os.environ.get("SPARK_GRAFT_FULLBENCH_OUT",
                                         "FULLBENCH_r11.json"))
-PROBE_EVERY = 25
 
 
 def main() -> None:
     from docling_api_spark.plans import all_queries
     from docling_api_spark.session import get_spark
-    import bench
 
     spark = get_spark(app_name="docling-api-spark-fullbench")
     registry = all_queries()
 
     runs: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
-    probes: list[float] = [bench._spark_probe(spark)]
     for i, (name, q) in enumerate(registry.items()):
-        if i and i % PROBE_EVERY == 0:
-            probes.append(bench._spark_probe(spark))
         gc.collect()
         spark.sparkContext._jvm.System.gc()
         try:
@@ -61,7 +55,6 @@ def main() -> None:
         except Exception as exc:  # record, keep sweeping
             errors[name] = str(exc)[:300]
             print(f"[{i + 1}/{len(registry)}] {name}: ERROR {exc}", flush=True)
-    probes.append(bench._spark_probe(spark))
 
     mins = {n: min(s) for n, s in runs.items()}
     headline = sorted(n for n, q in registry.items() if q.bench)
@@ -72,7 +65,6 @@ def main() -> None:
         "n_queries": len(registry),
         "n_timed": len(runs),
         "errors": errors,
-        "probe_ms": [round(p, 2) for p in probes],
         "headline": headline,
         "queries": {n: mins[n] for n in sorted(mins)},
         "runs": {n: runs[n] for n in sorted(runs)},
