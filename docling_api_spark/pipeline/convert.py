@@ -433,12 +433,13 @@ def convert_documents(
     by-number shuffle that AQE leaves uncoalesced. Measured with
     `perfbench/run.py --workload convert-batch` (8 large documents per
     request, local[2] on a 4-vCPU VM, 10 pairs): 3.7 -> 6.0 docs/s median.
-    The exchange costs a small batch of tiny documents about 0.06 s (q72
-    at sf0.01: 0.55 -> 0.62 s median).
+    The exchange costs a small batch of tiny documents about 0.04 s (q72
+    at sf0.01, local[2], warm session, 15 alternating runs each: 0.40 ->
+    0.45 s median).
 
     Streaming inputs are exempt: a micro-batch holds a few small files,
     and the extra exchange only adds fixed cost per trigger (jobs-stream
-    p50 1.04-1.13 s -> 1.11-1.22 s when spread, 2 pairs).
+    p50 1.06 s -> 1.19 s median when spread, 4 pairs, spread lost all 4).
     """
     import pandas as pd
 

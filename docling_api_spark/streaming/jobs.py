@@ -22,14 +22,19 @@ Status semantics preserved exactly:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from docling_api_spark.pipeline.convert import convert_documents
 from docling_api_spark.pipeline.schemas import (
+    CONVERSION_OUTPUT_SCHEMA,
     JOB_FAILURE,
     JOB_IN_PROGRESS,
     JOB_SUCCESS,
@@ -94,22 +99,40 @@ def drain_stream_to_parquet(stream_df: DataFrame, prefix: str = "drain") -> Data
     materialized on the driver (the r2 memory-sink harness was
     driver-resident); results land as a parquet table an external consumer
     would poll, and the checkpoint makes the run resumable (pinned by
-    tests/test_streaming_jobs.py's kill/restart recovery test).
+    tests/test_streaming_jobs.py's kill/restart recovery test). Once the
+    drain has stopped, nothing resumes it, so its checkpoint is removed.
     """
-    import tempfile
-
     spark = stream_df.sparkSession
     out_dir = tempfile.mkdtemp(prefix=f"{prefix}_out_")
-    _run_available_now(
-        stream_df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")),
-        spark,
-    )
+    # the returned frame reads out_dir lazily, so it lives until exit
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    ckpt_dir = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
+    try:
+        _run_available_now(
+            stream_df.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt_dir),
+            spark,
+        )
+    finally:
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
     # explicit schema: an empty emission set leaves no part files, which a
     # schema-inferring read would refuse
     return spark.read.schema(stream_df.schema).parquet(out_dir)
+
+
+# The results table as `start_conversion_stream` writes it. A file sink
+# stores every column nullable, and status reads take this schema instead
+# of inferring it on each poll (tests/test_streaming_status.py pins it to
+# the inferred one).
+RESULTS_SCHEMA = T.StructType(
+    [
+        T.StructField("job_id", T.StringType()),
+        T.StructField("batch_id", T.StringType()),
+        *CONVERSION_OUTPUT_SCHEMA.fields,
+    ]
+)
 
 
 def start_conversion_stream(
@@ -132,12 +155,7 @@ def start_conversion_stream(
     results = converted.select(
         job_id_col().alias("job_id"),
         F.regexp_extract(job_id_col(), batch_extract, 1).alias("batch_id"),
-        "path",
-        "format",
-        "filename",
-        "markdown",
-        "images",
-        "error",
+        *CONVERSION_OUTPUT_SCHEMA.fieldNames(),
     )
     return (
         results.writeStream.format("parquet")
@@ -151,8 +169,7 @@ def start_conversion_stream(
 
 def _read_results(spark: SparkSession, results_dir: str) -> DataFrame | None:
     try:
-        df = spark.read.parquet(results_dir)
-        return df if df.columns else None
+        return spark.read.schema(RESULTS_SCHEMA).parquet(results_dir)
     except Exception:
         return None  # sink not created yet → everything IN_PROGRESS
 
@@ -224,11 +241,7 @@ def drain_stream_upsert(stream_df: DataFrame, keys: list[str], prefix: str = "up
     overwrites itself in the read view); a real deployment compacts the
     log periodically with the same latest-wins query.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
     spark = stream_df.sparkSession
     root = tempfile.mkdtemp(prefix=f"{prefix}_drain_")

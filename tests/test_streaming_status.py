@@ -1,0 +1,102 @@
+"""Status reads of the async job path and the temp directories of a
+bounded drain: a status read takes the results table's declared schema
+(one Spark job per read, no inference), and a drain leaves nothing behind
+in the temp dir once its process exits."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+from docling_api_spark.streaming.jobs import (
+    RESULTS_SCHEMA,
+    get_batch_status,
+    get_job_status,
+    start_conversion_stream,
+)
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _committed_sink(spark, tmp_path) -> str:
+    landing = tmp_path / "landing"
+    results = tmp_path / "results"
+    landing.mkdir()
+    (landing / "batch-1_a.md").write_bytes(b"# a")
+    (landing / "b.xyz").write_bytes(b"unrecognized")
+    q = start_conversion_stream(spark, str(landing), str(results), str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return str(results)
+
+
+def _jobs_started(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = "status-read-probe"
+    sc.setJobGroup(group, "count the jobs of one status read")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_status_reads_use_the_declared_schema(spark, tmp_path):
+    results = _committed_sink(spark, tmp_path)
+
+    inferred = spark.read.parquet(results).schema
+    assert [(f.name, f.dataType, f.nullable) for f in RESULTS_SCHEMA.fields] == [
+        (f.name, f.dataType, f.nullable) for f in inferred.fields
+    ]
+
+    jobs = _jobs_started(spark, lambda: get_job_status(spark, results, "batch-1_a.md"))
+    assert jobs == 1
+    assert get_job_status(spark, results, "batch-1_a.md")["status"] == "SUCCESS"
+    assert get_job_status(spark, results, "b.xyz")["status"] == "FAILURE"
+    assert get_batch_status(spark, results, "batch-1")["status"] == "SUCCESS"
+
+    missing = str(tmp_path / "no_sink_yet")
+    assert get_job_status(spark, missing, "a.md")["status"] == "IN_PROGRESS"
+    assert get_batch_status(spark, missing, "batch-1")["status"] == "IN_PROGRESS"
+
+
+def test_drain_leaves_no_temp_dirs(tmp_path):
+    """A process that drains a stream and reads its result leaves nothing
+    in its temp dir: the checkpoint goes when the drain stops, the output
+    directory at exit."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = tmp_path / "drain_one.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {REPO_DIR!r})\n"
+        "from docling_api_spark.session import get_spark\n"
+        "from docling_api_spark.streaming.jobs import drain_stream_to_parquet\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        f"spark.range(3).write.parquet({str(tmp_path / 'src')!r})\n"
+        f"stream = spark.readStream.schema('id long').parquet({str(tmp_path / 'src')!r})\n"
+        "print('ROWS', len(drain_stream_to_parquet(stream, prefix='t').collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        TMPDIR=str(tmp),
+        PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS 3" in out.stdout, out.stdout
+    assert sorted(os.listdir(tmp)) == []
