@@ -293,7 +293,6 @@ def distributed_grouped_quantiles(
     probs: Sequence[float],
     *,
     probe_key: object,
-    rank_parts: int = 0,
 ) -> DataFrame:
     """Per-group exact quantiles: one row per group with array<double>
     ``c`` — the distributed replacement for
@@ -373,18 +372,6 @@ def distributed_grouped_quantiles(
         *g, "x", "c",
         F.floor(F.col("x") / F.lit(block_width)).cast("bigint").alias("blk"),
     )
-    if rank_parts:
-        # Pin the ranking exchange's width (opt-in, r16). The in-block
-        # window REQUIRES hashpartitioning(*g, blk) anyway, so this
-        # replaces that ENSURE_REQUIREMENTS exchange rather than adding
-        # one — but as an explicit REPARTITION_BY_NUM it is exempt from
-        # AQE's byte-coalescing, which at bench corpus size folds the
-        # ~1 MB post-shuffle work onto ONE task and serializes the whole
-        # ranking pipeline (r15 profile: q297 ran 4 serial single-task
-        # stages). Callers gate the value with tables._scan_spread_parts
-        # (single-file + size threshold), so production multi-file
-        # tables pass 0 and keep AQE's byte-correct sizing.
-        blocked = blocked.repartition(rank_parts, *g, "blk")
     inblock = blocked.select(
         *g, "x", "c", "blk",
         (
@@ -490,7 +477,6 @@ def distributed_quantiles(
     probs: Sequence[float],
     *,
     probe_key: object,
-    rank_parts: int = 0,
 ) -> DataFrame:
     """Exact linear-interpolated quantiles of ``df[col]`` at ``probs``.
 
@@ -532,6 +518,4 @@ def distributed_quantiles(
     and the coverage predicate as the join condition (verified
     bit-identical across both ranking branches and silly block widths).
     """
-    return distributed_grouped_quantiles(
-        df, [], col, probs, probe_key=probe_key, rank_parts=rank_parts
-    )
+    return distributed_grouped_quantiles(df, [], col, probs, probe_key=probe_key)

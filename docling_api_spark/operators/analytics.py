@@ -26,7 +26,7 @@ from docling_api_spark.functions.quantiles import (
 )
 from docling_api_spark.operators.sampling import hash_bucket, sql_hash_bucket
 from docling_api_spark.plans.registry import register
-from docling_api_spark.tables import _scan_spread_parts, literal_df, load_table
+from docling_api_spark.tables import literal_df, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -318,11 +318,7 @@ def q123_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Support/confidence/lift are integer counts with closing double
     divisions; brand marginals are a tiny broadcast.
     """
-    # spread_key (r16, the q221 recipe): the items relation (scan +
-    # broadcast part join + distinct + checkpoint) otherwise materializes
-    # on the scan's 3 row-group tasks; the spread exchange runs the
-    # distinct + checkpoint 8-wide (A/B fresh x0.46). No-op on a
-    # multi-file production table.
+    # spread_key: ×1.32 at local[4], ×1.28 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     part = load_table(spark, sf_dir, "part")
     # lazy cut: the order count, brand marginals, and both pair-join sides
@@ -673,10 +669,7 @@ def q135_sla_shipping_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark percentile ≡ DuckDB quantile_cont), breaches are integer
     comparisons — nothing engine-dependent anywhere.
     """
-    # spread_key (r16, the q221 recipe): orders broadcasts into the
-    # single-file lineitem scan's 3 row-group tasks, so the heavy keyed
-    # aggregation ran 3-wide; the spread exchange moves narrow rows once
-    # and runs it 8-wide. No-op on a multi-file production table.
+    # spread_key: ×1.34 at local[4], ×1.25 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     orders = load_table(spark, sf_dir, "orders")
     d = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
@@ -1029,16 +1022,8 @@ def q158_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MAD input below is an explicit checkpoint, so raw-row ranking (one
     # shuffle per pass) measured 2.27s vs 2.84s end-to-end at sf0.1
     # (best-of-3 over all four per-call combinations)
-    # rank_parts on both passes (r16, the q296/q297 recipe): each pass's
-    # ranking exchange is ~1 MB at bench corpus size (profile: two
-    # single-task 0.17-0.18s stages reading 0.97-0.99 MB), exactly the
-    # band where AQE byte-coalescing serializes real ranking work onto
-    # one task. Gated by _scan_spread_parts: a multi-file production
-    # events table passes 0 and keeps AQE's byte-correct sizing.
-    _rp = _scan_spread_parts(spark, f"{sf_dir}/events.parquet")
     med = distributed_grouped_quantiles(
-        ev, ["event_type"], "value", [0.5],
-        probe_key=f"q158a:{sf_dir}", rank_parts=_rp,
+        ev, ["event_type"], "value", [0.5], probe_key=f"q158a:{sf_dir}"
     ).select("event_type", F.col("c")[0].alias("med"))
     # lazy cut: the MAD aggregation and the outlier count both consume the
     # deviation relation; uncut, each re-derives the fact scan + median
@@ -1051,8 +1036,7 @@ def q158_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("value") - F.col("med")).alias("adev"),
     ).localCheckpoint(eager=False)
     mad = distributed_grouped_quantiles(
-        dev, ["event_type"], "adev", [0.5],
-        probe_key=f"q158b:{sf_dir}", rank_parts=_rp,
+        dev, ["event_type"], "adev", [0.5], probe_key=f"q158b:{sf_dir}"
     ).select("event_type", F.col("c")[0].alias("mad"))
     return (
         dev.join(F.broadcast(mad), "event_type")
@@ -2268,12 +2252,7 @@ def q205_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments, one broadcast join, one TakeOrdered-shaped rank; the
     d-dimensional generalization swaps the closed form for a
     driver-side dxd inverse (scalar state, the q194 discipline)."""
-    # spread_key (r16, the q221 recipe): both passes are heavy narrow
-    # compute before any exchange — decimal(38) moment products on one
-    # side, the WindowGroupLimit partial sort on the other — and the
-    # single-file test layout gives the scan only 3 row-group tasks
-    # (profile: 1.5 + 1.9 run-seconds pinned on 3 tasks, zero shuffle).
-    # No-op on a real multi-file lineitem table.
+    # spread_key: ×1.79 at local[4], ×1.82 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     pts = li.select(
         "l_orderkey",
@@ -2867,10 +2846,7 @@ def q221_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic Poisson bootstrap (see block comment — map-side local
     multiplicities, per-replicate exact integer sums, 32-row order
     statistics; the distributed bootstrap idiom)."""
-    # spread_key: the B×|orders| md5 draws are narrow work BEFORE the
-    # per-replicate aggregation's exchange — on the single-row-group test
-    # file they would otherwise run on one core (r15; no-op on a real
-    # multi-file orders table)
+    # spread_key: ×2.84 at local[4], ×2.68 at local[8] (SCALING.md "Knob sites")
     o = load_table(spark, sf_dir, "orders", spread_key="o_orderkey")
     reps_src = o.select(
         "o_orderkey",
@@ -3012,10 +2988,7 @@ def q222_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman degree assortativity of the above-median-support brand
     co-purchase backbone (see block comment — vocabulary-sized joins and
     one exact-integer moment reduce; r is a single closing expression)."""
-    # spread_key (r16, the q221/q123 recipe): the items relation
-    # otherwise materializes on the scan's 3 row-group tasks; the spread
-    # exchange runs the distinct + downstream 8-wide. No-op on a
-    # multi-file production table.
+    # spread_key: ×1.24 at local[4], ×1.26 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     pt = load_table(spark, sf_dir, "part")
     items = (
@@ -3299,17 +3272,9 @@ _CONF_EXPRS = {
 def q227_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """90% split-conformal interval half-width per order priority for the
     (order value ~ line count) OLS fit — parity-split halves, exact-moment
-    coefficients, integer-cent residual percentile (see block comment).
-
-    spread_key (r15): on the single-row-group test file, AQE coalesced the
-    1.6 MB join exchanges to ONE post-shuffle task, so the whole
-    join+per-order aggregation ran serially. The opt-in spread's fixed
-    8-way repartition on l_orderkey IS the join's required partitioning
-    (orders co-partitions to it), and the per-order groupBy keys contain
-    o_orderkey, so the spread adds no exchange — it only un-serializes
-    the join/agg. No-op on a multi-file table."""
+    coefficients, integer-cent residual percentile (see block comment)."""
     o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
+    li = load_table(spark, sf_dir, "lineitem")
     sized = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy(
@@ -3361,13 +3326,8 @@ def q227_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reproduces the r9 call — cent-scale residuals are near-unique per
     # priority and `resid` is already a checkpoint, so raw-row ranking
     # measured 1.77s vs 2.13s at sf0.1
-    # rank_parts (r16, the q296/q297 recipe): the ~75k-row calibration
-    # residual ranking exchange is ~1 MB — the band AQE byte-coalescing
-    # folds onto ONE task; the pin keeps it at the spread width.
-    # Single-file-gated: 0 on a production multi-file table.
     qh = distributed_grouped_quantiles(
-        resid, ["priority"], "r", [0.9], probe_key=f"q227:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/lineitem.parquet"),
+        resid, ["priority"], "r", [0.9], probe_key=f"q227:{sf_dir}"
     ).select("priority", (F.col("c")[0] / 100.0).alias("qhat_dollars"))
     return (
         resid.groupBy("priority", "k", "beta", "alpha")
@@ -4408,10 +4368,7 @@ def q246_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     band, per priority — distributed band aggregation + per-group
     applyInPandas pooling (see block comment)."""
     o = load_table(spark, sf_dir, "orders")
-    # spread_key (r16, the q221 recipe): orders broadcasts into the
-    # single-file lineitem scan's 3 row-group tasks, so the heavy keyed
-    # aggregation ran 3-wide; the spread exchange moves narrow rows once
-    # and runs it 8-wide. No-op on a multi-file production table.
+    # spread_key: ×1.49 at local[4], ×1.40 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     late = (
         o.join(li, o.o_orderkey == li.l_orderkey)
@@ -4534,10 +4491,7 @@ def q250_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 predicted links on the brand backbone by neighbor Jaccard —
     wedge-join candidates, existing edges anti-joined, exact integer
     neighborhood counts (see block comment)."""
-    # spread_key (r16, the q221/q123 recipe): the items relation
-    # otherwise materializes on the scan's 3 row-group tasks; the spread
-    # exchange runs the distinct + downstream 8-wide. No-op on a
-    # multi-file production table.
+    # spread_key: ×1.16 at local[4], ×1.35 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     pt = load_table(spark, sf_dir, "part")
     items = (
@@ -5956,11 +5910,7 @@ def q277_reserve_price_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-price revenue at five decile reserve candidates over per-part
     bid stacks (see block comment — one rank window, broadcast reserves,
     exact cents)."""
-    # spread_key (r16): hashpartitioning(l_partkey, 8) IS the bid-stack
-    # window's required partitioning, so the spread replaces the window's
-    # ENSURE_REQUIREMENTS exchange — whose ~0.9 MB payload AQE otherwise
-    # byte-coalesces onto ONE task (the q296/q297 serialization band).
-    # No-op on a multi-file production table.
+    # spread_key: ×1.07 at local[4], ×1.16 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_partkey")
     wb = W.partitionBy("l_partkey").orderBy(
         F.round(F.col("l_extendedprice") * 100).desc(),
@@ -6707,16 +6657,7 @@ def q297_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Raw-row ranking (r10, probe reproduces r8): order totals in
     # cents are near-unique — rank raw rows, one shuffle instead of a
     # no-op distinct-count reduce
-    # rank_parts: pin the ranking-window exchange to the scan-spread
-    # width so AQE's byte-coalescing can't serialize the whole blocked
-    # ranking onto one task (r15 profile: 4 serial single-task stages).
-    # _scan_spread_parts gates it on the single-file bench layout — a
-    # multi-file production orders table passes 0, keeping AQE's
-    # byte-correct sizing at scale.
-    th = distributed_quantiles(
-        v, "c", [0.9, 0.95, 0.99], probe_key=f"q297:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/orders.parquet"),
-    )
+    th = distributed_quantiles(v, "c", [0.9, 0.95, 0.99], probe_key=f"q297:{sf_dir}")
     pts = th.selectExpr(
         "stack(3, CAST(0.90 AS DOUBLE), c[0], CAST(0.95 AS DOUBLE), c[1],"
         " CAST(0.99 AS DOUBLE), c[2]) AS (tau, u)"

@@ -94,10 +94,7 @@ def q67_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably fires and the full redacted text is value-checked via md5.
     Pure map-side regexp work: no shuffle, stays in codegen.
     """
-    # spread_key=False: map-side-only pipeline (regexp, no downstream
-    # shuffle) — the spread exchange would move full text for nothing
-    # (r16 sweep A/B off x0.76-0.81)
-    docs = load_table(spark, sf_dir, "documents", spread_key=False)
+    docs = load_table(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",
         F.concat(
@@ -911,10 +908,7 @@ def q154_source_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles — only its md5. Divisions are by the group's own row
     count (≥ 1 by construction), so the query is total under ANSI mode.
     """
-    # spread_key=False: the docstring's contract — text never crosses an
-    # exchange, only its md5 inside the agg. The default doc_id spread put
-    # a full-text Exchange ahead of the Expand/multi-distinct aggregate
-    # (r15 regression, ×0.70); the q104 opt-out recipe restores the shape.
+    # spread_key=False: ×1.17 at local[4], ×1.13 at local[8] (SCALING.md "Knob sites": headliner bound)
     docs = load_table(spark, sf_dir, "documents", spread_key=False)
     n = F.count(F.lit(1))
     dup = (n - F.count_distinct(F.md5("text"))).cast("bigint")
@@ -1089,9 +1083,7 @@ def q273_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-per-token greedy curation under a 25% token budget, via
     1000 integer quality buckets + one cumulative window (see block
     comment — the scale-correct form of global greedy selection)."""
-    # spread_key=False: first op is a metadata-only aggregation — the
-    # spread exchange would move full text ahead of it (r16 sweep x0.71)
-    docs = load_table(spark, sf_dir, "documents", spread_key=False)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     docs_q = docs.select(
         "doc_id",

@@ -128,8 +128,7 @@ _MAX_BATCH = 5000
 def q71_upload_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size validation with each `source` as a batch: per-file cap 400 bytes,
     sequential 5000-byte batch budget debited in doc_id order."""
-    # spread_key=False: the validation window partitions by source — the
-    # doc_id spread exchange is unreused (r16 sweep A/B off x0.72-0.89)
+    # spread_key=False: ×1.17 at local[4], ×1.20 at local[8] (SCALING.md "Knob sites")
     docs = load_table(spark, sf_dir, "documents", spread_key=False)
     validated = with_size_validation(
         docs,

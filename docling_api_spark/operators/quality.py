@@ -167,10 +167,7 @@ def q156_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
     events = load_table(spark, sf_dir, "events")
-    # spread_key=False: every documents check is a global aggregate —
-    # map-side partial agg already reduces in the scan task (r16 sweep
-    # A/B off x0.85-0.90)
-    documents = load_table(spark, sf_dir, "documents", spread_key=False)
+    documents = load_table(spark, sf_dir, "documents")
 
     tp = F.col("o_totalprice")
     od = F.col("o_orderdate")

@@ -72,10 +72,9 @@ def q104_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     anything leaves the join. Digests are computed in the scan stage, so
     the full outer join shuffles (bigint, 32-char digest) pairs only —
     which is why the scan spread is opted OUT (spread_key=False): its
-    exchange would move the full text where only digests may travel, and
-    the per-doc md5 is too cheap to need the parallelism (r15 A/B: spread
-    cost q104 ~+0.2-0.35 s, the one consistent documents-spread loss).
+    exchange would move the full text where only digests may travel.
     """
+    # spread_key=False: ×1.08 at local[4], ×1.20 at local[8] (SCALING.md "Knob sites")
     docs = load_table(spark, sf_dir, "documents", spread_key=False)
 
     old = docs.select("doc_id", _row_digest("text", "lang", "source").alias("h"))

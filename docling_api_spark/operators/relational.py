@@ -63,15 +63,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One scan, map-side partial agg, single shuffle on the (low-cardinality)
     group keys — the canonical Catalyst hash-aggregate plan.
-
-    spread_key (r15): the seven exact-decimal(28,6) aggregates are the
-    query's real CPU (BigDecimal accumulation, ~1.2 s over sf0.1's rows),
-    and on a single-row-group file ALL of it lands in the one scan task as
-    map-side partial agg. The opt-in spread moves the decimal work behind
-    an 8-way exchange of the five needed columns; partial aggregation
-    still collapses to 4 groups per partition before the final exchange.
-    No-op on a multi-file table (same guard as every spread).
     """
+    # spread_key: ×1.41 at local[4], ×1.49 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -183,13 +176,8 @@ def q03_broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q04_multiway_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by region/nation (TPC-H Q5 shape): one shuffle join between the
-    two fact tables (lineitem⋈orders, AQE-managed), then broadcast dims.
-
-    spread_key (r15): at bench size the filtered orders side broadcasts,
-    so the whole probe+partial-agg pipeline lives in lineitem's scan
-    stage — one task on a single-row-group file. The opt-in spread moves
-    the probes/decimal work behind an 8-way exchange of the three needed
-    columns (same recipe as q01; no-op on a multi-file table)."""
+    two fact tables (lineitem⋈orders, AQE-managed), then broadcast dims."""
+    # spread_key: ×1.17 at local[4], ×1.09 at local[8] (SCALING.md "Knob sites": headliner bound)
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00"))
@@ -371,12 +359,8 @@ def q29_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-decimal sum kept as total_qty replaces the r4 plan's second
     scan + second group-by (the semi join disappears with it). At 100 TB
     that halves the fact work; the qualifying-orders relation joining
-    orders is heavy-hitter-sized, and customer broadcasts.
-
-    spread_key (r15): the spread exchange IS the groupBy(l_orderkey)
-    exchange (hash partitioning on the same key satisfies the agg's
-    distribution), so on the single-row-group test file it moves the
-    per-orderkey decimal aggregation off the one scan task for free."""
+    orders is heavy-hitter-sized, and customer broadcasts."""
+    # spread_key: ×1.55 at local[4], ×1.25 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     big = (
         li.groupBy("l_orderkey")
@@ -469,11 +453,7 @@ def q11_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q12_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All grouping combinations of (returnflag, linestatus)."""
-    # spread_key (r16, the q01 recipe): the cube's Expand(4 grouping sets)
-    # + partial aggregate over every row ran on the single-file scan's 3
-    # row-group tasks; the spread exchange moves 3 narrow columns once and
-    # runs the expand/agg 8-wide — partials still collapse to ≤4 groups
-    # per set per partition. No-op on a multi-file production table.
+    # spread_key: ×1.27 at local[4], ×1.59 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_items"), dsum("l_quantity", "total_qty")
@@ -1026,10 +1006,7 @@ def q114_winsorized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolated cut points involve arithmetic, and Spark `percentile` ≡
     DuckDB `quantile_cont` (same linear interpolation).
     """
-    # spread_key (r16, the q221 recipe): the quantile ranking input and
-    # the clamp+sum pass both start from the 3-row-group scan; the spread
-    # exchange moves narrow (brand, price) rows once and runs both 8-wide.
-    li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
+    li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     pb = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
         "p_brand", F.col("l_extendedprice").alias("x")
@@ -1042,11 +1019,6 @@ def q114_winsorized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-unique, so the distinct-count pre-reduce was a full-table
     # shuffle for a 3% reduction; raw-row ranking measured 2.39s vs
     # 3.04s end-to-end at sf0.1 (best-of-3)
-    # rank_parts rejected here (r16): the raw-row ranking exchange is
-    # ~7 MB, which AQE's parallelism-first coalescing already runs at 6
-    # tasks — pinning to the 8-wide spread width measured ×1.17 LOSS
-    # fresh (the q118 precedent: past ~5 MB the pin only disables AQE's
-    # byte-correct sizing).
     cuts = distributed_grouped_quantiles(
         pb, ["p_brand"], "x", [0.05, 0.95], probe_key=f"q114:{sf_dir}",
     ).select(
@@ -1440,10 +1412,7 @@ def q143_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly share of revenue from promotional parts (TPC-H Q14's
     conditional-share shape): broadcast part dim, one keyed aggregate,
     DECIMAL-exact conditional and total sums, one closing division."""
-    # spread_key (r16, the q221 recipe): part broadcasts, so the decimal
-    # conditional sums over every line ran on the scan's 3 row-group
-    # tasks; the spread moves 4 narrow columns once and runs the
-    # join+aggregate 8-wide. No-op on a multi-file production table.
+    # spread_key: ×1.39 at local[4], ×1.41 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     part = load_table(spark, sf_dir, "part")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")
@@ -1486,10 +1455,7 @@ def q144_part_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     part class. Broadcast part dim; the distinct aggregation expands to
     the standard two-phase plan (partial distinct on the composite key,
     then merge) — no collect_set materialization."""
-    # spread_key (r16, the q203 recipe): part broadcasts, so the partial
-    # distinct on (brand, type, size_class, suppkey) ran on the scan's 3
-    # row-group tasks; the spread moves (partkey, suppkey) once and runs
-    # it 8-wide. No-op on a multi-file production table.
+    # spread_key: ×1.44 at local[4], ×1.18 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     part = load_table(spark, sf_dir, "part")
     return (
@@ -1667,11 +1633,7 @@ def q148_denorm_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-fact equi-join; buckets are one map-side CASE, so both engines
     bucket identical doubles identically.
     """
-    # spread_key (r16, the q29 recipe): hash partitioning on l_orderkey
-    # satisfies the per-order aggregate's required distribution, so the
-    # spread REPLACES the agg's own exchange and moves the decimal
-    # per-order sums off the scan's 3 row-group tasks for free. No-op on
-    # a multi-file production table.
+    # spread_key: ×1.45 at local[4], ×1.33 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey")
     orders = load_table(spark, sf_dir, "orders")
     sums = li.groupBy("l_orderkey").agg(

@@ -94,9 +94,7 @@ def q91_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """~10% sample selected by content-hash bucket — the same rows come back
     on any engine/partitioning (unlike df.sample), so downstream runs and
     holdout splits are reproducible."""
-    # spread_key=False: filter+project only — no downstream exchange
-    # (r16 sweep A/B off x0.82-0.87)
-    docs = load_table(spark, sf_dir, "documents", spread_key=False)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.filter(hash_bucket("doc_id") < 10).select("doc_id", "lang", "n_chars")
 
 
@@ -604,10 +602,7 @@ def q203_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented: k is a budget, not a quota — redraw loops serialize at
     scale). At 100 TB: identical plan, positives bucketed by user."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # spread_key (r16, the q221 recipe): orders broadcasts into the
-    # single-file lineitem scan's 3 row-group tasks, so the heavy keyed
-    # aggregation ran 3-wide; the spread exchange moves narrow rows once
-    # and runs it 8-wide. No-op on a multi-file production table.
+    # spread_key: ×1.29 at local[4], ×1.09 at local[8] (SCALING.md "Knob sites")
     li = load_table(spark, sf_dir, "lineitem", spread_key="l_orderkey").select("l_orderkey", "l_partkey")
     pos = (
         o.join(li, o.o_orderkey == li.l_orderkey)

@@ -602,10 +602,7 @@ def q79_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by the same per-partition top-K + merge the engine already
     uses for TakeOrderedAndProject.
     """
-    # spread_key=False: first op aggregates by label — the vec_id spread
-    # would move the float-array payload unreused (the q159 shape; r16
-    # sweep A/B off x0.82-0.88)
-    emb = load_table(spark, sf_dir, "embeddings", spread_key=False)
+    emb = load_table(spark, sf_dir, "embeddings")
     # r16: one parsed SQL expression per agg column (see q55) — drops
     # ~1.4s of py4j plan-build round-trips; bit-identical
     dec = (
@@ -690,11 +687,7 @@ def q159_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are excluded (scale = 0 has no quantization to audit) — that
     also keeps the division total under ANSI.
     """
-    # spread_key=False: all-map-side until the final 10-row group — the
-    # default vec_id spread added an Exchange moving the float-array
-    # payload before it (r15 regression, ×0.74; 8-core-faster-than-32
-    # scaling ratio 0.44 = pure exchange overhead).
-    emb = load_table(spark, sf_dir, "embeddings", spread_key=False)
+    emb = load_table(spark, sf_dir, "embeddings")
     s = emb.select(
         "vec_id",
         "label",

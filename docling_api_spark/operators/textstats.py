@@ -498,9 +498,7 @@ def q78_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join at any corpus size, since K is fixed. No shuffle of
     the exploded relation beyond its one count aggregation.
     """
-    # spread_key=False: first op aggregates by word (not the spread
-    # key) — the spread exchange is unreused (r16 sweep A/B off x0.84-0.88)
-    words = load_table(spark, sf_dir, "documents", spread_key=False).select(
+    words = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     )
     vocab = (
@@ -1864,8 +1862,7 @@ def q200_kwic_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB snippets are generated per shard next to the postings that
     matched them; the window bounds make output size linear in hit
     count."""
-    # spread_key=False: map-side posexplode+filter only — no downstream
-    # exchange reuses the spread (r16 sweep A/B off x0.74-0.88)
+    # spread_key=False: ×1.15 at local[4], ×1.16 at local[8] (SCALING.md "Knob sites")
     docs = load_table(spark, sf_dir, "documents", spread_key=False)
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     hits = toks.select(
@@ -2422,11 +2419,7 @@ def q240_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-sided gate from the Gopher curation rules. mapInPandas (q111's
     boundary discipline): narrow, shuffle-free, codec cost only. Ratio is
     a rational of two exact byte counts."""
-    # spread_key=False: per-worker Arrow/startup fixed costs beat the
-    # parallel-zlib win at this corpus size (r16 sweep A/B off
-    # x0.84-0.87, both rounds); a multi-file production table
-    # parallelizes naturally
-    docs = load_table(spark, sf_dir, "documents", spread_key=False).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -2634,10 +2627,7 @@ def q247_text_tiling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q264_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source vocabulary Jaccard and containment — the corpus-
     granularity duplicate-feed triage (see block comment)."""
-    # spread_key=False: the (source, term) distinct is the plan's own
-    # first exchange; the doc_id spread would move text unreused (r16
-    # sweep A/B off x0.80-0.86)
-    docs = load_table(spark, sf_dir, "documents", spread_key=False)
+    docs = load_table(spark, sf_dir, "documents")
     # lazy cut: sizes + both overlap-join sides reuse the vocab relation
     # (audit: 4 corpus scans/plan uncut)
     st = docs.select(

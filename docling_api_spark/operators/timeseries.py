@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from docling_api_spark.functions.numeric import dsum, sql_dsum
 from docling_api_spark.functions.quantiles import distributed_quantiles
 from docling_api_spark.plans.registry import register
-from docling_api_spark.tables import _scan_spread_parts, literal_df, load_table
+from docling_api_spark.tables import literal_df, load_table
 
 US_30MIN = 30 * 60 * 1_000_000
 US_1H = 60 * 60 * 1_000_000
@@ -5463,11 +5463,7 @@ def q272_revenue_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
     order→last-shipment window (see block comment — integer month keys,
     exact cent sums)."""
     o = load_table(spark, sf_dir, "orders")
-    # spread_key (r16, the q221 recipe): orders broadcasts, so the whole
-    # join + group + month-explode + proration pipeline (1.7 CPU-s) ran on
-    # the scan's 3 row-group tasks; the spread exchange moves narrow
-    # (okey, shipdate) rows once and runs it 8-wide (A/B fresh x0.59).
-    # No-op on a multi-file production table.
+    # spread_key: ×1.67 at local[4], ×1.50 at local[8] (SCALING.md "Knob sites")
     # r16 note: an aggregate-before-join rewrite (max shipdate per order
     # from lineitem alone, then join orders) was implemented and measured
     # a ×1.2 LOSS fresh at sf0.1 — the join-then-group shape below already
@@ -5766,17 +5762,11 @@ def q296_watermark_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrive in order, so late_us is almost all 0 and at sf0.01 the
     # probe picks the cardinality pre-reduce; near-continuous lateness
     # would rank raw rows, one shuffle instead of a no-op reduce
-    # rank_parts (r16, the q297 recipe): pin the ranking exchange to the
-    # scan-spread width so AQE byte-coalescing can't serialize the ~1 MB
-    # blocked ranking onto one task (profile: two serial single-task
-    # 1.08 MB stages); single-file-gated — 0 on a production
-    # multi-file table, keeping AQE's byte-correct sizing
     lq = distributed_quantiles(
         lateness,
         "late_us",
         [0.5, 0.95, 0.99],
         probe_key=f"q296:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/events.parquet"),
     )
     counts = lateness.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),

@@ -255,31 +255,31 @@ def drain_stream_upsert(stream_df: DataFrame, keys: list[str], prefix: str = "up
             .parquet(log_dir)
         )
 
-    _run_available_now(
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt_dir),
-        spark,
-    )
+    try:
+        _run_available_now(
+            stream_df.writeStream.outputMode("update")
+            .foreachBatch(upsert)
+            .option("checkpointLocation", ckpt_dir),
+            spark,
+        )
 
-    # an empty source produces zero micro-batches → no parquet files, and a
-    # bare read would die on schema inference. The stream schema is known
-    # statically, so return an empty frame with it.
-    if not os.path.isdir(log_dir) or not any(
-        f.endswith(".parquet") for f in os.listdir(log_dir)
-    ):
+        # an empty source produces zero micro-batches → no parquet files, and
+        # a bare read would die on schema inference. The stream schema is
+        # known statically, so return an empty frame with it.
+        if not os.path.isdir(log_dir) or not any(
+            f.endswith(".parquet") for f in os.listdir(log_dir)
+        ):
+            return spark.createDataFrame([], stream_df.schema)
+
+        log = spark.read.parquet(log_dir)
+        w = W.partitionBy(*keys).orderBy(F.col("_batch_id").desc())
+        snapshot = (
+            log.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn", "_batch_id")
+        )
+        # the snapshot must outlive the temp log (lazy plan) — materialize
+        # it driver-side-free via localCheckpoint before the log goes
+        return snapshot.localCheckpoint(eager=True)
+    finally:
         shutil.rmtree(root, ignore_errors=True)
-        return spark.createDataFrame([], stream_df.schema)
-
-    log = spark.read.parquet(log_dir)
-    w = W.partitionBy(*keys).orderBy(F.col("_batch_id").desc())
-    snapshot = (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_batch_id")
-    )
-    # the snapshot must outlive the temp log (lazy plan) — materialize it
-    # driver-side-free via localCheckpoint, then drop the log directory.
-    snapshot = snapshot.localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return snapshot

@@ -98,12 +98,7 @@ SPREAD_MAX_PARTS = 8
 def _scan_spread_parts(spark: SparkSession, path: str) -> int:
     """Partitions to spread a scan of ``path`` over, or 0 when the spread
     should not fire: ``path`` is not a single file of at least
-    SPREAD_MIN_BYTES, or the session has one shuffle partition.
-
-    The ``rank_parts`` callers of the quantile helpers gate on the file
-    of the ranked relation's SOURCE table: a single big file stands in
-    for the test-table layout the pin exists for. It is not a measure of
-    the ranked relation's own size."""
+    SPREAD_MIN_BYTES, or the session has one shuffle partition."""
     if not os.path.isfile(path) or os.path.getsize(path) < SPREAD_MIN_BYTES:
         return 0
     n = shuffle_partitions(spark)

@@ -625,31 +625,9 @@ def test_reserved_group_column_names_raise_clearly(spark):
         distributed_grouped_quantiles(df, ["c"], "v", [0.5], probe_key=_key())
 
 
-@pytest.mark.parametrize(
-    "table,col,pre_reduce",
-    [
-        ("lineitem", "l_extendedprice", False),  # raw-row ranking (q297 shape)
-        ("part", "p_size", True),  # distinct-count path, heavy ties
-    ],
-)
-def test_rank_parts_bit_identical(spark, sf_dir, table, col, pre_reduce):
-    """rank_parts (r16: pin the ranking exchange's width so AQE
-    byte-coalescing can't serialize the blocked ranking) must be a pure
-    physical hint: same bits as the default rank_parts=0 on both ranking paths,
-    at widths below, at, and above the data's natural partition count."""
-    df = load_table(spark, sf_dir, table)
-    with _forced(pre_reduce=pre_reduce):
-        want = distributed_quantiles(df, col, PROBS, probe_key=_key()).collect()[0].c
-        for parts in (1, 8, 64):
-            got = distributed_quantiles(
-                df, col, PROBS, probe_key=_key(), rank_parts=parts
-            ).collect()[0].c
-        assert [repr(g) for g in got] == [repr(w) for w in want], parts
-
-
 def test_helpers_take_their_plan_from_the_probe_only():
-    """No caller-selected strategy: the only knobs are the probe's memo
-    key and the ranking exchange's width."""
+    """No caller-selected strategy: the only knob is the probe's memo
+    key."""
     import inspect
 
     from docling_api_spark.functions.quantiles import (
@@ -659,7 +637,7 @@ def test_helpers_take_their_plan_from_the_probe_only():
     def shape(fn):
         return [(p.name, p.kind.name) for p in inspect.signature(fn).parameters.values()]
 
-    tail = [("probe_key", "KEYWORD_ONLY"), ("rank_parts", "KEYWORD_ONLY")]
+    tail = [("probe_key", "KEYWORD_ONLY")]
     assert shape(distributed_quantiles) == [
         ("df", "POSITIONAL_OR_KEYWORD"),
         ("col", "POSITIONAL_OR_KEYWORD"),

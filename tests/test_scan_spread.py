@@ -13,7 +13,10 @@ the size gate, tables.SPREAD_MIN_BYTES).
 
 from __future__ import annotations
 
+import ast
+import glob
 import math
+import os
 from unittest import mock
 
 import pytest
@@ -27,8 +30,7 @@ def _rows(df):
 
 def _spread(on: bool):
     """Force the scan spread on (every single file passes the size gate)
-    or off (none does). The quantile callers' rank_parts pins read the
-    same gate, so they follow too."""
+    or off (none does)."""
     return mock.patch.object(tables, "SPREAD_MIN_BYTES", 1 if on else math.inf)
 
 
@@ -66,23 +68,36 @@ def test_spread_partitions_and_row_parity(spark, sf_dir):
         # representative multi-consumer float-emitting query (shingle
         # self-join + Jaccard doubles) on the default documents spread
         "q42_ngram_jaccard",
-        # opt-in spread_key callers: exact-decimal aggregates (q01),
-        # broadcast-join + decimal agg (q04), double OLS/quantile
-        # machinery (q227), HAVING-filtered decimal agg (q29)
+        # every opt-in spread_key caller
         "q01_pricing_summary",
         "q04_multiway_join_revenue",
-        "q227_conformal_interval",
-        "q29_large_orders",
-        # r16 session-3 opt-ins: cube/Expand partial agg (q12) and
-        # two-phase count_distinct (q144) — new aggregate shapes over the
-        # spread exchange
         "q12_cube",
-        "q144_part_supplier_stats",
-        # r16 opt-ins on lineitem: decimal conditional sums after a
-        # broadcast join (q143) and a spread that replaces the per-order
-        # aggregate's own exchange (q148)
+        "q29_large_orders",
+        "q123_market_basket",
+        "q135_sla_shipping_delay",
         "q143_promo_share",
+        "q144_part_supplier_stats",
         "q148_denorm_drift_audit",
+        "q203_negative_sampling",
+        "q205_mahalanobis_outliers",
+        "q221_poisson_bootstrap",
+        "q222_degree_assortativity",
+        "q246_isotonic_calibration",
+        "q250_link_prediction",
+        "q272_revenue_proration",
+        "q277_reserve_price_curve",
+        # default-spread readers whose opt-out measured no win: they run
+        # the doc_id / vec_id spread at bench scale, which the graded
+        # sizes (documents and embeddings under SPREAD_MIN_BYTES) never do
+        "q67_pii_redaction",
+        "q78_vocab_coverage",
+        "q79_embedding_outliers",
+        "q91_hash_sample",
+        "q156_expectation_suite",
+        "q159_embedding_quantization",
+        "q240_compression_ratio",
+        "q264_source_vocab_overlap",
+        "q273_token_budget_selection",
     ],
 )
 def test_spread_query_results_bit_identical(spark, sf_dir, name):
@@ -103,10 +118,11 @@ def test_spread_query_results_bit_identical(spark, sf_dir, name):
     [
         # opt-OUT queries (spread_key=False): the payload must never cross
         # a spread exchange — q154's contract is "text never shuffles, only
-        # its md5"; q159 is all-map-side until the final 10-row group.
-        ("q154_source_quality_rollup", "doc_id"),
-        ("q159_embedding_quantization", "vec_id"),
+        # its md5"; q104 shuffles (id, digest) pairs only.
+        ("q71_upload_validation", "doc_id"),
         ("q104_snapshot_diff", "doc_id"),
+        ("q154_source_quality_rollup", "doc_id"),
+        ("q200_kwic_snippets", "doc_id"),
     ],
 )
 def test_spread_opt_out_keeps_plan_and_rows(spark, sf_dir, name, payload_key):
@@ -129,3 +145,72 @@ def test_spread_opt_out_keeps_plan_and_rows(spark, sf_dir, name, payload_key):
     with _spread(False):
         plain = _rows(q.fn(spark, sf_dir))
     assert forced == plain
+
+
+OPERATORS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "docling_api_spark",
+    "operators",
+)
+
+# Every scan-spread argument in the operator modules, as (registered query,
+# table, value), sorted by repr. Each one has a measured A/B row in
+# SCALING.md ("Knob sites"); a site lands here only with its row.
+KNOB_SITES = [
+    ("q01_pricing_summary", "lineitem", "l_orderkey"),
+    ("q04_multiway_join_revenue", "lineitem", "l_orderkey"),
+    ("q104_snapshot_diff", "documents", False),
+    ("q123_market_basket", "lineitem", "l_orderkey"),
+    ("q12_cube", "lineitem", "l_orderkey"),
+    ("q135_sla_shipping_delay", "lineitem", "l_orderkey"),
+    ("q143_promo_share", "lineitem", "l_orderkey"),
+    ("q144_part_supplier_stats", "lineitem", "l_orderkey"),
+    ("q148_denorm_drift_audit", "lineitem", "l_orderkey"),
+    ("q154_source_quality_rollup", "documents", False),
+    ("q200_kwic_snippets", "documents", False),
+    ("q203_negative_sampling", "lineitem", "l_orderkey"),
+    ("q205_mahalanobis_outliers", "lineitem", "l_orderkey"),
+    ("q221_poisson_bootstrap", "orders", "o_orderkey"),
+    ("q222_degree_assortativity", "lineitem", "l_orderkey"),
+    ("q246_isotonic_calibration", "lineitem", "l_orderkey"),
+    ("q250_link_prediction", "lineitem", "l_orderkey"),
+    ("q272_revenue_proration", "lineitem", "l_orderkey"),
+    ("q277_reserve_price_curve", "lineitem", "l_partkey"),
+    ("q29_large_orders", "lineitem", "l_orderkey"),
+    ("q71_upload_validation", "documents", False),
+]
+
+
+def _knob_sites() -> list[tuple]:
+    """(registered query, table or "rank", value) for every ``spread_key=``
+    and ``rank_parts=`` keyword argument in the operator modules; the query
+    is None outside a registered builder."""
+    sites = []
+    for path in sorted(glob.glob(os.path.join(OPERATORS, "*.py"))):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for top in tree.body:
+            query = next(
+                (
+                    d.args[0].value
+                    for d in getattr(top, "decorator_list", [])
+                    if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                ),
+                None,
+            )
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                for kw in node.keywords:
+                    if kw.arg == "spread_key":
+                        table = ast.literal_eval(node.args[2])
+                        sites.append((query, table, ast.literal_eval(kw.value)))
+                    elif kw.arg == "rank_parts":
+                        sites.append((query, "rank", ast.unparse(kw.value)))
+    return sorted(sites, key=repr)
+
+
+def test_every_knob_site_is_measured():
+    """A spread or rank-width site cannot be added, moved or dropped
+    without a change to the measured list above."""
+    assert _knob_sites() == KNOB_SITES

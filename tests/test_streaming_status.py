@@ -64,23 +64,21 @@ def test_status_reads_use_the_declared_schema(spark, tmp_path):
     assert get_batch_status(spark, missing, "batch-1")["status"] == "IN_PROGRESS"
 
 
-def test_drain_leaves_no_temp_dirs(tmp_path):
-    """A process that drains a stream and reads its result leaves nothing
-    in its temp dir: the checkpoint goes when the drain stops, the output
-    directory at exit."""
+def _run_in_tmpdir(tmp_path, body: str):
+    """Run `body` after a one-core `get_spark` in a fresh process whose
+    TMPDIR is an empty directory; return the process and that directory."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
-    script = tmp_path / "drain_one.py"
+    script = tmp_path / "script.py"
     script.write_text(
         "import sys\n"
         f"sys.path.insert(0, {REPO_DIR!r})\n"
         "from docling_api_spark.session import get_spark\n"
-        "from docling_api_spark.streaming.jobs import drain_stream_to_parquet\n"
         "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
         f"spark.range(3).write.parquet({str(tmp_path / 'src')!r})\n"
         f"stream = spark.readStream.schema('id long').parquet({str(tmp_path / 'src')!r})\n"
-        "print('ROWS', len(drain_stream_to_parquet(stream, prefix='t').collect()))\n"
-        "spark.stop()\n"
+        + body
+        + "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(
@@ -98,5 +96,36 @@ def test_drain_leaves_no_temp_dirs(tmp_path):
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
+    return out, tmp
+
+
+def test_drain_leaves_no_temp_dirs(tmp_path):
+    """A process that drains a stream and reads its result leaves nothing
+    in its temp dir: the checkpoint goes when the drain stops, the output
+    directory at exit."""
+    out, tmp = _run_in_tmpdir(
+        tmp_path,
+        "from docling_api_spark.streaming.jobs import drain_stream_to_parquet\n"
+        "print('ROWS', len(drain_stream_to_parquet(stream, prefix='t').collect()))\n",
+    )
     assert "ROWS 3" in out.stdout, out.stdout
+    assert sorted(os.listdir(tmp)) == []
+
+
+def test_failed_upsert_drain_leaves_no_temp_dirs(tmp_path):
+    """An upsert drain whose micro-batch fails raises, and removes its
+    log and checkpoint directory on the way out."""
+    out, tmp = _run_in_tmpdir(
+        tmp_path,
+        "from pyspark.sql import functions as F\n"
+        "from docling_api_spark.streaming.jobs import drain_stream_upsert\n"
+        "def boom(x):\n"
+        "    raise ValueError('boom')\n"
+        "bad = stream.select(F.udf(boom, 'long')('id').alias('id'))\n"
+        "try:\n"
+        "    drain_stream_upsert(bad, keys=['id'], prefix='t')\n"
+        "except Exception:\n"
+        "    print('RAISED')\n",
+    )
+    assert "RAISED" in out.stdout, out.stdout
     assert sorted(os.listdir(tmp)) == []

@@ -6,8 +6,6 @@ this pins the late-drop path)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -28,13 +26,13 @@ def _write_events(spark, path, rows):
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
-def test_late_event_beyond_watermark_is_dropped(spark):
+def test_late_event_beyond_watermark_is_dropped(spark, tmp_path):
     import datetime as dt
 
     def t(hours, minutes=0):
         return dt.datetime(2024, 1, 1, hours, minutes)
 
-    landing = tempfile.mkdtemp(prefix="late_landing_")
+    landing = str(tmp_path / "landing")
     name = "late_sink_" + uuid.uuid4().hex[:8]
 
     # batch 1: two events in the 10:00 window, one at 12:30 that will push
@@ -56,7 +54,7 @@ def test_late_event_beyond_watermark_is_dropped(spark):
         stream.writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_late_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
