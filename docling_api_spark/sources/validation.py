@@ -12,12 +12,20 @@ Reference semantics (`upload_validation.py:20-98`) re-expressed as dataflow:
 
 The size predicates read metadata columns only. An unbounded budget adds
 one per-row expression. A per-batch budget adds a window partitioned by
-batch. The global budget first sums the debits in one eager aggregate over
-the size column, a scan that never reads `content`. When the total fits
-the budget, no running sum can exceed it and validation stops there, with
-no window and no exchange (fits-budget path). Only an over-budget input
-pays for the running-sum window, whose exchange carries every column of
-the input, content included (window path).
+batch. The global budget takes one of three paths:
+- listing path: on an unmodified `binaryFile` scan (what `read_documents`
+  returns) the driver already holds the file listing, and `length` is the
+  listed file size. When the listed total fits the budget, so does every
+  running sum, and validation runs no Spark job at all. The budget uses
+  the sizes as listed when `read_documents` ran; landed uploads do not
+  change after that, and the aggregate below reads the same listing's
+  lengths, only at a later moment;
+- aggregate path: any other input first sums the debits in one eager
+  aggregate over the size column, a scan that never reads `content`. When
+  the total fits the budget, validation stops there, with no window and
+  no exchange;
+- window path: only an over-budget input pays for the running-sum window,
+  whose exchange carries every column of the input, content included.
 """
 
 from __future__ import annotations
@@ -25,8 +33,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from docling_api_spark.session import shuffle_partitions
+from docling_api_spark.tables import literal_df
 
 MAX_SIZE_PER_FILE_MB = 100
 MAX_BATCH_SIZE_MB = 500
@@ -62,10 +72,17 @@ def with_size_validation(
     through one task. Instead:
     - `max_batch_bytes=None` (unbounded budget): no running sum at all;
     - `batch_col` given: per-batch window (batches are bounded);
-    - global budget, fits-budget path: one eager aggregate sums the
-      debits (only the size column is read). If the total is at most the
-      budget, every running sum is too, so only `file_too_large` can
-      fire and the plan gains no window, broadcast or exchange;
+    - global budget, listing path: `df` is an unmodified `binaryFile`
+      scan and `size_col` is `length`. Each debit is at most its file's
+      listed length, so a listed total within the budget bounds every
+      running sum; only `file_too_large` can fire, and no Spark job runs.
+      At scale the listing is already on the driver, in the file index
+      `read_documents` built, so the decision costs no cluster job there
+      either;
+    - global budget, aggregate path (any other input, or a listed total
+      over budget): one eager aggregate sums the debits (only the size
+      column is read). If the total is at most the budget, the plan
+      gains no window, broadcast or exchange;
     - global budget, window path (total over budget): a two-pass
       distributed prefix sum. A column-pruned stats pass computes
       per-range partial sums, the driver folds them into per-range
@@ -84,9 +101,13 @@ def with_size_validation(
     debit = F.when(size <= max_file_bytes, size).otherwise(F.lit(0))
 
     if batch_col is None:
-        # Fits-budget path. Negative debits are clipped so that the total
-        # bounds every prefix sum.
-        total = df.select(F.sum(F.greatest(debit, F.lit(0)))).first()[0] or 0
+        # Listing path: each debit is at most its file's listed length, so
+        # the listed total bounds every prefix sum.
+        total = _listed_bytes(df) if size_col == "length" else None
+        if total is None or total > max_batch_bytes:
+            # Aggregate path. Negative debits are clipped so that the total
+            # bounds every prefix sum.
+            total = df.select(F.sum(F.greatest(debit, F.lit(0)))).first()[0] or 0
         if total <= max_batch_bytes:
             return df.withColumn("reject_reason", size_only)
         df, running = _with_global_running_sum(df, debit, order_col)
@@ -105,6 +126,34 @@ def with_size_validation(
     return df.withColumn("reject_reason", reason).drop(
         "_sv_lows", "_sv_offs", "_sv_idx"
     )
+
+
+def _listed_bytes(df: DataFrame) -> int | None:
+    """Listed size of the files behind `df`, read on the driver with no
+    Spark job, when `df` is an unmodified `binaryFile` scan; else None.
+
+    An `InMemoryFileIndex`'s `sizeInBytes` is the sum of `getLen` over the
+    files the scan reads (after `pathGlobFilter`), the same values the scan
+    emits as `length`. Any operator over the scan (filter, projection,
+    join) makes the analyzed plan's root something else, and any other
+    index (a catalog's, sized from table statistics; a streaming sink's
+    metadata log) returns None too.
+    """
+    jdf = getattr(df, "_jdf", None)  # None on a session with no JVM handle
+    if jdf is None:
+        return None
+    plan = jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if relation.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    if relation.fileFormat().getClass().getSimpleName() != "BinaryFileFormat":
+        return None
+    index = relation.location()
+    if index.getClass().getSimpleName() != "InMemoryFileIndex":
+        return None
+    return index.sizeInBytes()
 
 
 def _with_global_running_sum(
@@ -154,8 +203,6 @@ def _with_global_running_sum(
         bucket: Column = F.lit(0)
         offset: Column = F.lit(0).cast("long")
     else:
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
         lows = [lo for lo, _ in offsets[1:]]
         offs = [int(off) for _, off in offsets]
         # pad minima to a power of two with NULLs: every element_at probe
@@ -168,12 +215,13 @@ def _with_global_running_sum(
             pow2 *= 2
         padded = lows + [None] * (pow2 - len(lows))
         key_type = df.schema[order_col].dataType
-        aux = spark.createDataFrame(
+        aux = literal_df(
+            spark,
             [(padded, offs)],
             StructType(
                 [
-                    StructField("_sv_lows", ArrayType(key_type), False),
-                    StructField("_sv_offs", ArrayType(LongType()), False),
+                    StructField("_sv_lows", ArrayType(key_type)),
+                    StructField("_sv_offs", ArrayType(LongType())),
                 ]
             ),
         )

@@ -3,13 +3,17 @@ tests/test_upload_limits.py onto the dataflow validators)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
+from docling_api_spark.sources.binaryfiles import read_documents
 from docling_api_spark.sources.validation import (
     BATCH_BUDGET_EXCEEDED,
     FILE_TOO_LARGE,
     UNSUPPORTED_FORMAT,
+    _listed_bytes,
     _with_global_running_sum,
     split_valid,
     with_format_validation,
@@ -39,6 +43,34 @@ def _sequential(rows, max_file, budget):
 
 def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_PROBES = itertools.count()
+
+
+def _jobs_started(spark, fn, *args, **kwargs):
+    """(fn(*args, **kwargs), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"upload-limits-probe-{next(_PROBES)}"  # the tracker keeps old groups
+    sc.setJobGroup(group, "count the jobs of one validation")
+    try:
+        result = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _reasons_by_name(df):
+    return {p.rsplit("/", 1)[-1]: r for p, r in _reasons(df).items()}
+
+
+def _write_docs(directory, sizes):
+    """One file per (name, size) in `directory`; returns its path."""
+    directory.mkdir(exist_ok=True)
+    for name, size in sizes:
+        (directory / name).write_bytes(b"x" * size)
+    return str(directory)
 
 
 def test_oversized_single_file_rejected(spark):
@@ -208,8 +240,6 @@ def test_fits_budget_plan_has_no_window_or_exchange(spark):
 
 
 def test_fits_budget_aggregate_does_not_read_content(spark, tmp_path, monkeypatch):
-    from docling_api_spark.sources.binaryfiles import read_documents
-
     for i in range(4):
         (tmp_path / f"d{i}.md").write_bytes(b"# doc\n" * (i + 1))
     docs = read_documents(spark, str(tmp_path))
@@ -222,12 +252,108 @@ def test_fits_budget_aggregate_does_not_read_content(spark, tmp_path, monkeypatc
         return first(self)
 
     monkeypatch.setattr(type(docs), "first", recording_first)
-    out = with_size_validation(docs)
+    out = with_size_validation(docs)  # listing path: no action at all
+    assert plans == []
+    filtered = with_size_validation(docs.filter("length >= 0"))  # aggregate path
     monkeypatch.undo()
 
     assert len(plans) == 1, plans
     (plan,) = plans
     assert "ReadSchema: struct<length:bigint>" in plan, plan
     assert "content" not in plan, plan
+    for validated in (out, filtered):
+        assert set(_reasons(validated).values()) == {None}
+        assert "Window" not in _executed_plan(validated)
+
+
+def test_listed_bytes_equals_sum_of_length(spark, tmp_path):
+    d = _write_docs(tmp_path / "docs", [("a.md", 10), ("b.md", 300), ("c.pdf", 77)])
+    empty = _write_docs(tmp_path / "empty", [])
+    for docs in (
+        read_documents(spark, d),
+        read_documents(spark, d, glob="*.md"),
+        read_documents(spark, empty),
+    ):
+        total = docs.select(F.sum("length")).first()[0] or 0
+        assert _listed_bytes(docs) == total
+    assert _listed_bytes(read_documents(spark, d, glob="*.md")) == 310
+    assert _listed_bytes(read_documents(spark, d).filter("length > 0")) is None
+
+
+def test_fits_budget_listing_path_starts_no_job(spark, tmp_path):
+    d = _write_docs(tmp_path, [("a.md", 100), ("big.md", 5000), ("c.md", 150)])
+    docs = read_documents(spark, d)
+    out, jobs = _jobs_started(
+        spark, with_size_validation, docs, max_file_bytes=10_000, max_batch_bytes=6_000
+    )
+    assert jobs == 0
     assert set(_reasons(out).values()) == {None}
+    # the plan is the scan plus the file_too_large column, nothing more
+    plan = _executed_plan(out)
+    assert "Window" not in plan and "Exchange" not in plan, plan
+
+
+def test_non_listing_inputs_take_the_aggregate(spark, tmp_path):
+    sizes = [("a.md", 100), ("big.md", 5000), ("c.md", 150)]
+    docs = read_documents(spark, _write_docs(tmp_path, sizes))
+    rows = [(n, size, "b") for n, size in sizes]
+    expected = _sequential(rows, 1000, 250)
+    cases = [
+        (docs.filter("length >= 0"), "length"),  # filtered scan
+        (_df(spark, rows), "length"),  # not a binaryFile scan
+        (docs, "LENGTH"),  # same column, but not named `length`
+    ]
+    for df, size_col in cases:
+        out, jobs = _jobs_started(
+            spark,
+            with_size_validation,
+            df,
+            size_col=size_col,
+            max_file_bytes=1000,
+            max_batch_bytes=250,
+        )
+        assert jobs >= 1, size_col
+        assert _reasons_by_name(out) == expected
+
+
+def test_listed_total_over_budget_falls_back_to_the_aggregate(spark, tmp_path):
+    # listed 5250 > 250, but the oversized file debits 0: the debits fit
+    sizes = [("a.md", 100), ("big.md", 5000), ("c.md", 150)]
+    docs = read_documents(spark, _write_docs(tmp_path, sizes))
+    out = with_size_validation(docs, max_file_bytes=1000, max_batch_bytes=250)
+    assert _reasons_by_name(out) == _sequential([(n, s, "b") for n, s in sizes], 1000, 250)
     assert "Window" not in _executed_plan(out)
+
+
+def test_window_path_broadcasts_no_python_rdd(spark, tmp_path):
+    # the range minima and offsets ride in as a JVM-native literal row, not
+    # a pickled Python RDD that every over-budget call would round-trip
+    sizes = [(f"d{i}.md", 10 * (i + 1)) for i in range(4)]
+    docs = read_documents(spark, _write_docs(tmp_path, sizes))
+    out = with_size_validation(docs, max_file_bytes=1000, max_batch_bytes=30)
+    assert _reasons_by_name(out) == _sequential([(n, s, "b") for n, s in sizes], 1000, 30)
+    plan = _executed_plan(out)
+    assert "Window" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("parts", [2, 4])
+def test_fits_budget_request_starts_at_most_two_jobs(spark, set_shuffle_partitions, tmp_path, parts):
+    # the sync convert request: read -> validate -> split -> convert -> collect
+    from docling_api_spark.pipeline import convert_documents
+    set_shuffle_partitions(parts)
+    for i in range(4):
+        (tmp_path / f"d{i}.md").write_bytes(f"# doc {i}\n\nword{i}\n".encode())
+
+    def request():
+        docs = read_documents(spark, str(tmp_path))
+        accepted, _rejected = split_valid(with_size_validation(docs))
+        return convert_documents(accepted).collect()
+
+    rows, jobs = _jobs_started(spark, request)
+    assert jobs <= 2, jobs
+    got = {r["path"].rsplit("/", 1)[-1]: r for r in rows}
+    assert sorted(got) == [f"d{i}.md" for i in range(4)]
+    for i in range(4):
+        assert got[f"d{i}.md"]["error"] is None
+        assert f"word{i}" in got[f"d{i}.md"]["markdown"]
