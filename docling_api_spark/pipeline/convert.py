@@ -148,7 +148,7 @@ class LightweightConverter:
                             pdf = PdfFile(decrypted)
 
                     # image streams in codecs the stdlib path cannot decode
-                    # (JBIG2/JPX/Crypt/indirect-parms CCITT; the CCITT family decodes since
+                    # (JBIG2/JPX/Crypt/unresolvable-parms CCITT; the CCITT family decodes since
                     # r14 via pipeline/ccittg4.py) are skipped by design —
                     # the user debugging a missing scan gets a breadcrumb
                     # (VERDICT r12 Next #8): appended to the error on the

@@ -33,6 +33,8 @@ import hashlib
 import re
 import struct
 
+from docling_api_spark.pipeline.textextract import PdfFile
+
 # ---------------------------------------------------------------------------
 # RC4 — the original Rivest cipher as published (public since 1994).
 # ---------------------------------------------------------------------------
@@ -394,18 +396,14 @@ def _dict_num(d: bytes, key: bytes) -> int | None:
 
 def _encrypt_dict(content: bytes) -> tuple[bytes, int] | None:
     """(encryption dictionary bytes, object number) from the trailer's
-    /Encrypt reference — classic trailer or XRef-stream dict."""
+    /Encrypt reference — classic trailer or XRef-stream dict — resolved
+    through the file's object table."""
     m = re.search(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R\b", content)
     if m is None:
         return None
-    num, gen = int(m.group(1)), int(m.group(2))
-    om = re.search(
-        rb"(?:^|[^0-9])%d\s+%d\s+obj\b" % (num, gen), content
-    )
-    if om is None:
-        return None
-    end = content.find(b"endobj", om.end())
-    return content[om.end() : end if end >= 0 else len(content)], num
+    num = int(m.group(1))
+    body = PdfFile(content).object_body(num, int(m.group(2)))
+    return None if body is None else (body, num)
 
 
 def _first_file_id(content: bytes) -> bytes:

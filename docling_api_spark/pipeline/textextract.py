@@ -46,7 +46,6 @@ call touches one document's bytes, no Spark plan shape changes.
 
 from __future__ import annotations
 
-import bisect
 import re
 import zipfile
 import zlib
@@ -644,94 +643,30 @@ def _balanced_value(d: bytes, pos: int) -> tuple[bytes, int] | None:
     return None
 
 
-def _resolve_object_body(content: bytes, num: int, gen: int) -> bytes | None:
-    """The body of `num gen obj ... endobj` in the raw file — serves
-    indirect /DecodeParms targets (VERDICT r14 Next #2). xref-free scan,
-    same convention as the stream-object table in pdf_extract_images.
-    Falls back to /Type /ObjStm object streams (r15): PDF 1.5+ writers
-    pack non-stream objects — including parameter dictionaries — into
-    compressed object streams, where a raw-file scan cannot see them."""
-    m = re.search(
-        rb"(?:^|[^0-9])%d\s+%d\s+obj\b" % (num, gen), content
-    )
-    if m is not None:
-        start = m.end()
-        end = content.find(b"endobj", start)
-        return content[start:end] if end >= 0 else None
-    if gen != 0:
-        return None  # compressed objects always have generation 0
-    return _objstm_object(content, num)
-
-
-def _objstm_object(content: bytes, num: int) -> bytes | None:
-    """Scan /Type /ObjStm streams for compressed object `num` (ISO
-    32000-1 §7.5.7): the decoded payload opens with /N pairs of
-    `objnum offset` integers, bodies start at /First + offset."""
-    for m in _STREAM_RE.finditer(content):
-        d = m.group("dict")
-        if re.search(rb"/Type\s*/ObjStm\b", d) is None:
-            continue
-        n_objs = _dict_int(d, b"N")
-        first = _dict_int(d, b"First")
-        if not n_objs or first is None:
-            continue
-        start = m.end()
-        end = content.find(b"endstream", start)
-        if end < 0:
-            continue
-        res = _decode_stream(d, content[start:end], content)
-        if res is None or res[1] != "raw":
-            continue
-        payload = res[0]
-        header = payload[:first].split()
-        if len(header) < 2 * n_objs:
-            continue
-        try:
-            pairs = [
-                (int(header[2 * i]), int(header[2 * i + 1]))
-                for i in range(n_objs)
-            ]
-        except ValueError:
-            continue
-        for i, (onum, off) in enumerate(pairs):
-            if onum != num:
-                continue
-            body_start = first + off
-            body_end = (
-                first + pairs[i + 1][1] if i + 1 < len(pairs)
-                else len(payload)
-            )
-            if 0 <= body_start <= body_end <= len(payload):
-                return payload[body_start:body_end]
-    return None
-
-
 def _decodeparms_text(
-    d: bytes, content: bytes | None, filter_name: str = "CCITTFaxDecode"
+    d: bytes, pdf: PdfFile | None, filter_name: str = "CCITTFaxDecode"
 ) -> bytes | None:
     """The byte-slice `filter_name`'s parameters should be grepped
     from: the /DecodeParms (or /DP) entry POSITION-MATCHED to the
     filter's index in the /Filter array (ADVICE r14 #2: a [/FlateDecode
     /CCITTFaxDecode] chain's first /Columns belongs to the Flate
-    predictor, not the fax geometry), resolved through the raw-file
-    object scan when the entry — or the whole /DecodeParms value — is an
+    predictor, not the fax geometry), resolved through `pdf`'s object
+    table when the entry — or the whole /DecodeParms value — is an
     `N G R` indirect reference (VERDICT r14 Next #2; real fax writers
     emit parms as a separate object). Returns the whole dict when there
     is no /DecodeParms key (some writers inline /K and friends), None
-    when parms exist but cannot be resolved (no `content`, missing
-    object, malformed value) — the don't-guess breadcrumb path. Serves
-    CCITT geometry and (r15) the JBIG2 /JBIG2Globals reference."""
+    when parms exist but cannot be resolved (no `pdf`, missing object,
+    malformed value) — the don't-guess breadcrumb path. Serves CCITT
+    geometry and (r15) the JBIG2 /JBIG2Globals reference."""
     dp = re.search(rb"/D(?:ecodeParms|P)\b", d)
     if dp is None:
         return d
     val_at = dp.end()
 
     def resolve(ref_m: "re.Match[bytes]") -> bytes | None:
-        if content is None:
+        if pdf is None:
             return None
-        body = _resolve_object_body(
-            content, int(ref_m.group(1)), int(ref_m.group(2))
-        )
+        body = pdf.object_body(int(ref_m.group(1)), int(ref_m.group(2)))
         if body is None:
             return None
         inner = _balanced_value(body, 0)
@@ -792,16 +727,16 @@ def _decodeparms_text(
 
 
 def _ccitt_parms(
-    d: bytes, content: bytes | None = None
+    d: bytes, pdf: PdfFile | None = None
 ) -> tuple[int, int, int | None, bool, bool] | None:
     """(k, columns, rows, black_is_1, encoded_byte_align) for a CCITT
     stream: /K < 0 (Group 4), /K 0 / absent (Group 3 1-D, the PDF
     default), /K > 0 (G3 mixed 2-D) — all three decode since r14.
     Parameters come from the /DecodeParms entry matched to the CCITT
     filter's chain position, following an indirect reference through
-    `content` when present (r15). None when parms exist but cannot be
-    resolved — never guess geometry."""
-    parms = _decodeparms_text(d, content, "CCITTFaxDecode")
+    `pdf`'s object table when present (r15). None when parms exist but
+    cannot be resolved — never guess geometry."""
+    parms = _decodeparms_text(d, pdf, "CCITTFaxDecode")
     if parms is None:
         return None
     k_m = re.search(rb"/K\s+(-?\d+)\b", parms)
@@ -824,15 +759,16 @@ def _ccitt_parms(
 _UNRESOLVED = object()
 
 
-def _jbig2_globals(d: bytes, content: bytes | None):
+def _jbig2_globals(d: bytes, pdf: PdfFile | None):
     """The decoded /JBIG2Globals payload for a JBIG2 image stream:
     None when the stream declares no globals, the raw segment bytes
     when the referenced globals STREAM object resolves (its own filter
-    chain is honoured), or the _UNRESOLVED sentinel when globals (or
-    the whole /DecodeParms) exist but cannot be read — callers must
-    then keep the undecodable breadcrumb rather than guess (globals
-    typically carry the symbol dictionaries text regions refer to)."""
-    parms = _decodeparms_text(d, content, "JBIG2Decode")
+    chain is honoured; `pdf` decodes it once for all its referrers), or
+    the _UNRESOLVED sentinel when globals (or the whole /DecodeParms)
+    exist but cannot be read — callers must then keep the undecodable
+    breadcrumb rather than guess (globals typically carry the symbol
+    dictionaries text regions refer to)."""
+    parms = _decodeparms_text(d, pdf, "JBIG2Decode")
     if parms is None:
         # a /DecodeParms we cannot resolve might name globals
         return (
@@ -843,34 +779,17 @@ def _jbig2_globals(d: bytes, content: bytes | None):
     m = re.search(rb"/JBIG2Globals\s+(\d+)\s+(\d+)\s+R\b", parms)
     if m is None:
         return None
-    if content is None:
-        return _UNRESOLVED
-    om = re.search(
-        rb"(?:^|[^0-9])%d\s+%d\s+obj\b"
-        % (int(m.group(1)), int(m.group(2))),
-        content,
-    )
-    if om is None:
-        return _UNRESOLVED
-    end = content.find(b"endobj", om.end())
-    body = content[om.end() : end if end >= 0 else len(content)]
-    sm = _STREAM_RE.search(body)
-    if sm is None:
-        return _UNRESOLVED
-    s_start = sm.end()
-    s_end = body.find(b"endstream", s_start)
-    if s_end < 0:
-        return _UNRESOLVED
-    res = _decode_stream(sm.group("dict"), body[s_start:s_end], content)
-    return res[0] if res is not None and res[1] == "raw" else _UNRESOLVED
+    target = pdf.stream(int(m.group(1)), int(m.group(2))) if pdf else None
+    return _UNRESOLVED if target is None else target[1]
 
 
 def _decode_stream(
-    d: bytes, data: bytes, content: bytes | None = None
+    d: bytes, data: bytes, pdf: PdfFile | None = None
 ) -> tuple[bytes, str] | None:
     """Run a stream's payload through its /Filter chain, in order.
-    `content` (the whole raw file, optional) serves indirect
-    /DecodeParms resolution for CCITT geometry (VERDICT r14 Next #2).
+    `pdf` (the file the stream belongs to, optional) resolves indirect
+    /DecodeParms and /JBIG2Globals references through its object table;
+    without it those streams come back None.
 
     Supported: FlateDecode (zlib), ASCIIHexDecode, ASCII85Decode,
     RunLengthDecode, LZWDecode (all stdlib/pure-Python — chains like
@@ -880,7 +799,7 @@ def _decode_stream(
     CCITTFaxDecode in any of its three codings (Group 4 /K < 0,
     Group 3 1-D /K 0, Group 3 mixed 2-D /K > 0 — pure-python T.6/T.4
     decoders in pipeline/ccittg4.py, r14; indirect /DecodeParms resolve
-    through `content` since r15). Returns (payload, "raw"|"dct"), or
+    through `pdf` since r15). Returns (payload, "raw"|"dct"), or
     None when any filter is unsupported (JBIG2/JPX/Crypt, CCITT whose
     parms cannot be resolved) or its input is corrupt — callers skip
     the stream either way.
@@ -904,13 +823,13 @@ def _decode_stream(
             # The whole CCITT family decodes since r14 (VERDICT r13
             # Next #4): Group 4 (/K < 0), Group 3 1-D (/K 0, the spec
             # default), Group 3 mixed 2-D (/K > 0). Indirect
-            # /DecodeParms resolve through `content` since r15; only
+            # /DecodeParms resolve through `pdf` since r15; only
             # parms that genuinely cannot be resolved stay None — the
             # breadcrumb counter names them. CCITT output is final
             # raster bits, so mid-chain is malformed.
             if i != len(filters) - 1:
                 return None
-            parms = _ccitt_parms(d, content)
+            parms = _ccitt_parms(d, pdf)
             if parms is None:
                 return None
             from docling_api_spark.pipeline.ccittg4 import (
@@ -935,14 +854,14 @@ def _decode_stream(
         if f == "JBIG2Decode":
             # Generic-region JBIG2 decodes since r15 (VERDICT r14 Next
             # #4): MQ-arithmetic templates 0-3 + TPGDON, MMR regions via
-            # the T.6 decoder, /JBIG2Globals resolved through `content`.
+            # the T.6 decoder, /JBIG2Globals resolved through `pdf`.
             # Symbol/text/halftone/refinement segments return None — the
             # breadcrumb counter names those streams (header-level scan,
             # jbig2.jbig2_headers_supported). Like CCITT, the output is
             # final raster bits, so mid-chain is malformed.
             if i != len(filters) - 1:
                 return None
-            g = _jbig2_globals(d, content)
+            g = _jbig2_globals(d, pdf)
             if g is _UNRESOLVED:
                 return None
             from docling_api_spark.pipeline.jbig2 import jbig2_decode
@@ -1048,9 +967,11 @@ _FILTER_CHAIN_RE = re.compile(
 # differencing), and inline BI..ID..EI images all re-wrap as PNG now,
 # a recoverable same-size gray /SMask merges into its parent as a
 # real alpha channel (Gray+Alpha / RGBA PNG), and 8-bit DeviceCMYK
-# converts via the naive no-ICC formula.
-# Everything else (indirect palette streams, JBIG2/JPX/CCITT)
-# is SKIPPED, not mis-rendered: the function is total and
+# converts via the naive no-ICC formula. Indirect palettes and /SMask
+# targets resolve through `PdfFile`'s object table, the CCITT family
+# decodes since r14 and arithmetic-coded JBIG2 since r15.
+# Everything else (JPX, Crypt, the other JBIG2 codings, references that
+# resolve to no object) is SKIPPED, not mis-rendered: the function is total and
 # best-effort by design — a malformed or exotic image object never fails
 # the document, it just isn't extracted (mirrors the corrupt-flate skip in
 # `pdf_to_markdown`; undecodable CODECS additionally leave a breadcrumb
@@ -1107,14 +1028,6 @@ def _dict_int(d: bytes, key: bytes) -> int | None:
     # would otherwise match (\d+)='1' with lookahead seeing '6 0 R')
     m = re.search(rb"/" + key + rb"\s+(\d+)\b(?!\s+\d+\s+R)", d)
     return int(m.group(1)) if m else None
-
-
-def _smask_object_numbers(content: bytes) -> set[int]:
-    """Object numbers referenced as /SMask targets — those streams are
-    alpha channels OF another image, not document pictures."""
-    return {
-        int(g) for g in re.findall(rb"/SMask\s+(\d+)\s+\d+\s+R", content)
-    }
 
 
 # Inline images (PDF 8.9.7): `BI <dict> ID <data> EI` inside a CONTENT
@@ -1320,9 +1233,8 @@ _NON_CONTENT_STREAM_RE = re.compile(
 
 
 # Indexed palette entry: [/Indexed base hival lookup] with an INLINE
-# lookup string — literal ( ... ) or hex < ... >. Indirect lookup streams
-# (`N 0 R`) stay skipped (conservative: resolving them needs an object
-# table this extractor deliberately does not build).
+# lookup string — literal ( ... ) or hex < ... >. The indirect form below
+# is normalized into this one before the raster is read.
 _INDEXED_CS_RE = re.compile(
     # hival capped at 3 digits (spec maximum is 255; see the > 255 guard
     # in _raster_samples_raw — a longer run of digits simply never
@@ -1333,13 +1245,12 @@ _INDEXED_CS_RE = re.compile(
     re.DOTALL,
 )
 # the INDIRECT lookup form (`... 255 7 0 R]`): the palette lives in its
-# own stream object, resolvable through the same object table the
-# /SMask resolver builds (r13 — this was the last structural skip)
+# own stream object, which `PdfFile.stream` resolves and decodes
 _INDIRECT_INDEXED_RE = re.compile(
     # same 3-digit hival cap as _INDEXED_CS_RE (spec max 255)
     rb"/ColorSpace\s*\[\s*(?:/Indexed|/I)\s*"
     rb"/(?P<base>DeviceRGB|DeviceGray)\s+(?P<hival>\d{1,3})(?!\d)\s+"
-    rb"(?P<obj>\d+)\s+\d+\s+R",
+    rb"(?P<obj>\d+)\s+(?P<gen>\d+)\s+R",
     re.DOTALL,
 )
 
@@ -1494,10 +1405,10 @@ def _raster_samples_raw(
     no colorspace, rendered bilevel gray): 8-bit DeviceRGB/DeviceGray
     (raw, PNG predictors, or TIFF predictor 2), 16-bit RGB/Gray (raw,
     high-byte reduction), 8-bit DeviceCMYK (raw, naive no-ICC RGB
-    conversion), and 1/2/4/8-bit Indexed or sub-8-bit Gray with inline
-    palettes
-    (raw only — predictors over packed samples would need bit-level
-    unfiltering). Still skipped, by design: indirect palette streams."""
+    conversion), and 1/2/4/8-bit Indexed or sub-8-bit Gray (raw or PNG
+    predictors, which unfilter byte-wise; TIFF differencing over packed
+    samples is not recovered). Palettes are read inline: `PdfFile._images`
+    inlines an indirect palette stream before it gets here."""
     width, height = _dict_int(d, b"Width"), _dict_int(d, b"Height")
     bpc = _dict_int(d, b"BitsPerComponent")
     if not width or not height or bpc not in (1, 2, 4, 8, 16):
@@ -1679,7 +1590,7 @@ def _raster_samples_raw(
 
 
 # ---------------------------------------------------------------------------
-# pdf entry points: one stream index per document
+# pdf entry points: one stream index and one object table per document
 # ---------------------------------------------------------------------------
 #
 # Every pdf entry point walks the same stream objects. `PdfFile` finds
@@ -1693,13 +1604,30 @@ def _raster_samples_raw(
 # are decoded once, by the image pass alone. The module-level pdf_*
 # functions keep their one-call-per-entry-point contract (tests and the
 # per-step replay call them one at a time); each builds its own index.
+#
+# `PdfFile` is also the only way to reach an object by its number
+# (indirect /DecodeParms, /JBIG2Globals, indirect /Indexed palettes,
+# /SMask targets, and pdfcrypt's /Encrypt dictionary). One pass over the
+# `N G obj` headers builds the table on the first such lookup; a later
+# definition replaces an earlier one, as incremental updates require
+# (ISO 32000-1 §7.5.6). /ObjStm members are unpacked once, on the first
+# lookup the direct bodies cannot answer. A stream reached by number is
+# decoded once and its payload kept for the file's lifetime: the only
+# exception to the rule above, bounded by the streams that something
+# references.
+
+_OBJ_HEADER_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
 
 class PdfFile:
-    """One PDF's raw bytes and its lazily built stream index."""
+    """One PDF's raw bytes, its lazily built stream index and its object
+    table."""
 
     def __init__(self, content: bytes):
         self.content = content
+        # stream index -> raw payload (None: does not decode to raw
+        # bytes) of the streams reached by number and the /ObjStm streams
+        self._kept: dict[int, bytes | None] = {}
 
     @cached_property
     def streams(self) -> list[tuple[int, bytes, int, int, bool]]:
@@ -1717,30 +1645,111 @@ class PdfFile:
         return out
 
     @cached_property
+    def _objects(self) -> dict[tuple[int, int], tuple[int, int, int | None]]:
+        """(num, gen) -> (body start, body end, index of the stream the
+        object holds or None), from one pass over the `N G obj` headers
+        between stream payloads: a header spelled inside a payload is
+        payload, not an object."""
+        content, streams = self.content, self.streams
+        out: dict[tuple[int, int], tuple[int, int, int | None]] = {}
+        pos = 0
+        for k in range(len(streams) + 1):
+            if k < len(streams):
+                dict_at, _, gap_end, payload_end, _ = streams[k]
+            else:
+                dict_at, gap_end, payload_end = -1, len(content), -1
+            for m in _OBJ_HEADER_RE.finditer(content, pos, gap_end):
+                start = m.end()
+                # the object holds stream k when no `endobj` comes between
+                # its header and the stream's dict
+                held = (
+                    k if start <= dict_at
+                    and content.find(b"endobj", start, dict_at) < 0 else None
+                )
+                end = content.find(
+                    b"endobj", start if held is None else max(start, payload_end)
+                )
+                out[int(m.group(1)), int(m.group(2))] = (
+                    start, end if end >= 0 else len(content), held
+                )
+            pos = max(pos, payload_end)
+        return out
+
+    @cached_property
+    def _compressed(self) -> dict[int, tuple[int, int, int]]:
+        """Members of every /Type /ObjStm stream (ISO 32000-1 §7.5.7):
+        num -> (stream index, body start, body end) in the kept payload,
+        which opens with /N `num offset` pairs; bodies start at /First +
+        offset. A later object stream replaces an earlier one's member."""
+        out: dict[int, tuple[int, int, int]] = {}
+        for i, (_, d, _, _, _) in enumerate(self.streams):
+            if re.search(rb"/Type\s*/ObjStm\b", d) is None:
+                continue
+            n_objs = _dict_int(d, b"N")
+            first = _dict_int(d, b"First")
+            payload = self._payload(i) if n_objs and first is not None else None
+            if payload is None:
+                continue
+            header = payload[:first].split()
+            if len(header) < 2 * n_objs:
+                continue
+            try:
+                pairs = [
+                    (int(header[2 * k]), first + int(header[2 * k + 1]))
+                    for k in range(n_objs)
+                ]
+            except ValueError:
+                continue
+            ends = [start for _, start in pairs[1:]] + [len(payload)]
+            for (num, start), end in zip(pairs, ends):
+                if 0 <= start <= end <= len(payload):
+                    out[num] = (i, start, end)
+        return out
+
+    def _decode(self, i: int) -> bytes | None:
+        _, d, start, end, _ = self.streams[i]
+        res = _decode_stream(d, self.content[start:end], self)
+        return res[0] if res is not None and res[1] == "raw" else None
+
+    def _payload(self, i: int) -> bytes | None:
+        """Stream `i`'s raw payload, decoded on first use and kept."""
+        if i not in self._kept:
+            self._kept[i] = None  # a stream that reaches itself gets None
+            if self.streams[i][3] >= 0:
+                self._kept[i] = self._decode(i)
+        return self._kept[i]
+
+    def object_body(self, num: int, gen: int) -> bytes | None:
+        """The bytes of object `num gen`: what lies between `obj` and
+        `endobj`, or a compressed object's bytes in its /ObjStm. None
+        when the file defines no such object."""
+        span = self._objects.get((num, gen))
+        if span is not None:
+            return self.content[span[0] : span[1]]
+        # compressed objects always have generation 0
+        member = self._compressed.get(num) if gen == 0 else None
+        if member is None:
+            return None
+        i, start, end = member
+        return self._kept[i][start:end]
+
+    def stream(self, num: int, gen: int) -> tuple[bytes, bytes] | None:
+        """(dict, raw payload) of stream object `num gen`, decoded once
+        per file; None when there is no such stream or it does not
+        decode to raw bytes."""
+        span = self._objects.get((num, gen))
+        if span is None or span[2] is None:
+            return None
+        payload = self._payload(span[2])
+        return None if payload is None else (self.streams[span[2]][1], payload)
+
+    @cached_property
     def _masked(self) -> set[int]:
-        return _smask_object_numbers(self.content)
-
-    @cached_property
-    def _obj_headers(self) -> list[tuple[int, int]]:
-        return [
-            (m.start(), int(m.group(1)))
-            for m in re.finditer(rb"(\d+)\s+\d+\s+obj\b", self.content)
-        ]
-
-    def _objnum_of(self, pos: int) -> int | None:
-        # the nearest preceding `N 0 obj` header owns this stream
-        idx = bisect.bisect_left(self._obj_headers, (pos, -1)) - 1
-        return self._obj_headers[idx][1] if idx >= 0 else None
-
-    @cached_property
-    def _by_obj(self) -> dict[int | None, tuple[bytes, int, int]]:
-        # stream objects by number: serves /SMask targets and indirect
-        # Indexed palette streams
-        return {
-            self._objnum_of(pos): (d, s, e)
-            for pos, d, s, e, _ in self.streams
-            if e >= 0
-        }
+        """Indices of the streams that are the /SMask target of another
+        image — alpha channels OF pictures, not pictures."""
+        refs = re.findall(rb"/SMask\s+(\d+)\s+(\d+)\s+R", self.content)
+        spans = (self._objects.get((int(n), int(g))) for n, g in refs)
+        return {span[2] for span in spans if span is not None and span[2] is not None}
 
     def is_encrypted(self) -> bool:
         """True iff a TRAILER dictionary carries an /Encrypt key — the
@@ -1791,9 +1800,9 @@ class PdfFile:
 
     def undecodable_image_streams(self) -> dict[str, int]:
         """Image XObject streams whose /Filter chain names a codec the
-        lightweight extractor cannot decode (JBIG2Decode, JPXDecode,
-        Crypt, indirect-DecodeParms CCITTFaxDecode, ...; the whole
-        inline-parms CCITT family decodes since r14), counted by the
+        lightweight extractor cannot decode (JBIG2Decode outside the
+        arithmetic subset, JPXDecode, Crypt, CCITTFaxDecode whose
+        /DecodeParms resolve to no object, ...), counted by the
         first unsupported codec in each chain. These streams are SKIPPED
         by the image and text passes by design (correct-by-omission,
         never mis-scanned); this counter lets the conversion layer say
@@ -1808,10 +1817,10 @@ class PdfFile:
         content = self.content
         out: dict[str, int] = {}
         masked = self._masked
-        for pos, d, start, send, is_image in self.streams:
+        for i, (_, d, start, send, is_image) in enumerate(self.streams):
             if not is_image:
                 continue
-            if masked and self._objnum_of(pos) in masked:
+            if i in masked:
                 continue  # alpha OF another image, not a missing picture
             fm = _FILTER_CHAIN_RE.search(d)
             if fm is None:
@@ -1826,7 +1835,7 @@ class PdfFile:
                 if (
                     name == "CCITTFaxDecode"
                     and f == names[-1]
-                    and _ccitt_parms(d, content) is not None
+                    and _ccitt_parms(d, self) is not None
                 ):
                     # CCITT decodes since r14 (indirect parms resolve
                     # since r15) — but ONLY as the terminal filter
@@ -1840,7 +1849,7 @@ class PdfFile:
                     # from symbol/text-coded streams with a header-only
                     # scan (no arithmetic decoding in the counter)
                     g = (
-                        _jbig2_globals(d, content) if send >= 0
+                        _jbig2_globals(d, self) if send >= 0
                         else _UNRESOLVED
                     )
                     if g is not _UNRESOLVED:
@@ -1866,7 +1875,6 @@ class PdfFile:
         images by stream index). Image XObjects are raster data, never
         text operators or inline images: they are left to `images`,
         which inflates them once."""
-        content = self.content
         texts: list[bytes] = []
         cmaps: list[dict[bytes, str]] = []
         inline_images: dict[int, list[bytes]] = {}
@@ -1888,11 +1896,11 @@ class PdfFile:
             # whenever the compressed bytes themselves ended in 0x0A/0x0D
             # — ~1% of streams, the adler32 tail is uniform), hex/a85
             # ignore whitespace, and the unfiltered branch strips at most
-            # ONE EOL
-            res = _decode_stream(d, content[start:end], content)
-            if res is None or res[1] != "raw":
+            # ONE EOL. A stream already reached by number (an /ObjStm,
+            # a palette, JBIG2 globals) reuses its kept payload.
+            data = self._kept[i] if i in self._kept else self._decode(i)
+            if data is None:
                 continue
-            data = res[0]
             # inline BI..ID..EI images, scanned in document order; the
             # byte-level "BI" pre-check keeps the common no-inline-image
             # case to one cheap scan of the decoded payload
@@ -1968,26 +1976,17 @@ class PdfFile:
         content = self.content
         out: list[bytes] = []
         masked = self._masked
-
-        def resolve_palette(objnum: int) -> bytes | None:
-            target = self._by_obj.get(objnum)
-            if target is None:
-                return None
-            md, ms, me = target
-            res = _decode_stream(md, content[ms:me], content)
-            return res[0] if res is not None and res[1] == "raw" else None
-
-        for i, (pos, d, start, end, is_image) in enumerate(self.streams):
+        for i, (_, d, start, end, is_image) in enumerate(self.streams):
             if end < 0:
                 continue
             if not is_image:
                 out.extend(inline_images.get(i, ()))
                 continue
-            if masked and self._objnum_of(pos) in masked:
+            if i in masked:
                 continue  # soft masks are alpha OF another image, not pictures
             # unsupported encodings (CCITT/JBIG2/JPX/…) and corrupt
             # payloads come back None — skipped, never mis-rendered
-            res = _decode_stream(d, content[start:end], content)
+            res = _decode_stream(d, content[start:end], self)
             if res is None:
                 continue
             data, kind = res
@@ -1997,7 +1996,7 @@ class PdfFile:
                 continue
             im = _INDIRECT_INDEXED_RE.search(d)
             if im is not None:
-                pal = resolve_palette(int(im.group("obj")))
+                pal = self.stream(int(im.group("obj")), int(im.group("gen")))
                 if pal is None:
                     continue  # palette unreachable: skip, never guess colors
                 # normalize to the inline form; the appended entry is the
@@ -2005,27 +2004,23 @@ class PdfFile:
                 d = (
                     d + b" /ColorSpace [/Indexed /" + im.group("base")
                     + b" " + im.group("hival")
-                    + b" <" + pal.hex().encode() + b">]"
+                    + b" <" + pal[1].hex().encode() + b">]"
                 )
             alpha: tuple[int, int, bytes] | None = None
-            sm = re.search(rb"/SMask\s+(\d+)\s+\d+\s+R", d)
-            if sm is not None and masked:
-                target = self._by_obj.get(int(sm.group(1)))
-                if target is not None:
-                    md, ms, me = target
-                    mres = _decode_stream(md, content[ms:me], content)
-                    if mres is not None and mres[1] == "raw":
-                        msamp = _raster_samples(md, mres[0])
-                        # usable mask: single-channel; prefiltered rows
-                        # are unfiltered to plain samples first
-                        if msamp is not None and msamp[2] == 1:
-                            mw, mh, _, mraw, mpref = msamp
-                            if mpref:
-                                plain = _png_unfilter(mraw, mh, mw, 1)
-                                if plain is not None:
-                                    mraw, mpref = plain, False
-                            if not mpref:
-                                alpha = (mw, mh, mraw)
+            sm = re.search(rb"/SMask\s+(\d+)\s+(\d+)\s+R", d)
+            mask = self.stream(int(sm.group(1)), int(sm.group(2))) if sm else None
+            if mask is not None:
+                msamp = _raster_samples(*mask)
+                # usable mask: single-channel; prefiltered rows are
+                # unfiltered to plain samples first
+                if msamp is not None and msamp[2] == 1:
+                    mw, mh, _, mraw, mpref = msamp
+                    if mpref:
+                        plain = _png_unfilter(mraw, mh, mw, 1)
+                        if plain is not None:
+                            mraw, mpref = plain, False
+                    if not mpref:
+                        alpha = (mw, mh, mraw)
             png = _raster_to_png(d, data, alpha=alpha)
             if png is not None:
                 out.append(png)

@@ -5,6 +5,7 @@ insensitive values), but stricter: values are compared exactly."""
 from __future__ import annotations
 
 import datetime
+import itertools
 import math
 import os
 import sys
@@ -40,6 +41,23 @@ def set_shuffle_partitions(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     yield lambda n: spark.conf.set("spark.sql.shuffle.partitions", str(n))
     spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def jobs_started(spark, fn, *args, **kwargs):
+    """(fn(*args, **kwargs), number of Spark jobs it started). Each call
+    takes a fresh job group: the status tracker keeps old groups' jobs."""
+    sc = spark.sparkContext
+    group = f"jobs-started-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        result = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

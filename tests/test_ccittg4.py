@@ -862,6 +862,7 @@ def test_decodeparms_array_matches_ccitt_chain_position():
     the CCITT position — the Flate slot's /Columns (a predictor
     parameter) appearing FIRST in the dict must not win."""
     from docling_api_spark.pipeline.textextract import (
+        PdfFile,
         _ccitt_parms,
         pdf_extract_images,
     )
@@ -876,7 +877,7 @@ def test_decodeparms_array_matches_ccitt_chain_position():
     )
     doc = make_pdf_objs([TEXT_OBJ, img])
     d = img.split(b"\nstream\n")[0]
-    assert _ccitt_parms(d, doc) == (-1, 8, 2, False, False)
+    assert _ccitt_parms(d, PdfFile(doc)) == (-1, 8, 2, False, False)
     (png,) = pdf_extract_images(doc)
     w, h, ch, raw = decode_png(png)
     assert (w, h, ch) == (8, 2, 1)
@@ -886,7 +887,7 @@ def test_decodeparms_array_matches_ccitt_chain_position():
 def test_decodeparms_array_with_null_and_indirect_element():
     """The chain-position match follows the spec's element forms: `null`
     for a parameterless filter and an `N G R` reference in the CCITT
-    slot, resolved through the raw-file object scan."""
+    slot, resolved through `PdfFile`'s object table."""
     from docling_api_spark.pipeline.textextract import (
         pdf_extract_images,
         pdf_undecodable_image_streams,
@@ -1008,3 +1009,27 @@ def test_indirect_decodeparms_inside_objstm_resolves():
     w, h, ch, raw = decode_png(png)
     assert (w, h, ch) == (8, 2, 1)
     assert raw == bytes(0 if p else 255 for row in rows_px for p in row)
+
+
+def test_objstm_that_reaches_itself_resolves_to_nothing():
+    """An /ObjStm whose own CCITT /DecodeParms point into itself cannot be
+    unpacked: the image that needs those parms keeps its breadcrumb, and
+    neither entry point recurses without end."""
+    from docling_api_spark.pipeline.textextract import (
+        pdf_extract_images,
+        pdf_undecodable_image_streams,
+    )
+
+    g4 = g4_encode([[0, 1] * 4] * 2, 8)
+    objstm = (
+        b"8 0 obj <</Type /ObjStm /N 1 /First 4 /Filter /CCITTFaxDecode "
+        b"/DecodeParms 7 0 R /Length %d>>\nstream\n" % len(g4)
+        + g4 + b"\nendstream endobj"
+    )
+    img = make_image_obj(
+        g4, width=8, height=2, colorspace=b"/DeviceGray", bpc=1,
+        filt=b"/CCITTFaxDecode", extra=b" /DecodeParms 7 0 R",
+    )
+    doc = make_pdf_objs([TEXT_OBJ, img, objstm])
+    assert pdf_undecodable_image_streams(doc) == {"CCITTFaxDecode": 1}
+    assert pdf_extract_images(doc) == []

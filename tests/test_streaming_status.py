@@ -15,6 +15,7 @@ from docling_api_spark.streaming.jobs import (
     get_job_status,
     start_conversion_stream,
 )
+from tests.conftest import jobs_started
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,18 +34,6 @@ def _committed_sink(spark, tmp_path) -> str:
     return str(results)
 
 
-def _jobs_started(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = "status-read-probe"
-    sc.setJobGroup(group, "count the jobs of one status read")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_status_reads_use_the_declared_schema(spark, tmp_path):
     results = _committed_sink(spark, tmp_path)
 
@@ -53,7 +42,7 @@ def test_status_reads_use_the_declared_schema(spark, tmp_path):
         (f.name, f.dataType, f.nullable) for f in inferred.fields
     ]
 
-    jobs = _jobs_started(spark, lambda: get_job_status(spark, results, "batch-1_a.md"))
+    _, jobs = jobs_started(spark, get_job_status, spark, results, "batch-1_a.md")
     assert jobs == 1
     assert get_job_status(spark, results, "batch-1_a.md")["status"] == "SUCCESS"
     assert get_job_status(spark, results, "b.xyz")["status"] == "FAILURE"

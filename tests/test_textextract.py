@@ -2559,11 +2559,79 @@ def test_pdf_inline_image_spliced_through_converter():
     assert decode_png(res["images"][0]["image"]) == (2, 2, 1, pixels)
 
 
+def _shared_stream_docs(k: int) -> dict[str, tuple[bytes, bytes, int]]:
+    """Per case, (PDF with `k` images that all reach one stream by number,
+    that stream's dict, number of images that must come back)."""
+    from tests.test_ccittg4 import g4_encode
+    from tests.test_jbig2 import (
+        GLYPH,
+        generic_encode,
+        generic_region_seg,
+        page_info_seg,
+    )
+
+    def numbered(img: bytes, i: int) -> bytes:
+        return img.replace(b"5 0 obj", b"%d 0 obj" % (20 + i), 1)
+
+    def stream_obj(head: bytes, d: bytes, payload: bytes) -> tuple[bytes, bytes]:
+        # (object, the dict the stream index sees)
+        d += b" /Length %d" % len(payload)
+        return head + b" <<" + d + b">>\nstream\n" + payload + b"\nendstream endobj", d
+
+    docs = {}
+    # CCITT parms packed in an /ObjStm next to a decoy object
+    body6, body7 = b"<</Decoy true>>", b"<</K -1 /Columns 8 /Rows 2>>"
+    header = b"6 0 7 %d" % len(body6)
+    objstm, d = stream_obj(
+        b"8 0 obj",
+        b"/Type /ObjStm /N 2 /First %d /Filter /FlateDecode" % (len(header) + 1),
+        zlib.compress(header + b" " + body6 + body7),
+    )
+    g4 = g4_encode([[0, 1, 1, 0, 0, 1, 0, 1], [1, 0, 0, 1, 1, 0, 1, 0]], 8)
+    imgs = [
+        numbered(make_image_obj(
+            g4, width=8, height=2, colorspace=b"/DeviceGray", bpc=1,
+            filt=b"/CCITTFaxDecode", extra=b" /DecodeParms 7 0 R",
+        ), i)
+        for i in range(k)
+    ]
+    docs["objstm"] = (make_pdf_objs([TEXT_OBJ, objstm, *imgs]), d, k)
+    # JBIG2 images sharing one /JBIG2Globals stream
+    globs, d = stream_obj(
+        b"7 0 obj", b"/Filter /FlateDecode", zlib.compress(page_info_seg(1, 8, 6))
+    )
+    region = generic_region_seg(2, 8, 6, 0, 0, generic_encode(GLYPH))
+    imgs = [
+        numbered(make_image_obj(
+            region, width=8, height=6, colorspace=b"/DeviceGray", bpc=1,
+            filt=b"/JBIG2Decode", extra=b" /DecodeParms <</JBIG2Globals 7 0 R>>",
+        ), i)
+        for i in range(k)
+    ]
+    docs["jbig2-globals"] = (make_pdf_objs([TEXT_OBJ, globs, *imgs]), d, k)
+    # images sharing one indirect /Indexed palette
+    palette, d = stream_obj(
+        b"7 0 obj", b"/Filter /FlateDecode", zlib.compress(bytes([255, 0, 0, 0, 0, 255]))
+    )
+    imgs = [
+        numbered(make_image_obj(
+            zlib.compress(bytes([0, 1, 1, 0])), width=2, height=2,
+            colorspace=b"[/Indexed /DeviceRGB 1 7 0 R]",
+        ), i)
+        for i in range(k)
+    ]
+    docs["palette"] = (make_pdf_objs([TEXT_OBJ, *imgs, palette]), d, k)
+    return docs
+
+
 def test_converter_decodes_each_stream_once(monkeypatch):
     """One conversion decodes each stream at most once: the text layer
     and the inline-image scan share the decoded content streams, which
     used to be inflated twice. A Flate stream that holds only an inline
-    image (no BT block) must still give its picture back."""
+    image (no BT block) must still give its picture back. A stream that
+    images reach by number (an /ObjStm holding their parms, shared JBIG2
+    globals, a shared palette) is decoded as often for 8 referrers as
+    for 1."""
     from docling_api_spark.pipeline import textextract
     from docling_api_spark.pipeline.convert import LightweightConverter
 
@@ -2584,9 +2652,9 @@ def test_converter_decodes_each_stream_once(monkeypatch):
     calls: dict[tuple[bytes, bytes], int] = {}
     real = textextract._decode_stream
 
-    def counting(d, data, content=None):
+    def counting(d, data, pdf=None):
         calls[(d, data)] = calls.get((d, data), 0) + 1
-        return real(d, data, content)
+        return real(d, data, pdf)
 
     monkeypatch.setattr(textextract, "_decode_stream", counting)
     res = LightweightConverter().convert("doc.pdf", make_pdf_objs(objs))
@@ -2598,6 +2666,18 @@ def test_converter_decodes_each_stream_once(monkeypatch):
         (2, 2, 1, gray),  # the BI-only stream's inline image
         (2, 2, 3, rgb),  # the image XObject
     ]
+
+    decodes: dict[str, list[int]] = {}
+    for k in (1, 8):
+        for case, (doc, shared, n_images) in _shared_stream_docs(k).items():
+            calls.clear()
+            res = LightweightConverter().convert("doc.pdf", doc)
+            assert res["error"] is None, case
+            assert len(res["images"]) == n_images, case
+            (count,) = [n for (d, _), n in calls.items() if d == shared]
+            decodes.setdefault(case, []).append(count)
+    for case, (at_1, at_8) in decodes.items():
+        assert at_1 == at_8, (case, at_1, at_8)
 
 
 def test_encrypted_pdf_gets_the_honest_error():
@@ -3185,6 +3265,81 @@ def test_pdf_indirect_indexed_palette_resolved_through_object_table():
     (png,) = pdf_extract_images(make_pdf_objs([img, pal_obj]))
     expect = palette[0:3] + palette[3:6] + palette[3:6] + palette[0:3]
     assert decode_png(png) == (2, 2, 3, expect)
+
+
+def test_later_object_definition_wins():
+    """An appended update that redefines an object replaces it (ISO
+    32000-1 §7.5.6), for every lookup by number: a CCITT image's indirect
+    /DecodeParms and an indirect palette both resolve to the last copy."""
+    from docling_api_spark.pipeline.textextract import (
+        pdf_extract_images,
+        pdf_undecodable_image_streams,
+    )
+    from tests.test_ccittg4 import g4_encode
+
+    rows_px = [[0, 1, 1, 0, 0, 1, 0, 1], [1, 0, 0, 1, 1, 0, 1, 0]]
+    img = make_image_obj(
+        g4_encode(rows_px, 8), width=8, height=2,
+        colorspace=b"/DeviceGray", bpc=1,
+        filt=b"/CCITTFaxDecode", extra=b" /DecodeParms 9 0 R",
+    )
+    good, bad = (
+        b"9 0 obj <</K -1 /Columns %d /Rows 2>> endobj" % n for n in (8, 999)
+    )
+    # a header spelled out inside a later stream's payload is payload,
+    # not a new definition
+    quoted = _content_obj(b"BT (" + bad + b") Tj ET", num=6)
+    for objs in ([bad, good], [good, quoted]):
+        doc = make_pdf_objs([TEXT_OBJ, img, *objs])
+        assert pdf_undecodable_image_streams(doc) == {}
+        (png,) = pdf_extract_images(doc)
+        assert decode_png(png) == (
+            8, 2, 1, bytes(0 if p else 255 for row in rows_px for p in row)
+        )
+
+    def palette_obj(palette: bytes) -> bytes:
+        return (
+            b"7 0 obj <</Length %d /Filter /FlateDecode>>\nstream\n"
+            % len(zlib.compress(palette))
+            + zlib.compress(palette) + b"\nendstream endobj"
+        )
+
+    img = make_image_obj(
+        zlib.compress(bytes([0, 1, 1, 0])), width=2, height=2,
+        colorspace=b"[/Indexed /DeviceRGB 1 7 0 R]",
+    )
+    stale, palette = bytes(6), bytes([255, 0, 0, 0, 0, 255])
+    (png,) = pdf_extract_images(
+        make_pdf_objs([img, palette_obj(stale), palette_obj(palette)])
+    )
+    expect = palette[0:3] + palette[3:6] + palette[3:6] + palette[0:3]
+    assert decode_png(png) == (2, 2, 3, expect)
+
+
+def test_objects_are_looked_up_only_through_pdffile():
+    """`PdfFile` holds the one object table: no other code under
+    pipeline/ builds a search for `N G obj` from an object number."""
+    import ast
+    import glob
+    import os
+    import re
+
+    from docling_api_spark.pipeline import textextract
+
+    pipeline = os.path.dirname(textextract.__file__)
+    by_number = re.compile(r"(?:%d|\{[^{}]*\})\\s[+*](?:%d|\{[^{}]*\})\\s[+*]obj")
+    found = []
+    for path in sorted(glob.glob(os.path.join(pipeline, "*.py"))):
+        with open(path, encoding="utf-8") as f:
+            source = f.read()
+        inside = set()
+        for node in ast.walk(ast.parse(source)):
+            if isinstance(node, ast.ClassDef) and node.name == "PdfFile":
+                inside.update(range(node.lineno, node.end_lineno + 1))
+        for n, line in enumerate(source.splitlines(), 1):
+            if n not in inside and by_number.search(line):
+                found.append(f"{os.path.basename(path)}:{n}")
+    assert found == []
 
 
 # -- r14 hardening: advisor DoS/wrong-note fixes + trailer-confined /Encrypt -

@@ -3,8 +3,6 @@ tests/test_upload_limits.py onto the dataflow validators)."""
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +17,7 @@ from docling_api_spark.sources.validation import (
     with_format_validation,
     with_size_validation,
 )
+from tests.conftest import jobs_started
 
 
 def _df(spark, rows):
@@ -43,22 +42,6 @@ def _sequential(rows, max_file, budget):
 
 def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-_PROBES = itertools.count()
-
-
-def _jobs_started(spark, fn, *args, **kwargs):
-    """(fn(*args, **kwargs), number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    group = f"upload-limits-probe-{next(_PROBES)}"  # the tracker keeps old groups
-    sc.setJobGroup(group, "count the jobs of one validation")
-    try:
-        result = fn(*args, **kwargs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _reasons_by_name(df):
@@ -283,7 +266,7 @@ def test_listed_bytes_equals_sum_of_length(spark, tmp_path):
 def test_fits_budget_listing_path_starts_no_job(spark, tmp_path):
     d = _write_docs(tmp_path, [("a.md", 100), ("big.md", 5000), ("c.md", 150)])
     docs = read_documents(spark, d)
-    out, jobs = _jobs_started(
+    out, jobs = jobs_started(
         spark, with_size_validation, docs, max_file_bytes=10_000, max_batch_bytes=6_000
     )
     assert jobs == 0
@@ -304,7 +287,7 @@ def test_non_listing_inputs_take_the_aggregate(spark, tmp_path):
         (docs, "LENGTH"),  # same column, but not named `length`
     ]
     for df, size_col in cases:
-        out, jobs = _jobs_started(
+        out, jobs = jobs_started(
             spark,
             with_size_validation,
             df,
@@ -350,7 +333,7 @@ def test_fits_budget_request_starts_at_most_two_jobs(spark, set_shuffle_partitio
         accepted, _rejected = split_valid(with_size_validation(docs))
         return convert_documents(accepted).collect()
 
-    rows, jobs = _jobs_started(spark, request)
+    rows, jobs = jobs_started(spark, request)
     assert jobs <= 2, jobs
     got = {r["path"].rsplit("/", 1)[-1]: r for r in rows}
     assert sorted(got) == [f"d{i}.md" for i in range(4)]
