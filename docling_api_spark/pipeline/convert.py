@@ -140,10 +140,10 @@ class LightweightConverter:
                     # encrypted-PDF error path below names the cause.
                     if pdf.is_encrypted():
                         from docling_api_spark.pipeline.pdfcrypt import (
-                            pdf_decrypt,
+                            pdf_file_decrypt,
                         )
 
-                        decrypted = pdf_decrypt(content)
+                        decrypted = pdf_file_decrypt(pdf)
                         if decrypted is not None:
                             pdf = PdfFile(decrypted)
 

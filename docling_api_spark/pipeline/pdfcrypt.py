@@ -394,15 +394,15 @@ def _dict_num(d: bytes, key: bytes) -> int | None:
     return int(m.group(1)) if m else None
 
 
-def _encrypt_dict(content: bytes) -> tuple[bytes, int] | None:
+def _encrypt_dict(pdf: PdfFile) -> tuple[bytes, int] | None:
     """(encryption dictionary bytes, object number) from the trailer's
     /Encrypt reference — classic trailer or XRef-stream dict — resolved
     through the file's object table."""
-    m = re.search(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R\b", content)
+    m = re.search(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R\b", pdf.content)
     if m is None:
         return None
     num = int(m.group(1))
-    body = PdfFile(content).object_body(num, int(m.group(2)))
+    body = pdf.object_body(num, int(m.group(2)))
     return None if body is None else (body, num)
 
 
@@ -415,15 +415,23 @@ def _first_file_id(content: bytes) -> bytes:
 
 
 def pdf_decrypt(content: bytes) -> bytes | None:
+    """`pdf_file_decrypt` over raw bytes."""
+    return pdf_file_decrypt(PdfFile(content))
+
+
+def pdf_file_decrypt(pdf: PdfFile) -> bytes | None:
     """Decrypted copy of an empty-user-password standard-security PDF:
     every encrypted stream payload replaced by plaintext and the
     trailer's /Encrypt reference blanked (so downstream treats the
     result as a normal PDF). None when the file is not encrypted, uses
     an unsupported handler/filter, fails empty-password validation
-    (i.e. actually needs a password), or is malformed."""
+    (i.e. actually needs a password), or is malformed. The /Encrypt
+    lookup goes through `pdf`'s object table, so a caller that already
+    holds the file's `PdfFile` pays for no second one."""
+    content = pdf.content
     if len(content) > _MAX_DECRYPT:
         return None
-    enc = _encrypt_dict(content)
+    enc = _encrypt_dict(pdf)
     if enc is None:
         return None
     ed, enc_num = enc

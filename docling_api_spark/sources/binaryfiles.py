@@ -25,10 +25,19 @@ def read_documents(
 
 
 def read_documents_stream(
-    spark: SparkSession, path: str, glob: str | None = None
+    spark: SparkSession, path: str, archive_dir: str, glob: str | None = None
 ) -> DataFrame:
     """Streaming variant: watches `path` for new files (the async job intake,
-    reference route.py:104-110 — the landing directory replaces the broker)."""
+    reference route.py:104-110 — the landing directory replaces the broker).
+
+    Like a broker that drops a consumed message, the landing directory
+    empties as batches commit: Spark moves each committed batch's files
+    under `archive_dir` (keeping their full source path below it), so a
+    trigger lists the files in flight rather than every file ever landed.
+    Spark refuses (the query fails as it starts) an `archive_dir` that
+    could match `path`'s pattern at the depth the two paths share: one
+    inside the landing directory or one of its ancestors. `<run>/landing`
+    with `<run>/ckpt/landed` is fine."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -39,7 +48,12 @@ def read_documents_stream(
             T.StructField("content", T.BinaryType()),
         ]
     )
-    reader = spark.readStream.format("binaryFile").schema(schema)
+    reader = (
+        spark.readStream.format("binaryFile")
+        .schema(schema)
+        .option("cleanSource", "archive")
+        .option("sourceArchiveDir", archive_dir)
+    )
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)

@@ -6,7 +6,9 @@ worker converts → result backend → client polls a status endpoint
 Spark restatement:
 
 - submit      = drop a file into the landing directory (`job_id` = filename)
-- broker      = the landing dir + checkpointed file-source offsets
+- broker      = the landing dir + checkpointed file-source offsets; like a
+                consumed broker message, a job's file leaves the landing dir
+                (moved under the checkpoint) once its micro-batch commits
 - worker pool = executors running the conversion stage
 - result backend = a parquet results table keyed by job_id
 - poll        = `get_job_status` over the results table; a job with no
@@ -149,8 +151,23 @@ def start_conversion_stream(
     Checkpointing gives at-least-once processing; conversion is pure per
     file, so replays are idempotent at the results-table level (reads
     dedupe on job_id via max(mtime) if ever needed).
+
+    A 100 ms processing-time trigger starts a job in the micro-batch after
+    the running one, not on the next whole second. What keeps the short
+    trigger cheap while idle is that the landing directory empties: once a
+    micro-batch has committed, Spark moves its input files to
+    `<checkpoint_dir>/landed` (it runs one batch behind, so the files of
+    the last batch stay until the next one starts), and each trigger lists
+    only the jobs in flight. Only committed inputs move, so replay after a
+    restart still finds every uncommitted job. The move is best effort: a
+    file Spark fails to move stays in the landing directory, where the
+    checkpointed offsets keep it from being converted again. No second
+    query may read the same landing directory: this one moves files out
+    from under it.
     """
-    docs = read_documents_stream(spark, landing_dir)
+    docs = read_documents_stream(
+        spark, landing_dir, os.path.join(checkpoint_dir, "landed")
+    )
     converted = convert_documents(docs, converter=converter)
     results = converted.select(
         job_id_col().alias("job_id"),
@@ -162,7 +179,7 @@ def start_conversion_stream(
         .option("path", results_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(processingTime="1 second")
+        .trigger(processingTime="100 milliseconds")
         .start()
     )
 

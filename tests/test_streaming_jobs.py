@@ -5,13 +5,35 @@ custom stateful sessionizer."""
 
 from __future__ import annotations
 
+import os
 import time
 
+import pytest
+
+from docling_api_spark.sources.binaryfiles import read_documents_stream
 from docling_api_spark.streaming.jobs import (
     get_batch_status,
     get_job_status,
     start_conversion_stream,
 )
+
+
+def _wait_until(cond, timeout_s: float = 30.0) -> None:
+    """Poll `cond` for up to `timeout_s` (the caller asserts it after):
+    Spark moves committed inputs on its own cleaner thread."""
+    deadline = time.monotonic() + timeout_s
+    while not cond() and time.monotonic() < deadline:
+        time.sleep(0.05)
+
+
+def _archived(ckpt) -> set[str]:
+    """Names of the files the stream moved under `<ckpt>/landed` (each keeps
+    its full source path below that directory)."""
+    return {
+        name
+        for _, _, files in os.walk(ckpt / "landed")
+        for name in files
+    }
 
 
 def test_streaming_jobs_lifecycle(spark, tmp_path):
@@ -103,9 +125,14 @@ def test_conversion_stream_checkpoint_recovery(spark, tmp_path):
     q2 = start_conversion_stream(spark, str(landing), str(results), str(ckpt))
     try:
         q2.processAllAvailable()
+        _wait_until(lambda: not (landing / "before.md").exists())
     finally:
         q2.stop()
 
+    # q2's batch over after.md committed before.md's batch, whose input
+    # then left the landing directory
+    assert not (landing / "before.md").exists()
+    assert "before.md" in _archived(ckpt)
     assert get_job_status(spark, str(results), "before.md")["status"] == "SUCCESS"
     after = get_job_status(spark, str(results), "after.md")
     assert after["status"] == "SUCCESS"
@@ -113,6 +140,57 @@ def test_conversion_stream_checkpoint_recovery(spark, tmp_path):
     # no duplicate result rows for the pre-kill job
     rows = spark.read.parquet(str(results)).filter("job_id = 'before.md'").count()
     assert rows == 1
+
+
+def test_committed_inputs_leave_the_landing_directory(spark, tmp_path):
+    """The landing directory empties as batches commit, so a trigger lists
+    the jobs in flight, not every job ever submitted: after 200 jobs and
+    then one more have committed, landing holds at most the last batch's
+    file and the 200 sit under `<ckpt>/landed`."""
+    landing = tmp_path / "landing"
+    results = tmp_path / "results"
+    ckpt = tmp_path / "ckpt"
+    landing.mkdir()
+    first = {f"job{i:03d}.md" for i in range(200)}
+    for name in first:
+        (landing / name).write_bytes(b"# landed")
+
+    q = start_conversion_stream(spark, str(landing), str(results), str(ckpt))
+    try:
+        q.processAllAvailable()
+        (landing / "last.md").write_bytes(b"# last")
+        q.processAllAvailable()
+        _wait_until(lambda: first <= _archived(ckpt))
+    finally:
+        q.stop()
+
+    assert set(os.listdir(landing)) <= {"last.md"}
+    assert first <= _archived(ckpt)
+    # every job still has exactly one result
+    jobs = spark.read.parquet(str(results)).groupBy("job_id").count().collect()
+    assert {r["job_id"] for r in jobs} == first | {"last.md"}
+    assert {r["count"] for r in jobs} == {1}
+
+
+def test_archive_dir_inside_landing_is_refused(spark, tmp_path):
+    """Spark's rule for the archive directory: it must not match the
+    landing path's pattern, so one inside the landing directory fails the
+    query as it starts."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.md").write_bytes(b"a")
+    docs = read_documents_stream(spark, str(landing), str(landing / "landed"))
+    q = (
+        docs.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(Exception, match="archive path"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert (landing / "a.md").exists()
 
 
 def test_stateful_sessionize_checkpoint_recovery(spark, tmp_path):

@@ -3342,6 +3342,44 @@ def test_objects_are_looked_up_only_through_pdffile():
     assert found == []
 
 
+def test_encrypted_pdf_is_indexed_once(monkeypatch):
+    """The converter hands the `PdfFile` it sniffed /Encrypt with to the
+    decryptor: one `PdfFile`, one stream index and one object table per
+    encrypted PDF (the decrypted copy gets its own)."""
+    from functools import cached_property
+
+    from docling_api_spark.pipeline import textextract
+    from docling_api_spark.pipeline.convert import LightweightConverter
+    from tests.test_pdfcrypt import TEXT, _aesv2_pdf, _r6_pdf, _rc4_pdf
+
+    opened, built = [], []
+    init = textextract.PdfFile.__init__
+
+    def counting_init(self, content):
+        opened.append(content)
+        init(self, content)
+
+    monkeypatch.setattr(textextract.PdfFile, "__init__", counting_init)
+    for name in ("streams", "_objects"):
+        func = getattr(textextract.PdfFile, name).func
+
+        def counting(self, func=func, name=name):
+            built.append((name, self.content))
+            return func(self)
+
+        prop = cached_property(counting)
+        prop.__set_name__(textextract.PdfFile, name)
+        monkeypatch.setattr(textextract.PdfFile, name, prop)
+
+    conv = LightweightConverter()
+    for doc in (_rc4_pdf(r=3, v=2, length_bits=128), _aesv2_pdf(), _r6_pdf()):
+        out = conv.convert("locked.pdf", doc)
+        assert out["markdown"].strip() == TEXT
+        assert opened.count(doc) == 1
+        assert built.count(("streams", doc)) == 1
+        assert built.count(("_objects", doc)) == 1
+
+
 # -- r14 hardening: advisor DoS/wrong-note fixes + trailer-confined /Encrypt -
 def test_pdf_forged_hival_is_skipped_not_allocated():
     """ADVICE r13 (high): `/ColorSpace [/Indexed /DeviceRGB 999999999
